@@ -66,15 +66,22 @@ object Bench {
     * (throws in ~10 ms of planning) cannot deflate the comparable
     * total. Fatal errors (OOM) propagate and kill the run: a sweep
     * that kept going after an OOM would report times from a poisoned
-    * JVM. Tested in BenchClassifySpec. */
+    * JVM. Also returns each query's Janino compile count (the
+    * CodegenMetrics counter read before and after it; outside the
+    * timed interval): a warm pass that recompiles shows a generated
+    * class that missed the codegen cache. Tested in BenchClassifySpec. */
   private[graft] def sweep(
       spark: SparkSession, sfDir: String,
       queries: Seq[(String, (SparkSession, String) =>
         org.apache.spark.sql.DataFrame)],
       prepared: Map[String, org.apache.spark.sql.graftbridge.PreparedCount])
-      : (Map[String, Double], Set[String]) = {
+      : (Map[String, Double], Set[String], Map[String, Long]) = {
+    val compiled = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME
     val errs = scala.collection.mutable.Set[String]()
+    val compiles = scala.collection.mutable.Map[String, Long]()
     val times = queries.map { case (name, fn) =>
+      val c0 = compiled.getCount
       val t0 = System.nanoTime()
       try {
         prepared.get(name) match {
@@ -82,9 +89,11 @@ object Bench {
           case None    => fn(spark, sfDir).count()
         }
       } catch { case scala.util.control.NonFatal(_) => errs += name }
-      name -> (System.nanoTime() - t0) / 1e9
+      val dt = (System.nanoTime() - t0) / 1e9
+      compiles(name) = compiled.getCount - c0
+      name -> dt
     }.toMap
-    (times, errs.toSet)
+    (times, errs.toSet, compiles.toMap)
   }
 
 
@@ -102,6 +111,7 @@ object Bench {
       .config("spark.graft.preparedNoAqe",
         sys.env.getOrElse("SPARK_GRAFT_PREPARED_MODE", "auto"))
       .getOrCreate()
+    Tables.configure(spark)
     spark.sparkContext.setLogLevel("WARN")
     // The bounded global windows (PlanSpec asserts their input
     // cardinality) each emit a "No Partition Defined for Window
@@ -234,8 +244,10 @@ object Bench {
     // re-plans physically and re-runs every shuffle and job per pass
     // (PreparedCount's honesty boundary), so nothing is served from a
     // prior pass's shuffle files.
-    val (pass1, errs1) = sweep(spark, sfDir, sortedQueries, prepared)
-    val (pass2, errs2) = sweep(spark, sfDir, sortedQueries, prepared)
+    val warmCompiles = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME.getCount
+    val (pass1, errs1, cg1) = sweep(spark, sfDir, sortedQueries, prepared)
+    val (pass2, errs2, cg2) = sweep(spark, sfDir, sortedQueries, prepared)
     val errorIds = (errs1 ++ errs2).toSeq.sorted
     val results = pass1.map { case (name, t1) =>
       name -> math.min(t1, pass2.getOrElse(name, t1))
@@ -245,6 +257,16 @@ object Bench {
     def jsonMap(m: Seq[(String, Double)]): String =
       m.map { case (k, v) => "\"" + k + "\":" + f3(v) }
         .mkString("{", ",", "}")
+    def jsonCounts(m: Map[String, Long]): String =
+      m.toSeq.sortBy(_._1).map { case (k, v) => "\"" + k + "\":" + v }
+        .mkString("{", ",", "}")
+    // Janino compiles before the sweeps (JVM warm-up, fixpoint builds)
+    // and per pass: with the codegen cache sized for the registry
+    // (Tables.configure) pass 2 recompiles only classes whose generated
+    // source changes per run (mostly the streaming drains)
+    val compilesJson =
+      s""""codegen_compiles":{"warm":$warmCompiles,""" +
+        s""""pass1":${cg1.values.sum},"pass2":${cg2.values.sum}}"""
     val total = if (results.nonEmpty) results.values.sum else 0.0
     // total over CLEAN ids only: an errored id keeps its charged wall
     // time in `value` (round-to-round comparability) but a fast
@@ -265,6 +287,9 @@ object Bench {
         s""""queries":${jsonMap(results.toSeq.sortBy(_._1))},""" +
         s""""pass1":${jsonMap(pass1.toSeq.sortBy(_._1))},""" +
         s""""pass2":${jsonMap(pass2.toSeq.sortBy(_._1))},""" +
+        s"""$compilesJson,""" +
+        s""""codegen_compiles_pass1":${jsonCounts(cg1)},""" +
+        s""""codegen_compiles_pass2":${jsonCounts(cg2)},""" +
         s""""sf":"$sfDir"}"""
     // anchor explicitly (env override > CWD) and say where it went —
     // with only the headline subset on stdout, this file is the sole
@@ -309,7 +334,7 @@ object Bench {
     println(
       s"""{"metric":"total","value":${f3(total)},"n":${results.size},""" +
         s""""unit":"sec","valueOk":${f3(totalOk)},""" +
-        s""""passes":2,"prepared":${prepared.size},""" +
+        s""""passes":2,"prepared":${prepared.size},$compilesJson,""" +
         s""""errors":${errorIds.size},"errorIds":$errJson,""" +
         s""""queries":${jsonMap(head)},""" +
         s""""slowest":${jsonMap(slowest)},"sf":"$sfDir"}""")

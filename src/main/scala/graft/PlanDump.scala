@@ -339,6 +339,7 @@ survivors, examined and deliberately kept:
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+    Tables.configure(spark)
     spark.sparkContext.setLogLevel("ERROR")
     // Warm the shared fixpoint stores first (same list as Bench and
     // PlanGuardSpec): a store consumer's plan is an InMemoryTableScan

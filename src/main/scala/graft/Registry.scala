@@ -99,11 +99,59 @@ object Tables {
     * compute-heavy consumers (q_sim_hardneg 2.1→3.1 s, q_ml_kfold
     * 2.1→2.5 s warm) even as it fixed the iterative tier. The
     * right-sizing that survived the A/B is row-measured and local to
-    * the shared-fixpoint memo: see Insights.cacheOnce. */
+    * the shared-fixpoint memo: see Insights.cacheOnce.
+    *
+    * Codegen cache cap. Spark keeps every Janino-compiled class in one
+    * JVM-wide LRU of `spark.sql.codegen.cache.maxEntries` entries
+    * (default 100). A session that repeats queries needs far more: one
+    * round of the DAQ / relational / TPC-H / drain mix generates ~147
+    * classes, so at 100 the LRU evicted each class before its next use
+    * and every warm round recompiled all of them (141 compiles, ~1.3 s
+    * of a 6.4 s round). The cap is sized for the whole registry:
+    * `graft.Bench` at sf0.1 / local[32] in a fresh JVM with the cache
+    * out of the way compiles 4967 distinct classes up to the end of
+    * its first full sweep (1199 in the warm-up and fixpoint builds,
+    * 3768 in the sweep; CodegenMetrics counts), and its second sweep
+    * adds 736 one-off classes, 660 of them from the streaming drains,
+    * whose generated source differs run to run. 8192 holds that
+    * working set plus a round of one-off classes, with headroom for
+    * a second shuffle width or scale in the same JVM. A value the
+    * user set explicitly is left alone.
+    *
+    * Ordering rule: the conf is STATIC and CodeGenerator reads it
+    * exactly once per JVM, when its object initializes (in practice
+    * the first compile). `spark.conf.set` refuses static confs, so
+    * the value goes on the session's SQLConf, and the object is
+    * initialized right here under that conf, so the cap no longer
+    * depends on which thread or session compiles first. Every
+    * program-owned session therefore calls configure right after
+    * getOrCreate(), before its first query; if this JVM has already
+    * compiled code the cap is frozen at whatever was read then, and
+    * configure warns once. CodegenReuseSpec pins the ordering. */
   def configure(spark: SparkSession): Unit = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    val conf = spark.sessionState.conf
+    if (!conf.contains(CodegenCacheKey))
+      conf.setConfString(CodegenCacheKey, CodegenCacheEntries.toString)
+    if (codegenCapPinned.compareAndSet(false, true)) {
+      if (org.apache.spark.metrics.source.CodegenMetrics
+          .METRIC_COMPILATION_TIME.getCount > 0)
+        System.err.println(
+          "[graft] Tables.configure ran after this JVM's first codegen " +
+            s"compile: $CodegenCacheKey stays at the value read then")
+      else org.apache.spark.sql.internal.SQLConf.withExistingConf(conf) {
+        Class.forName(
+          "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator$",
+          true, classOf[org.apache.spark.sql.internal.SQLConf].getClassLoader)
+      }
+    }
   }
+
+  private val CodegenCacheKey = "spark.sql.codegen.cache.maxEntries"
+  private val CodegenCacheEntries = 8192
+  private val codegenCapPinned =
+    new java.util.concurrent.atomic.AtomicBoolean(false)
 
   /** Restore compute parallelism after a NARROW scan (optimization
     * guide §2.5, "input skew": an unsplittable file → repartition

@@ -23,6 +23,7 @@ object RunQueries {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+    Tables.configure(spark)
     spark.sparkContext.setLogLevel("WARN")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
     if (countOnly)

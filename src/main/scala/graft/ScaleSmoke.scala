@@ -391,6 +391,7 @@ object ScaleSmoke {
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .getOrCreate()
+      Tables.configure(spark)
       spark.sparkContext.setLogLevel("WARN")
       run100(spark, src)
       spark.stop()
@@ -409,6 +410,7 @@ object ScaleSmoke {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+    Tables.configure(spark)
     spark.sparkContext.setLogLevel("WARN")
     build10x(spark, src, out)
     // JVM/codegen warmup so 1× doesn't absorb JIT cost

@@ -67,6 +67,7 @@ object ScanCensus {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+    Tables.configure(spark)
     spark.sparkContext.setLogLevel("ERROR")
     val rows = census(spark, sfDir).flatMap {
       case (name, Left(err)) => Some(s"$name -> ERR $err")

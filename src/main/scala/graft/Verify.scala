@@ -13,6 +13,7 @@ object Verify {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+    Tables.configure(spark)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // one-time bucketed-layout build (load phase, not query work)

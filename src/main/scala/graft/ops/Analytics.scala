@@ -490,43 +490,75 @@ object Analytics {
     * grouped aggregate over a 6-value key. THE map-side-combine
     * benchmark: partial aggregation collapses each partition to ≤6
     * rows before the shuffle, so the exchange is constant-size at any
-    * scale. */
+    * scale. Every summed value is quantized per row to whole cents and
+    * summed as BIGINT (the q_tpch_q11 rule): a double sum changes in
+    * its last bits with the order rows arrive in, enough to flip
+    * round(x, 2) on large sums (SumOrderSpec). Averages are the cent
+    * sum over the count, rounded half-up to a millionth in integer
+    * arithmetic (cents·2·10⁴ stays below 2⁶³ for group sums under
+    * ~4·10¹² of price, far past the tested scales). */
   val qTpchQ1 = Q(
     "q_tpch_q1",
     (sp, dir) => {
       implicit val s: SparkSession = sp
       implicit val d: String = dir
+      def centSum(x: org.apache.spark.sql.Column) =
+        sum(floor(x * 100 + 0.5).cast("long"))
+      def avgMicros(c: String) =
+        expr(s"($c * 20000 + count_order) div (2 * count_order)") / lit(1e6)
+      val discPrice = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
       t("lineitem")
         .filter(col("l_shipdate") <=
           lit("1998-09-01").cast("timestamp_ntz"))
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(
-          round(sum(col("l_quantity")), 2).as("sum_qty"),
-          round(sum(col("l_extendedprice")), 2).as("sum_base_price"),
-          round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2)
-            .as("sum_disc_price"),
-          round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-            * (lit(1.0) + col("l_tax"))), 2).as("sum_charge"),
-          round(avg(col("l_quantity")), 6).as("avg_qty"),
-          round(avg(col("l_extendedprice")), 6).as("avg_price"),
-          round(avg(col("l_discount")), 6).as("avg_disc"),
+          centSum(col("l_quantity")).as("qty_c"),
+          centSum(col("l_extendedprice")).as("price_c"),
+          centSum(discPrice).as("disc_price_c"),
+          centSum(discPrice * (lit(1.0) + col("l_tax"))).as("charge_c"),
+          centSum(col("l_discount")).as("disc_c"),
           count(lit(1)).as("count_order"))
+        .select(col("l_returnflag"), col("l_linestatus"),
+          (col("qty_c") / 100.0).as("sum_qty"),
+          (col("price_c") / 100.0).as("sum_base_price"),
+          (col("disc_price_c") / 100.0).as("sum_disc_price"),
+          (col("charge_c") / 100.0).as("sum_charge"),
+          avgMicros("qty_c").as("avg_qty"),
+          avgMicros("price_c").as("avg_price"),
+          avgMicros("disc_c").as("avg_disc"),
+          col("count_order"))
         .orderBy(col("l_returnflag"), col("l_linestatus"))
     },
-    Some("""SELECT l_returnflag, l_linestatus,
-              round(sum(l_quantity), 2) AS sum_qty,
-              round(sum(l_extendedprice), 2) AS sum_base_price,
-              round(sum(l_extendedprice * (1.0 - l_discount)), 2)
-                AS sum_disc_price,
-              round(sum(l_extendedprice * (1.0 - l_discount)
-                * (1.0 + l_tax)), 2) AS sum_charge,
-              round(avg(l_quantity), 6) AS avg_qty,
-              round(avg(l_extendedprice), 6) AS avg_price,
-              round(avg(l_discount), 6) AS avg_disc,
-              count(*) AS count_order
-            FROM lineitem
-            WHERE l_shipdate <= TIMESTAMP '1998-09-01'
-            GROUP BY l_returnflag, l_linestatus
+    Some("""WITH g AS (
+              SELECT l_returnflag, l_linestatus,
+                CAST(sum(CAST(floor(l_quantity * 100 + 0.5) AS BIGINT))
+                  AS BIGINT) AS qty_c,
+                CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT))
+                  AS BIGINT) AS price_c,
+                CAST(sum(CAST(floor(l_extendedprice * (1.0 - l_discount)
+                  * 100 + 0.5) AS BIGINT)) AS BIGINT) AS disc_price_c,
+                CAST(sum(CAST(floor(l_extendedprice * (1.0 - l_discount)
+                  * (1.0 + l_tax) * 100 + 0.5) AS BIGINT)) AS BIGINT)
+                  AS charge_c,
+                CAST(sum(CAST(floor(l_discount * 100 + 0.5) AS BIGINT))
+                  AS BIGINT) AS disc_c,
+                count(*) AS count_order
+              FROM lineitem
+              WHERE l_shipdate <= TIMESTAMP '1998-09-01'
+              GROUP BY l_returnflag, l_linestatus)
+            SELECT l_returnflag, l_linestatus,
+              qty_c / 100.0e0 AS sum_qty,
+              price_c / 100.0e0 AS sum_base_price,
+              disc_price_c / 100.0e0 AS sum_disc_price,
+              charge_c / 100.0e0 AS sum_charge,
+              CAST((qty_c * 20000 + count_order) // (2 * count_order)
+                AS BIGINT) / 1e6 AS avg_qty,
+              CAST((price_c * 20000 + count_order) // (2 * count_order)
+                AS BIGINT) / 1e6 AS avg_price,
+              CAST((disc_c * 20000 + count_order) // (2 * count_order)
+                AS BIGINT) / 1e6 AS avg_disc,
+              count_order
+            FROM g
             ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST"""))
 
   /** Q18 shape — large-volume customers: aggregate the fact table,

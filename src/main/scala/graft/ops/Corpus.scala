@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.{Q, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -649,6 +649,18 @@ object Corpus {
           .cast("long").as("lqi"))
   }
 
+  /** Bits per bigram from a doc's exact integer score: `sumI`
+    * millionths of a bit over `nb` bigrams, rounded half-up to a whole
+    * millionth in integer arithmetic (sumI >= 0, nb > 0) and divided
+    * once, so Spark and the oracle emit the same double. Rounding the
+    * double quotient instead, round(sum_i / 1e6 / nb, 6), loses exact
+    * ties: sum_i = 29550081, nb = 6 is 4925013.5 millionths, but the
+    * quotient prints as 4.9250134999999995 and Spark rounded it to
+    * 4.925013. Oracles spell it
+    * `CAST((2 * sum_i + nb) // (2 * nb) AS BIGINT) / 1e6`. */
+  private[graft] def bitsPerBigram(sumI: String, nb: String): Column =
+    expr(s"(2 * $sumI + $nb) div (2 * $nb)") / lit(1e6)
+
   val qTextPerplexity = Q(
     "q_text_perplexity",
     (s, d) => {
@@ -668,8 +680,7 @@ object Corpus {
       m.crossJoin(broadcast(cuts))
         .select(col("doc_id"), col("source"),
           col("nb").as("n_bigrams"),
-          round(col("sum_i") / lit(1e6) / col("nb"), 6)
-            .as("bits_per_bigram"),
+          bitsPerBigram("sum_i", "nb").as("bits_per_bigram"),
           expr("""CASE aggregate(cuts, 0, (acc, x) ->
                     acc + CASE WHEN mi > x THEN 1 ELSE 0 END)
                   WHEN 0 THEN 'head' WHEN 1 THEN 'middle'
@@ -716,7 +727,8 @@ object Corpus {
                       quantile_cont(mi, CAST(2 AS DOUBLE)/3)] AS cuts
               FROM m)
             SELECT doc_id, source, nb AS n_bigrams,
-              round(sum_i / 1e6 / nb, 6) AS bits_per_bigram,
+              CAST((2 * sum_i + nb) // (2 * nb) AS BIGINT) / 1e6
+                AS bits_per_bigram,
               CASE len(list_filter(cuts, x -> mi > x))
                 WHEN 0 THEN 'head' WHEN 1 THEN 'middle'
                 ELSE 'tail' END AS ppl_bucket
@@ -939,8 +951,7 @@ object Corpus {
       scoreUnder(tb, cnt, tot, voc)
         .select(col("doc_id"), col("source"),
           col("nb").as("n_bigrams"), col("n_unseen"),
-          round(col("sum_i") / lit(1e6) / col("nb"), 6)
-            .as("bits_per_bigram"))
+          bitsPerBigram("sum_i", "nb").as("bits_per_bigram"))
         .orderBy(col("doc_id"))
     },
     Some("""WITH tk AS (
@@ -981,13 +992,15 @@ object Corpus {
               LEFT JOIN cnt ON tb.w1 = cnt.w1 AND tb.w2 = cnt.w2
               LEFT JOIN tot ON tb.w1 = tot.w1
               CROSS JOIN voc)
-            SELECT doc_id, source,
-              CAST(sum(c) AS BIGINT) AS n_bigrams,
-              CAST(sum(c * unseen) AS BIGINT) AS n_unseen,
-              round(CAST(sum(c * lqi) AS BIGINT) / 1e6 / sum(c), 6)
-                AS bits_per_bigram
-            FROM scored
-            GROUP BY doc_id, source
+            SELECT doc_id, source, n_bigrams, n_unseen,
+              CAST((2 * sum_i + n_bigrams) // (2 * n_bigrams) AS BIGINT)
+                / 1e6 AS bits_per_bigram
+            FROM (SELECT doc_id, source,
+                    CAST(sum(c) AS BIGINT) AS n_bigrams,
+                    CAST(sum(c * unseen) AS BIGINT) AS n_unseen,
+                    CAST(sum(c * lqi) AS BIGINT) AS sum_i
+                  FROM scored
+                  GROUP BY doc_id, source)
             ORDER BY doc_id NULLS FIRST"""))
 
   /** Perplexity-contrast filter (q_text_contrast): the CCNet

@@ -285,10 +285,10 @@ object Learn {
     // cache-manager used to hand the raw rebuild the same cached scan
     // anyway — consuming the accessor keeps that behavior explicit and
     // lets cacheOnce drop its wide duplicate cache entry. The ORDER BY
-    // must be re-applied here: the store is a checkpointed RDD whose
-    // coalesce does NOT preserve the build's global sort (caught by
-    // the sf0.1 row-order compare; sf0.01 passed only because the
-    // store narrowed to a single partition there).
+    // lives here, not in the build: cacheOnce re-shapes the store
+    // (repartition or coalesce, then a checkpointed RDD), which
+    // discards any sort the build paid for (caught by the sf0.1
+    // row-order compare), and the other consumers aggregate.
     (sp, dir) => qualityScores(sp, dir).orderBy(col("doc_id")),
     qualityClassifyOracle)
 
@@ -356,7 +356,6 @@ object Learn {
         .select(col("doc_id"), col("label").as("gopher_pass"),
           (col("lo_i") > 0).cast("int").as("nb_keep"),
           round(col("lo_i") / lit(1e6), 6).as("log_odds"))
-        .orderBy(col("doc_id"))
     }
   }
 

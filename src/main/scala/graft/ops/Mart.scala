@@ -162,7 +162,9 @@ object Mart {
     * partsupp.ps_supplycost, cost is modeled as 60% of the part's retail
     * price per unit — the join topology (part ⋈ lineitem ⋈ orders ⋈
     * supplier ⋈ nation, filter on part name) is the original's. Only
-    * (p_partkey, p_retailprice) leave the part scan. */
+    * (p_partkey, p_retailprice) leave the part scan. Profit is summed
+    * in whole cents per row (the q_tpch_q11 rule), so the join's row
+    * order cannot move the emitted value. */
   val qTpchQ9 = Q(
     "q_tpch_q9",
     (sp, dir) => {
@@ -182,13 +184,16 @@ object Mart {
           col("s_nationkey") === col("n_nationkey"))
         .groupBy(col("n_name").as("nation"),
           year(col("o_orderdate")).cast("long").as("o_year"))
-        .agg(round(sum(amount), 2).as("sum_profit"))
+        .agg(sum(floor(amount * 100 + 0.5).cast("long")).as("profit_c"))
+        .select(col("nation"), col("o_year"),
+          (col("profit_c") / 100.0).as("sum_profit"))
         .orderBy(col("nation"), col("o_year").desc)
     },
     Some("""SELECT n_name AS nation,
               CAST(year(o_orderdate) AS BIGINT) AS o_year,
-              round(sum(l_extendedprice * (1.0 - l_discount)
-                - 0.6 * p_retailprice * l_quantity), 2) AS sum_profit
+              CAST(sum(CAST(floor((l_extendedprice * (1.0 - l_discount)
+                - 0.6 * p_retailprice * l_quantity) * 100 + 0.5) AS BIGINT))
+                AS BIGINT) / 100.0e0 AS sum_profit
             FROM lineitem
               JOIN part ON l_partkey = p_partkey
               JOIN orders ON l_orderkey = o_orderkey

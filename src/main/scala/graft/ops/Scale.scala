@@ -157,14 +157,20 @@ object Scale {
       // not split a skewed partition whose layout a downstream
       // operator depends on (decision-rule case (b) above — where the
       // manual salt remains the answer)
+      // revenue in whole cents per row: AQE's skew split decides which
+      // rows meet in which partial sum, so a double sum would move
       li.join(dim, Seq("hot_key"))
         .groupBy(col("s_name"))
         .agg(count(lit(1)).as("n_items"),
-          round(sum(col("l_extendedprice")), 2).as("revenue"))
+          sum(floor(col("l_extendedprice") * 100 + 0.5).cast("long"))
+            .as("rev_c"))
+        .select(col("s_name"), col("n_items"),
+          (col("rev_c") / 100.0).as("revenue"))
         .orderBy(col("s_name"))
     },
     Some("""SELECT s_name, count(*) AS n_items,
-              round(sum(l_extendedprice), 2) AS revenue
+              CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT))
+                AS BIGINT) / 100.0e0 AS revenue
             FROM (SELECT CASE WHEN l_orderkey % 10 < 9 THEN 0
                               ELSE l_suppkey % 25 END AS hot_key,
                     l_extendedprice

@@ -1210,7 +1210,7 @@ object StreamOps {
         .agg(count(lit(1)).as("n_bigrams"), sum(col("lqi")).as("sum_i"))
       drain(s, scored, "stream_ppl_tbl", "complete")
         .select(col("source"), col("n_bigrams"),
-          round(col("sum_i") / lit(1e6) / col("n_bigrams"), 6)
+          graft.ops.Corpus.bitsPerBigram("sum_i", "n_bigrams")
             .as("bits_per_bigram"))
         .orderBy(col("source"))
     },
@@ -1237,11 +1237,13 @@ object StreamOps {
                   / ln(CAST(2 AS DOUBLE)) * 1000000 + 0.5) AS BIGINT)
                   AS lqi
               FROM cnt JOIN tot USING (w1), voc)
-            SELECT source, CAST(count(*) AS BIGINT) AS n_bigrams,
-              round(CAST(sum(lqi) AS BIGINT) / 1e6 / count(*), 6)
-                AS bits_per_bigram
-            FROM big JOIN lq USING (w1, w2)
-            GROUP BY source
+            SELECT source, n_bigrams,
+              CAST((2 * sum_i + n_bigrams) // (2 * n_bigrams) AS BIGINT)
+                / 1e6 AS bits_per_bigram
+            FROM (SELECT source, CAST(count(*) AS BIGINT) AS n_bigrams,
+                    CAST(sum(lqi) AS BIGINT) AS sum_i
+                  FROM big JOIN lq USING (w1, w2)
+                  GROUP BY source)
             ORDER BY source NULLS FIRST"""))
 
   /** Streaming curation funnel (q_stream_curate): the ingest twin of

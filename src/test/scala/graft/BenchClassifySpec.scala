@@ -81,10 +81,12 @@ class BenchClassifySpec extends SparkSuite {
     val entries = Seq[(String, (org.apache.spark.sql.SparkSession, String) => DataFrame)](
       "q_ok" -> ((s, _) => s.range(10).toDF("id")),
       "q_boom" -> ((_, _) => sys.error("deliberate build failure")))
-    val (times, errs) = Bench.sweep(spark, "unused", entries, Map.empty)
+    val (times, errs, compiles) =
+      Bench.sweep(spark, "unused", entries, Map.empty)
     assert(errs === Set("q_boom"),
       "a throwing query must surface in the error set, not read as fast")
     assert(times.keySet === Set("q_ok", "q_boom"),
       "the failed query stays in the timing map so totals stay comparable")
+    assert(compiles.keySet === times.keySet && compiles.values.forall(_ >= 0))
   }
 }

@@ -42,6 +42,10 @@ object SparkSuite {
       .config("spark.sql.maxMetadataStringLength", "100000")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+    // before the JVM's first query: sizes the codegen cache (see
+    // Tables.configure), which can only take effect ahead of the first
+    // compile
+    Tables.configure(s)
     s.sparkContext.setLogLevel("ERROR")
     s
   }
