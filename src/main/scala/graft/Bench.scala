@@ -261,9 +261,10 @@ object Bench {
       m.toSeq.sortBy(_._1).map { case (k, v) => "\"" + k + "\":" + v }
         .mkString("{", ",", "}")
     // Janino compiles before the sweeps (JVM warm-up, fixpoint builds)
-    // and per pass: with the codegen cache sized for the registry
-    // (Tables.configure) pass 2 recompiles only classes whose generated
-    // source changes per run (mostly the streaming drains)
+    // and per pass: with the codegen cache sized and keyed for reuse
+    // (Tables.configure) pass 2 compiles only where AQE picked a
+    // different join than in pass 1 (it plans on whichever stages have
+    // finished) or a typed encoder was rebuilt with fresh variable names
     val compilesJson =
       s""""codegen_compiles":{"warm":$warmCompiles,""" +
         s""""pass1":${cg1.values.sum},"pass2":${cg2.values.sum}}"""

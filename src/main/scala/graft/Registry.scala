@@ -62,31 +62,37 @@ object Tables {
   // those listings add up. The DataFrame (an immutable plan) is safe to
   // share; file CHANGES under a cached path would go unseen, which is
   // fine for the driver's immutable sf dirs and per-JVM test fixtures.
+  // The key holds the session strongly for the life of the JVM, so a
+  // throwaway child session must go through `read` instead.
   private val tCache =
     scala.collection.concurrent.TrieMap[(SparkSession, String, String), DataFrame]()
 
   def t(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    tCache.getOrElseUpdate(
-      (spark, sfDir, name), {
-        // Idempotent: the confs must be live before the footer is
-        // read / the first derived frame is persisted, and the driver
-        // may call entry()/queries with a session of its own.
-        configure(spark)
-        val df0 = spark.read.parquet(s"$sfDir/$name.parquet")
-        // Normalize events.ts to micros NTZ whatever the physical type:
-        // driver data is TIMESTAMP(NANOS) (read as long), test fixtures
-        // may write plain timestamps.
-        if (name == "events") {
-          import org.apache.spark.sql.functions.expr
-          import org.apache.spark.sql.types.LongType
-          df0.schema("ts").dataType match {
-            case LongType => df0.withColumn("ts",
-              expr("CAST(timestamp_micros(ts div 1000) AS TIMESTAMP_NTZ)"))
-            case _ => df0.withColumn("ts",
-              expr("CAST(ts AS TIMESTAMP_NTZ)"))
-          }
-        } else df0
-      })
+    tCache.getOrElseUpdate((spark, sfDir, name), read(spark, sfDir, name))
+
+  /** The unmemoized read behind `t`, for sessions that must not outlive
+    * their query (q_join_skew_aqe's per-call `newSession()`): same
+    * confs, same events normalization, nothing pinned. */
+  def read(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    // Idempotent: the confs must be live before the footer is read /
+    // the first derived frame is persisted, and a caller may invoke
+    // entry()/queries with a session of its own.
+    configure(spark)
+    val df0 = spark.read.parquet(s"$sfDir/$name.parquet")
+    // Normalize events.ts to micros NTZ whatever the physical type:
+    // the reference data is TIMESTAMP(NANOS) (read as long), test fixtures
+    // may write plain timestamps.
+    if (name == "events") {
+      import org.apache.spark.sql.functions.expr
+      import org.apache.spark.sql.types.LongType
+      df0.schema("ts").dataType match {
+        case LongType => df0.withColumn("ts",
+          expr("CAST(timestamp_micros(ts div 1000) AS TIMESTAMP_NTZ)"))
+        case _ => df0.withColumn("ts",
+          expr("CAST(ts AS TIMESTAMP_NTZ)"))
+      }
+    } else df0
+  }
 
   /** Session conf every entry point (Verify/Bench/tests) applies —
     * also re-applied lazily on the first table read per session, so a
@@ -111,12 +117,9 @@ object Tables {
     * `graft.Bench` at sf0.1 / local[32] in a fresh JVM with the cache
     * out of the way compiles 4967 distinct classes up to the end of
     * its first full sweep (1199 in the warm-up and fixpoint builds,
-    * 3768 in the sweep; CodegenMetrics counts), and its second sweep
-    * adds 736 one-off classes, 660 of them from the streaming drains,
-    * whose generated source differs run to run. 8192 holds that
-    * working set plus a round of one-off classes, with headroom for
-    * a second shuffle width or scale in the same JVM. A value the
-    * user set explicitly is left alone.
+    * 3768 in the sweep; CodegenMetrics counts). 8192 holds that
+    * working set with headroom for a second shuffle width or scale in
+    * the same JVM. A value the user set explicitly is left alone.
     *
     * Ordering rule: the conf is STATIC and CodeGenerator reads it
     * exactly once per JVM, when its object initializes (in practice
@@ -127,13 +130,41 @@ object Tables {
     * program-owned session therefore calls configure right after
     * getOrCreate(), before its first query; if this JVM has already
     * compiled code the cap is frozen at whatever was read then, and
-    * configure warns once. CodegenReuseSpec pins the ordering. */
+    * configure warns once. CodegenReuseSpec pins the ordering.
+    *
+    * Cache keys. The cache is keyed by (classloader, source), so a
+    * class is reused only when both repeat. Two confs, each left alone
+    * when the user set it, keep them repeating:
+    *  - `spark.sql.artifact.isolation.enabled=false`. With isolation
+    *    on, a session's tasks load generated classes through a loader
+    *    of that session's own. Each streaming drain runs in a session
+    *    clone made by StreamExecution, and q_join_skew_aqe in a
+    *    per-call `newSession()`, so every run got a fresh loader and
+    *    recompiled every class (11-21 per drain, identical source).
+    *    The clone copies this SQLConf and `read` configures the child
+    *    session, so the setting reaches both. Isolation only separates
+    *    jars and files added to a session, and the engine adds none
+    *    (no addArtifact / addJar anywhere), so it buys nothing here.
+    *  - `spark.sql.codegen.useIdInClassName=false`. Under AQE the
+    *    whole-stage codegen ids follow the order in which query stages
+    *    are planned, which can change from one run to the next
+    *    (q_tpch_q2 and q_tpch_q20 swapped ids 5/7 and 4/5 between
+    *    runs); with the id in the class name the swapped bodies were
+    *    new sources. Only the class name drops the id; explain output
+    *    still prints it.
+    * Plans and results do not change with either. With both,
+    * `graft.Bench` at sf0.1 / local[32] compiles 15 classes in its
+    * second sweep instead of 737: 14 in six ids whose AQE join choice
+    * can differ from run to run (q_tpch_q2 was seen to switch a join
+    * to broadcast), and 1 in q_stream_anomaly, whose typed-state
+    * encoder names its lambda variables from a JVM-wide counter. */
   def configure(spark: SparkSession): Unit = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     val conf = spark.sessionState.conf
-    if (!conf.contains(CodegenCacheKey))
-      conf.setConfString(CodegenCacheKey, CodegenCacheEntries.toString)
+    CodegenDefaults.foreach { case (k, v) =>
+      if (!conf.contains(k)) conf.setConfString(k, v)
+    }
     if (codegenCapPinned.compareAndSet(false, true)) {
       if (org.apache.spark.metrics.source.CodegenMetrics
           .METRIC_COMPILATION_TIME.getCount > 0)
@@ -149,7 +180,10 @@ object Tables {
   }
 
   private val CodegenCacheKey = "spark.sql.codegen.cache.maxEntries"
-  private val CodegenCacheEntries = 8192
+  private val CodegenDefaults = Seq(
+    CodegenCacheKey -> "8192",
+    "spark.sql.artifact.isolation.enabled" -> "false",
+    "spark.sql.codegen.useIdInClassName" -> "false")
   private val codegenCapPinned =
     new java.util.concurrent.atomic.AtomicBoolean(false)
 

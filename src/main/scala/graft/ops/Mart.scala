@@ -18,6 +18,12 @@ object Mart {
   private def t(n: String)(implicit s: SparkSession, d: String) =
     Tables.t(s, d, n)
 
+  /** Sum of a money value rounded per row to whole cents, as BIGINT:
+    * exact, so independent of the order rows arrive in (a double sum's
+    * last bits are not, enough to flip round(x, 2) on large sums). */
+  private def centSum(x: org.apache.spark.sql.Column) =
+    sum(floor(x * 100 + 0.5).cast("long"))
+
   /** Q2 shape — min-cost supplier per part: for each mid-size LARGE
     * part, the EUROPE supplier whose observed unit price
     * (min l_extendedprice/l_quantity over their shipments) is the
@@ -81,7 +87,9 @@ object Mart {
   /** Q6 shape — forecast revenue change: one full-scan conditional sum.
     * All three predicates push to the parquet scan; the aggregate is a
     * map-side partial → single-row exchange. The simplest query in the
-    * suite and the purest scan-throughput probe. */
+    * suite and the purest scan-throughput probe. Revenue is summed in
+    * whole cents per row (the q_tpch_q11 rule), so the order rows
+    * reach the aggregate cannot move the emitted value. */
   val qTpchQ6 = Q(
     "q_tpch_q6",
     (sp, dir) => {
@@ -93,10 +101,11 @@ object Mart {
           col("l_shipdate") < lit("1997-01-01").cast("timestamp_ntz") &&
           col("l_discount").between(0.05, 0.07) &&
           col("l_quantity") < 24)
-        .agg(round(sum(col("l_extendedprice") * col("l_discount")), 2)
+        .agg((centSum(col("l_extendedprice") * col("l_discount")) / 100.0)
           .as("revenue"))
     },
-    Some("""SELECT round(sum(l_extendedprice * l_discount), 2) AS revenue
+    Some("""SELECT CAST(sum(CAST(floor(l_extendedprice * l_discount * 100
+              + 0.5) AS BIGINT)) AS BIGINT) / 100.0e0 AS revenue
             FROM lineitem
             WHERE l_shipdate >= TIMESTAMP '1996-01-01'
               AND l_shipdate < TIMESTAMP '1997-01-01'
@@ -184,7 +193,7 @@ object Mart {
           col("s_nationkey") === col("n_nationkey"))
         .groupBy(col("n_name").as("nation"),
           year(col("o_orderdate")).cast("long").as("o_year"))
-        .agg(sum(floor(amount * 100 + 0.5).cast("long")).as("profit_c"))
+        .agg(centSum(amount).as("profit_c"))
         .select(col("nation"), col("o_year"),
           (col("profit_c") / 100.0).as("sum_profit"))
         .orderBy(col("nation"), col("o_year").desc)
@@ -282,7 +291,8 @@ object Mart {
   /** Q15 shape — top supplier(s) by revenue in a quarter. The view +
     * `= (SELECT max ...)` pattern becomes a per-supplier aggregate and a
     * one-row max broadcast back (no second fact pass, no window over the
-    * whole table). Ties all surface, ordered by key. */
+    * whole table). Ties all surface, ordered by key. Revenue is a whole
+    * cent sum per row, so the max and the tie test are exact. */
   val qTpchQ15 = Q(
     "q_tpch_q15",
     (sp, dir) => {
@@ -293,27 +303,28 @@ object Mart {
           col("l_shipdate") >= lit("1996-01-01").cast("timestamp_ntz") &&
           col("l_shipdate") < lit("1996-04-01").cast("timestamp_ntz"))
         .groupBy(col("l_suppkey"))
-        .agg(round(sum(col("l_extendedprice") *
-          (lit(1.0) - col("l_discount"))), 2).as("total_revenue"))
-      val mx = revenue.agg(max(col("total_revenue")).as("max_revenue"))
+        .agg(centSum(col("l_extendedprice") *
+          (lit(1.0) - col("l_discount"))).as("rev_c"))
+      val mx = revenue.agg(max(col("rev_c")).as("max_c"))
       revenue
         .crossJoin(broadcast(mx))
-        .filter(col("total_revenue") === col("max_revenue"))
+        .filter(col("rev_c") === col("max_c"))
         .join(t("supplier"), col("l_suppkey") === col("s_suppkey"))
-        .select(col("s_suppkey"), col("s_name"), col("total_revenue"))
+        .select(col("s_suppkey"), col("s_name"),
+          (col("rev_c") / 100.0).as("total_revenue"))
         .orderBy(col("s_suppkey"))
     },
     Some("""WITH revenue AS (
               SELECT l_suppkey,
-                round(sum(l_extendedprice * (1.0 - l_discount)), 2)
-                  AS total_revenue
+                CAST(sum(CAST(floor(l_extendedprice * (1.0 - l_discount)
+                  * 100 + 0.5) AS BIGINT)) AS BIGINT) AS rev_c
               FROM lineitem
               WHERE l_shipdate >= TIMESTAMP '1996-01-01'
                 AND l_shipdate < TIMESTAMP '1996-04-01'
               GROUP BY l_suppkey)
-            SELECT s_suppkey, s_name, total_revenue
+            SELECT s_suppkey, s_name, rev_c / 100.0e0 AS total_revenue
             FROM revenue JOIN supplier ON l_suppkey = s_suppkey
-            WHERE total_revenue = (SELECT max(total_revenue) FROM revenue)
+            WHERE rev_c = (SELECT max(rev_c) FROM revenue)
             ORDER BY s_suppkey NULLS FIRST"""))
 
   /** Q16 shape — supplier diversity per part attribute triple, excluding
@@ -359,7 +370,8 @@ object Mart {
     * figure. The correlated per-part AVG becomes a part-keyed aggregate
     * broadcast back onto the same filtered fact slice — the fact is
     * scanned twice only logically; both passes are brand-pruned at the
-    * scan. */
+    * scan. The yearly figure is the whole-cent sum over 7, rounded
+    * half-up to a cent in integer arithmetic. */
   val qTpchQ17 = Q(
     "q_tpch_q17",
     (sp, dir) => {
@@ -374,9 +386,12 @@ object Mart {
       brandLines
         .join(broadcast(avgQty), col("p_partkey") === col("ak"))
         .filter(col("l_quantity") < col("half_avg_qty"))
-        .agg(round(sum(col("l_extendedprice")) / 7.0, 2).as("avg_yearly"))
+        .agg(centSum(col("l_extendedprice")).as("price_c"))
+        .select((expr("(price_c * 2 + 7) div 14") / 100.0).as("avg_yearly"))
     },
-    Some("""SELECT round(sum(l_extendedprice) / 7.0, 2) AS avg_yearly
+    Some("""SELECT CAST((CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5)
+              AS BIGINT)) AS BIGINT) * 2 + 7) // 14 AS BIGINT) / 100.0e0
+              AS avg_yearly
             FROM lineitem JOIN part ON l_partkey = p_partkey
             WHERE p_brand = 'Brand#3'
               AND l_quantity < (SELECT 0.5 * avg(l2.l_quantity)
@@ -386,7 +401,8 @@ object Mart {
   /** Q19 shape — disjunctive bracket pricing: three (brand, size range,
     * quantity range) brackets OR-ed together. The part equi-key stays a
     * hash join; the disjunction is evaluated as the join's residual
-    * filter, so no fallback to a nested-loop join. */
+    * filter, so no fallback to a nested-loop join. Revenue is summed in
+    * whole cents per row. */
   val qTpchQ19 = Q(
     "q_tpch_q19",
     (sp, dir) => {
@@ -403,11 +419,11 @@ object Mart {
         .join(broadcast(t("part")
             .select(col("p_partkey"), col("p_brand"), col("p_size"))),
           col("l_partkey") === col("p_partkey") && bracket)
-        .agg(round(sum(col("l_extendedprice") *
-          (lit(1.0) - col("l_discount"))), 2).as("revenue"))
+        .agg((centSum(col("l_extendedprice") *
+          (lit(1.0) - col("l_discount"))) / 100.0).as("revenue"))
     },
-    Some("""SELECT round(sum(l_extendedprice * (1.0 - l_discount)), 2)
-              AS revenue
+    Some("""SELECT CAST(sum(CAST(floor(l_extendedprice * (1.0 - l_discount)
+              * 100 + 0.5) AS BIGINT)) AS BIGINT) / 100.0e0 AS revenue
             FROM lineitem JOIN part ON l_partkey = p_partkey
             WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 10
                    AND l_quantity BETWEEN 1 AND 20)

@@ -125,6 +125,8 @@ object Scale {
       // this builder returns (the DataFrame is lazy) — so tune a
       // throwaway child session that lives as long as the plan, rather
       // than mutate-and-restore the caller's conf around a lazy value.
+      // Its tables come from the unmemoized Tables.read: the memo would
+      // pin every call's child session for the life of the JVM.
       val s = s0.newSession()
       s.conf.set("spark.sql.adaptive.enabled", "true")
       s.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -144,12 +146,12 @@ object Scale {
       // sf0.001/0.01 parquet is a single input split (one mapper =
       // nothing to split along), so spread the scan over 8 mappers
       // first — the granularity a many-split 100 TB scan has for free.
-      val li = Tables.t(s, d, "lineitem")
+      val li = Tables.read(s, d, "lineitem")
         .repartition(8)
         .withColumn("hot_key", expr(
           """CASE WHEN l_orderkey % 10 < 9 THEN CAST(0 AS BIGINT)
                   ELSE CAST(l_suppkey % 25 AS BIGINT) END"""))
-      val dim = Tables.t(s, d, "supplier")
+      val dim = Tables.read(s, d, "supplier")
         .filter(col("s_suppkey") <= 25)
         .select((col("s_suppkey") % 25).as("hot_key"), col("s_name"))
       // aggregate on s_name, NOT the join key: an agg keyed by the

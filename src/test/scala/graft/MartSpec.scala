@@ -14,8 +14,10 @@ class MartSpec extends SparkSuite {
   test("Q6 revenue matches an independent SQL computation") {
     val got = q("q_tpch_q6").collect()(0).getDouble(0)
     Tables.t(spark, sf0, "lineitem").createOrReplaceTempView("li_q6")
+    // whole cents per row, summed exactly (the q_tpch_q11 rule)
     val want = spark.sql(
-      """SELECT round(sum(l_extendedprice * l_discount), 2) FROM li_q6
+      """SELECT sum(floor(l_extendedprice * l_discount * 100 + 0.5D))
+           / 100.0D FROM li_q6
          WHERE l_shipdate >= TIMESTAMP_NTZ'1996-01-01'
            AND l_shipdate < TIMESTAMP_NTZ'1997-01-01'
            AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""")
@@ -89,10 +91,10 @@ class MartSpec extends SparkSuite {
       .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp_ntz")
         && col("l_shipdate") < lit("1996-04-01").cast("timestamp_ntz"))
       .groupBy(col("l_suppkey"))
-      .agg(round(sum(col("l_extendedprice") *
-        (lit(1.0) - col("l_discount"))), 2).as("r"))
-      .agg(max(col("r"))).collect()(0).getDouble(0)
-    assert(revs(0) === mx)
+      .agg(sum(floor(col("l_extendedprice") *
+        (lit(1.0) - col("l_discount")) * 100 + 0.5)).as("cents"))
+      .agg(max(col("cents"))).collect()(0).getLong(0)
+    assert(revs(0) === mx / 100.0)
   }
 
   test("Q16 never counts a negative-balance supplier") {
