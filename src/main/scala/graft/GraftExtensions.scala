@@ -30,6 +30,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           classOf[functions.LshBandsText].getName, "lsh_bands_text"),
         (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
           functions.LshBandsText.build(exprs)))
+    ext.injectFunction(
+      (org.apache.spark.sql.catalyst.FunctionIdentifier("minhash_sets_text"),
+        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
+          classOf[functions.MinhashSetsText].getName, "minhash_sets_text"),
+        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
+          functions.MinhashSetsText.build(exprs)))
     // whole-operator extension: the native as-of join planner strategy
     // (graft.plans.AsofJoin logical node → AsofJoinExec) plus the
     // filter-pushdown rule Catalyst can't apply to an unknown node

@@ -19,14 +19,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * sequence...), md5...))` + 16 `array_min(transform(...))` columns:
   * higher-order functions evaluate their lambdas interpreted, and the
   * md5-per-shingle pass dominated q_stream_lsh_index's addBatch. Every
-  * step reproduces the SQL semantics bit-for-bit — `split(text, ' ')`
-  * keeps empty tokens (Java regex split, limit −1), shingles join with
-  * a single space over exactly 5 tokens, the hash is the first 8 hex
-  * chars of md5 over the UTF-8 bytes (0..2³²−1, so the permutation
-  * arithmetic never overflows), and minima/band packing are the exact
-  * integer recurrence of `graft.ops.Dedup.minhashAggs` — so the DuckDB bands CTE
-  * (Dedup.bandsCteSql) still hash-matches. NULL when the text has
-  * fewer than 5 tokens (the `size(hs) > 0` filter's semantics). */
+  * step reproduces the SQL semantics bit-for-bit: shingles and their
+  * md5-derived hashes come from [[MinhashSetsText.shingleHashes]] and
+  * the 16 minima from [[MinhashSetsText.minhash]], the routines the
+  * batch signature kernel `minhash_sets_text` uses, and the band
+  * packing is the integer recurrence of `graft.ops.Dedup.lshBands` —
+  * so the DuckDB bands CTE (Dedup.bandsCteSql) still hash-matches.
+  * NULL when the text has fewer than 5 tokens (the `size(hs) > 0`
+  * filter's semantics). */
 case class LshBandsText(child: Expression) extends UnaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
@@ -57,45 +57,12 @@ case class LshBandsText(child: Expression) extends UnaryExpression {
 }
 
 object LshBandsText {
-  // MD5 digest per executor thread, reset per shingle — allocating one
-  // per row put getInstance on the exact hot path this expression
-  // exists to flatten.
-  private val digests = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
   /** The whole fused pipeline; static so generated code can call it.
     * Returns null when fewer than 5 tokens. */
   def compute(text: UTF8String): ArrayData = {
-    // identical token semantics to split(text, ' '): Java regex split
-    // with limit -1 (single-space pattern needs no regex machinery)
-    val toks = text.toString.split(" ", -1)
-    val n = toks.length
-    if (n < 5) return null
-    val md = digests.get()
-    val m = Array.fill(16)(Long.MaxValue)
-    val sb = new java.lang.StringBuilder(64)
-    var i = 0
-    while (i + 4 < n) {
-      sb.setLength(0)
-      sb.append(toks(i)).append(' ').append(toks(i + 1)).append(' ')
-        .append(toks(i + 2)).append(' ').append(toks(i + 3)).append(' ')
-        .append(toks(i + 4))
-      md.reset()
-      val dig = md.digest(
-        sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      // first 8 hex chars = the top 4 digest bytes, unsigned
-      val x = ((dig(0) & 0xffL) << 24) | ((dig(1) & 0xffL) << 16) |
-        ((dig(2) & 0xffL) << 8) | (dig(3) & 0xffL)
-      var k = 0
-      while (k < 16) {
-        val h = ((2 * k + 1) * x + (7 * k + 3)) % 2147483647L
-        if (h < m(k)) m(k) = h
-        k += 1
-      }
-      i += 1
-    }
+    val hs = MinhashSetsText.shingleHashes(text)
+    if (hs == null) return null
+    val m = MinhashSetsText.minhash(hs)
     val bands = new Array[Long](4)
     var b = 0
     while (b < 4) {

@@ -14,6 +14,14 @@ object Analytics {
   private def t(n: String)(implicit s: SparkSession, d: String) =
     Tables.t(s, d, n)
 
+  /** `revenue`: l_extendedprice·(1 − l_discount) summed in whole cents
+    * per row (the q_tpch_q11 rule, [[Mart.centSum]]), then divided
+    * once, so the order rows reach the aggregate in cannot move the
+    * emitted cents. Shared by Q3, Q5, Q7 and Q10. */
+  private def revenue =
+    (Mart.centSum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
+      / 100.0).as("revenue")
+
   /** Q3 shape — unshipped-order revenue by order for one segment. */
   val qTpchQ3 = Q(
     "q_tpch_q3",
@@ -28,14 +36,13 @@ object Analytics {
           col("o_orderkey") === col("l_orderkey") &&
           col("l_shipdate") > lit("1998-01-01").cast("timestamp_ntz"))
         .groupBy(col("o_orderkey"), col("o_orderdate"))
-        .agg(round(sum(col("l_extendedprice") *
-          (lit(1.0) - col("l_discount"))), 2).as("revenue"))
+        .agg(revenue)
         .orderBy(col("revenue").desc, col("o_orderkey"))
         .limit(10)
     },
     Some("""SELECT o_orderkey, o_orderdate,
-              round(sum(l_extendedprice * (1.0 - l_discount)), 2)
-                AS revenue
+              CAST(sum(CAST(floor(l_extendedprice * (1.0 - l_discount)
+                * 100 + 0.5) AS BIGINT)) AS BIGINT) / 100.0e0 AS revenue
             FROM customer
               JOIN orders ON c_custkey = o_custkey
               JOIN lineitem ON o_orderkey = l_orderkey
@@ -64,13 +71,12 @@ object Analytics {
           col("n_regionkey") === col("r_regionkey") &&
           col("r_name") === "ASIA")
         .groupBy(col("n_name"))
-        .agg(round(sum(col("l_extendedprice") *
-          (lit(1.0) - col("l_discount"))), 2).as("revenue"))
+        .agg(revenue)
         .orderBy(col("revenue").desc, col("n_name"))
     },
     Some("""SELECT n_name,
-              round(sum(l_extendedprice * (1.0 - l_discount)), 2)
-                AS revenue
+              CAST(sum(CAST(floor(l_extendedprice * (1.0 - l_discount)
+                * 100 + 0.5) AS BIGINT)) AS BIGINT) / 100.0e0 AS revenue
             FROM customer
               JOIN orders ON c_custkey = o_custkey
               JOIN lineitem ON o_orderkey = l_orderkey
@@ -97,14 +103,13 @@ object Analytics {
           col("c_nationkey") === col("n_nationkey"))
         .groupBy(col("c_custkey"), col("c_name"), col("n_name"),
           col("c_acctbal"))
-        .agg(round(sum(col("l_extendedprice") *
-          (lit(1.0) - col("l_discount"))), 2).as("revenue"))
+        .agg(revenue)
         .orderBy(col("revenue").desc, col("c_custkey"))
         .limit(20)
     },
     Some("""SELECT c_custkey, c_name, n_name, c_acctbal,
-              round(sum(l_extendedprice * (1.0 - l_discount)), 2)
-                AS revenue
+              CAST(sum(CAST(floor(l_extendedprice * (1.0 - l_discount)
+                * 100 + 0.5) AS BIGINT)) AS BIGINT) / 100.0e0 AS revenue
             FROM customer
               JOIN orders ON c_custkey = o_custkey
               JOIN lineitem ON o_orderkey = l_orderkey
@@ -241,12 +246,12 @@ object Analytics {
         .join(broadcast(n2), col("c_nationkey") === col("nk2"))
         .filter(col("supp_nation") =!= col("cust_nation"))
         .groupBy(col("supp_nation"), col("cust_nation"))
-        .agg(round(sum(col("l_extendedprice") *
-          (lit(1.0) - col("l_discount"))), 2).as("revenue"))
+        .agg(revenue)
         .orderBy(col("supp_nation"), col("cust_nation"))
     },
     Some("""SELECT supp_nation, cust_nation,
-              round(sum(volume), 2) AS revenue
+              CAST(sum(CAST(floor(volume * 100 + 0.5) AS BIGINT))
+                AS BIGINT) / 100.0e0 AS revenue
             FROM (
               SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
                 l_extendedprice * (1.0 - l_discount) AS volume
@@ -502,8 +507,7 @@ object Analytics {
     (sp, dir) => {
       implicit val s: SparkSession = sp
       implicit val d: String = dir
-      def centSum(x: org.apache.spark.sql.Column) =
-        sum(floor(x * 100 + 0.5).cast("long"))
+      import Mart.centSum
       def avgMicros(c: String) =
         expr(s"($c * 20000 + count_order) div (2 * count_order)") / lit(1e6)
       val discPrice = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
@@ -573,8 +577,9 @@ object Analytics {
       implicit val d: String = dir
       val bigOrders = t("lineitem")
         .groupBy(col("l_orderkey"))
-        .agg(round(sum(col("l_quantity")), 2).as("sum_qty"))
-        .filter(col("sum_qty") > 300.0)
+        .agg(Mart.centSum(col("l_quantity")).as("qty_c"))
+        .filter(col("qty_c") > 30000)
+        .select(col("l_orderkey"), (col("qty_c") / 100.0).as("sum_qty"))
       t("orders")
         .join(org.apache.spark.sql.functions.broadcast(bigOrders),
           col("o_orderkey") === col("l_orderkey"))
@@ -586,9 +591,12 @@ object Analytics {
     },
     Some("""SELECT c_custkey, c_name, o_orderkey, o_orderdate,
               o_totalprice, sum_qty
-            FROM (SELECT l_orderkey, round(sum(l_quantity), 2) AS sum_qty
+            FROM (SELECT l_orderkey,
+                    CAST(sum(CAST(floor(l_quantity * 100 + 0.5) AS BIGINT))
+                      AS BIGINT) / 100.0e0 AS sum_qty
                   FROM lineitem GROUP BY l_orderkey
-                  HAVING round(sum(l_quantity), 2) > 300.0) big
+                  HAVING sum(CAST(floor(l_quantity * 100 + 0.5) AS BIGINT))
+                    > 30000) big
               JOIN orders ON o_orderkey = l_orderkey
               JOIN customer ON o_custkey = c_custkey
             ORDER BY o_totalprice DESC NULLS LAST, o_orderkey NULLS FIRST

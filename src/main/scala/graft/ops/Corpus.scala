@@ -580,20 +580,23 @@ object Corpus {
     val tot = Insights.cacheOnce(s, d, "totg") {
       cnt.groupBy(col("w1")).agg(sum(col("n")).as("t"))
     }
+    // every token of a doc with at least 2 tokens sits in one of its
+    // bigrams, so the vocabulary is the distinct words of the count
+    // table: no second split + explode of the corpus
     val voc = Insights.cacheOnce(s, d, "vocg") {
-      Tables.t(s, d, "documents")
-        .select(split(col("text"), " ").as("ws"))
-        .filter(size(col("ws")) >= 2)
-        .select(explode(col("ws")).as("token"))
+      cnt.select(col("w1").as("token"))
+        .union(cnt.select(col("w2").as("token")))
         .agg(countDistinct(col("token")).as("v"))
     }
     (cnt, tot, voc)
   }
 
-  /** Full-corpus quantized conditional model (w1, w2, lqi), the
-    * [[bigramLq]] table derived from the shared [[fullModel]] and
-    * persisted once — q_text_perplexity and q_mix_curriculum join the
-    * identical table. */
+  /** Full-corpus add-1-smoothed conditional bigram model, quantized:
+    * (w1, w2, lqi = floor(-log2 P(w2|w1) * 1e6 + 0.5)), derived from
+    * the shared [[fullModel]] and persisted once — q_text_perplexity
+    * and q_mix_curriculum join the identical table. Vocabulary²-bounded
+    * (Heaps-sublinear in the corpus), so consumers join it WITHOUT a
+    * broadcast hint and let size statistics pick the strategy. */
   private[graft] def bigramLqShared(s: SparkSession, d: String): DataFrame =
     Insights.cacheOnce(s, d, "bigramlq") {
       val (cnt, tot, voc) = fullModel(s, d)
@@ -626,27 +629,6 @@ object Corpus {
     dsirDocBuckets(s, d).count()
     dsirLrFull(s, d).count()
     dsirLrTrain(s, d).count()
-  }
-
-  /** Add-1-smoothed conditional bigram model, quantized: (w1, w2,
-    * lqi = floor(-log2 P(w2|w1) * 1e6 + 0.5)). Vocabulary²-bounded —
-    * Heaps-sublinear in the corpus — so consumers join it WITHOUT a
-    * broadcast hint and let size statistics pick the strategy. */
-  private[graft] def bigramLq(docsDf: DataFrame): DataFrame = {
-    val cnt = bigramRows(docsDf).groupBy(col("w1"), col("w2"))
-      .agg(count(lit(1)).as("n"))
-    val tot = cnt.groupBy(col("w1")).agg(sum(col("n")).as("t"))
-    val voc = docsDf
-      .select(split(col("text"), " ").as("ws"))
-      .filter(size(col("ws")) >= 2)
-      .select(explode(col("ws")).as("token"))
-      .agg(countDistinct(col("token")).as("v"))
-    cnt.join(tot, "w1")
-      .crossJoin(broadcast(voc))
-      .select(col("w1"), col("w2"),
-        floor(-log((col("n") + 1).cast("double") /
-            (col("t") + col("v"))) / log(lit(2.0)) * 1000000 + 0.5)
-          .cast("long").as("lqi"))
   }
 
   /** Bits per bigram from a doc's exact integer score: `sumI`

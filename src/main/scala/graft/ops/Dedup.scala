@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
   * fixed seeds so the DuckDB oracle reproduces them bit-for-bit
   * (SURVEY §4.3 hard part 3: near-dup determinism).
   *
-  * Scale shape (100 TB): shingling is a narrow explode; signatures are
-  * two-phase hash aggregates keyed by doc; LSH banding turns the
+  * Scale shape (100 TB): shingling is a narrow explode; MinHash
+  * signatures are a narrow per-doc kernel; LSH banding turns the
   * quadratic all-pairs problem into equi-joins on (band, band_key) —
   * candidate generation never compares non-colliding docs. Exact-verify
   * runs only on candidates.
@@ -85,37 +85,47 @@ object Dedup {
          SELECT doc_id, list(h) AS hs, count(*) AS sz
          FROM shingles GROUP BY doc_id)"""
 
-  /** The 16 minhash permutations as codegen'd min-aggregate columns:
-    * h_i(x) = ((2i+1)x + 7i+3) mod (2^31 - 1), fixed affine seeds.
-    * (An array_min-over-collected-set formulation was tried and is
-    * SLOWER — higher-order lambdas evaluate interpreted, min aggregates
-    * ride whole-stage codegen.) */
-  private def minhashAggs: Seq[org.apache.spark.sql.Column] =
-    (0 until 16).map(i =>
-      min(expr(s"((${2 * i + 1}) * h + (${7 * i + 3})) % 2147483647"))
-        .as(s"m$i"))
-
-  /** One scan + one shuffle of the shingle table yields the 16 mins AND
-    * the exact shingle set + size for the verify stage — materialized
-    * once per (session, sfDir): the near-dup build reads it from two
-    * subtrees (band keys + verify sets) and the signature dump from a
-    * third, and each would otherwise re-run the shingle explode and the
-    * 16-min aggregate. Per-doc state is 16 longs + the distinct shingle
-    * set (bounded by doc length), so the persisted footprint is a small
-    * multiple of the corpus key space. */
+  /** Per-doc MinHash signature (doc_id, m0..m15, hs, sz): the 16
+    * permutation minima h_i(x) = ((2i+1)x + 7i+3) mod (2^31 - 1), the
+    * distinct shingle hashes `hs` (ascending) and their count `sz`,
+    * for every doc with at least one shingle. One narrow pass of the
+    * `minhash_sets_text` kernel over the documents (the routine the
+    * streaming index's `lsh_bands_text` packs its bands from), with no
+    * shingle explode and no aggregate, materialized once per (session,
+    * sfDir): the near-dup build reads it from two subtrees (band keys
+    * + verify sets) and the signature dump from a third. Per-doc state
+    * is 16 longs + the distinct shingle set (bounded by doc length).
+    *
+    * Precondition: `doc_id` is the key of `documents`. The oracle
+    * groups shingles by doc_id, so a repeated id would merge two texts
+    * there and give two rows here; the materializing job counts rows
+    * and distinct ids together and fails on a mismatch. */
   private val minhashSetsCache =
     scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
 
-  private def minhashWithSets(s: SparkSession, d: String): DataFrame =
+  private[graft] def minhashWithSets(s: SparkSession, d: String): DataFrame =
     minhashSetsCache.getOrElseUpdate(
       (s, d), {
-        val df = shingles(s, d)
-          .groupBy(col("doc_id"))
-          .agg(minhashAggs.head,
-            (minhashAggs.tail :+ collect_list(col("h")).as("hs")
-              :+ count(lit(1)).as("sz")): _*)
+        graft.functions.MinhashSetsText.register(s)
+        // The kernel is NULL exactly when the text has fewer than 5
+        // tokens; those rows are dropped by that test on the text.
+        // Filtering the kernel's NULLs instead would be pushed below
+        // the projection and the fan-out, evaluating it twice, once on
+        // a single core.
+        val df = Tables.fanOutNarrow(s, Tables.t(s, d, "documents")
+            .select(col("doc_id"), col("text"))
+            .filter(size(split(col("text"), " ")) >= 5), col("doc_id"))
+          .select(col("doc_id"), expr("minhash_sets_text(text)").as("sig"))
+          .select(col("doc_id"), col("sig.*"))
           .persist()
-        df.count()
+        val c = df.agg(count(lit(1)), countDistinct(col("doc_id"))).head()
+        if (c.getLong(0) != c.getLong(1)) {
+          df.unpersist()
+          throw new IllegalArgumentException(
+            s"documents.doc_id must be a unique non-null key for MinHash " +
+              s"signatures: ${c.getLong(0)} documents with shingles carry " +
+              s"${c.getLong(1)} distinct doc_id values")
+        }
         df
       })
 

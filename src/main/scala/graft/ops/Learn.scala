@@ -313,15 +313,26 @@ object Learn {
             floor(size(col("ws")) / lit(10)).cast("long")
               .cast("string")))).as("ws"))
       val train = base.filter(col("doc_id") % 5 =!= 0)
-      val trainToks = train
+      // ONE explode of the training fold: the (term, label) count grid
+      // is the sufficient statistic for the vocabulary size, the
+      // per-label token totals and the log-likelihoods, and the
+      // per-label doc counts give the prior and (summed) its
+      // denominator. Both grids are tiny; checkpointing them stops each
+      // consumer from re-deriving `base` (split, translate, the rlike
+      // filter lambda) and re-exploding it, as q_ml_naive_bayes does.
+      val counts = train
         .select(col("label"), explode(col("ws")).as("term"))
-      val vocab = trainToks.agg(countDistinct(col("term")).as("v"))
-      val nDocs = train.agg(count(lit(1)).as("n_docs"))
-      val cls = trainToks.groupBy(col("label").as("ml"))
-        .agg(count(lit(1)).as("t_l"))
-        .join(train.groupBy(col("label").as("dl"))
-            .agg(count(lit(1)).as("docs_l")),
-          col("ml") === col("dl"))
+        .groupBy(col("term").as("mt"), col("label").as("ll"))
+        .agg(count(lit(1)).as("c"))
+        .localCheckpoint()
+      val vocab = counts.agg(countDistinct(col("mt")).as("v"))
+      val labelDocs = train.groupBy(col("label").as("dl"))
+        .agg(count(lit(1)).as("docs_l"))
+        .localCheckpoint()
+      val nDocs = labelDocs.agg(sum(col("docs_l")).as("n_docs"))
+      val cls = counts.groupBy(col("ll").as("ml"))
+        .agg(sum(col("c")).as("t_l"))
+        .join(labelDocs, col("ml") === col("dl"))
         .crossJoin(broadcast(vocab))
         .crossJoin(broadcast(nDocs))
         .select(col("ml"), col("t_l"), col("v"),
@@ -329,9 +340,7 @@ object Learn {
             1000000 + 0.5).cast("long").as("prior_i"),
           floor(log(lit(1.0) / (col("t_l") + col("v"))) * 1000000 + 0.5)
             .cast("long").as("unseen_i"))
-      val llh = trainToks
-        .groupBy(col("term").as("mt"), col("label").as("ll"))
-        .agg(count(lit(1)).as("c"))
+      val llh = counts
         .join(broadcast(cls), col("ll") === col("ml"))
         .select(col("mt"), col("ll"),
           floor(log((col("c") + 1).cast("double") /

@@ -20,8 +20,11 @@ object Mart {
 
   /** Sum of a money value rounded per row to whole cents, as BIGINT:
     * exact, so independent of the order rows arrive in (a double sum's
-    * last bits are not, enough to flip round(x, 2) on large sums). */
-  private def centSum(x: org.apache.spark.sql.Column) =
+    * last bits are not, enough to flip round(x, 2) on large sums). The
+    * one Spark-side definition for every TPC-H shape here and in
+    * Analytics; oracles spell it
+    * `CAST(sum(CAST(floor(x * 100 + 0.5) AS BIGINT)) AS BIGINT)`. */
+  private[ops] def centSum(x: org.apache.spark.sql.Column) =
     sum(floor(x * 100 + 0.5).cast("long"))
 
   /** Q2 shape — min-cost supplier per part: for each mid-size LARGE

@@ -974,11 +974,14 @@ object StreamOps {
     * Dedup.bandsCteSql still mirrors it exactly. */
   private[graft] def lshBandSignatures(docs: DataFrame): DataFrame = {
     graft.functions.LshBandsText.register(docs.sparkSession)
+    // posexplode emits no row for a NULL array (fewer than 5 tokens).
+    // The kernel sits inside the generator rather than in a column of
+    // its own: a NULL filter or the inferred `size > 0` guard on such
+    // a column would be pushed below the projection and run the
+    // kernel again per row.
     docs
-      .withColumn("bands", expr("lsh_bands_text(text)"))
-      .filter(col("bands").isNotNull)
       .select(col("doc_id"),
-        posexplode(col("bands")).as(Seq("band", "band_key")))
+        posexplode(expr("lsh_bands_text(text)")).as(Seq("band", "band_key")))
       .select(col("doc_id"), col("band").cast("long").as("band"),
         col("band_key"))
   }
@@ -1187,9 +1190,9 @@ object StreamOps {
 
   /** Streaming perplexity telemetry (q_stream_perplexity): arriving
     * documents are scored against the STATIC add-1 bigram model
-    * (Corpus.bigramLq, vocabulary²-bounded, planned once per
-    * micro-batch) and rolled up to per-source bits-per-bigram — the
-    * live quality monitor that flags a source whose new crawl drifts
+    * (Corpus.bigramLqShared, the persisted full-corpus model,
+    * vocabulary²-bounded) and rolled up to per-source bits-per-bigram —
+    * the live quality monitor that flags a source whose new crawl drifts
     * from the language model of the corpus it was tuned on. The stream
     * side is one scan-local bigram explode + the model equi-join (no
     * broadcast hint — the model is Heaps-sublinear, statistics pick
@@ -1439,6 +1442,15 @@ object StreamOps {
     (out.toSeq, kept.toSeq)
   }
 
+  /** State and output encoders of [[anomalyLocal]], built once per JVM.
+    * Building the `Seq[AnomObs]` encoder names its `MapObjects` lambda
+    * variable from a JVM-wide counter, so an encoder built per run gave
+    * every run new generated source and one new compile. */
+  private lazy val anomStateEnc: org.apache.spark.sql.Encoder[Seq[AnomObs]] =
+    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[AnomObs]]()
+  private lazy val anomFlagEnc: org.apache.spark.sql.Encoder[AnomFlag] =
+    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[AnomFlag]()
+
   /** The stateful transform alone, over any (user, event, us, value)
     * stream — shared by the registered query and StreamSpec's
     * MemoryStream harness. */
@@ -1457,7 +1469,7 @@ object StreamOps {
             st.getOption.getOrElse(Seq.empty))
           st.update(tail)
           flagged.map(_.copy(user_id = uid)).iterator
-      }
+      }(anomStateEnc, anomFlagEnc)
       .toDF()
   }
 

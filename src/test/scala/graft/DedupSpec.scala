@@ -385,4 +385,93 @@ class DedupSpec extends SparkSuite {
       assert(r.getAs[Long]("rouge1_f_micro") > 300000L)
     }
   }
+
+  /** Edge texts for the MinHash kernel: NULL, too short, exactly one
+    * shingle, a 5-gram repeated inside one doc, empty tokens from
+    * double, leading and trailing spaces, only spaces, and multi-byte
+    * UTF-8 — plus the sf0.001 corpus under shifted ids. */
+  private lazy val kernelDir: String = {
+    val edge = Seq[(Long, String)](
+      1L -> null,
+      2L -> "",
+      3L -> "a b c d",
+      4L -> "a b c d e",
+      5L -> Seq.fill(4)("x y z u v").mkString(" "),
+      6L -> "  p  q r s t u  ",
+      7L -> "     ",
+      8L -> "héllo wörld 日本語 テキスト ñandú 😀 ok ünïcödé",
+      9L -> (mkText(9, 30) + " " + mkText(9, 30)))
+      .toDF("doc_id", "text")
+    val corpus = Tables.t(spark, sf0, "documents")
+      .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
+    fixtureDir("dedup_kernel")("documents" -> edge.unionByName(corpus))
+  }
+
+  test("minhash kernel equals the shingle-explode aggregate on edge texts") {
+    // the reference is the batch definition the kernel replaced: HOF
+    // shingles, one md5 per shingle, then per-doc min / collect_set
+    val h =
+      "CAST(conv(substring(md5(CAST(sh AS BINARY)), 1, 8), 16, 10) AS BIGINT)"
+    val mins = (0 until 16).map(i =>
+      min(expr(s"((${2 * i + 1}) * h + (${7 * i + 3})) % 2147483647")))
+    val want = Tables.t(spark, kernelDir, "documents")
+      .withColumn("toks", split(col("text"), " "))
+      .withColumn("sh", explode(expr(
+        """CASE WHEN size(toks) >= 5
+             THEN transform(sequence(1, size(toks) - 4),
+                    i -> concat_ws(' ', slice(toks, i, 5)))
+             ELSE array() END""")))
+      .select(col("doc_id"), expr(h).as("h"))
+      .groupBy(col("doc_id"))
+      .agg(mins.head, mins.tail ++ Seq(
+        sort_array(collect_set(col("h"))), countDistinct(col("h"))): _*)
+    val fix = ops.Dedup.minhashWithSets(spark, kernelDir)
+    val got = fix.select(col("doc_id") +: (0 until 16).map(i => col(s"m$i")) :+
+      sort_array(col("hs")) :+ col("sz"): _*)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.map {
+        case a: scala.collection.Seq[_] => a.toList
+        case v => v
+      }).sortBy(_.head.asInstanceOf[Long]).toSeq
+    val (g, w) = (rows(got), rows(want))
+    assert(g.map(_.head) === w.map(_.head))
+    assert(g === w)
+    // no shingle for NULL, empty or 4-token text; one for 5 tokens;
+    // the repeated 5-gram counts once; spaces-only text has the
+    // single shingle of four spaces
+    val sz = g.map(r => r.head -> r.last).toMap
+    assert(Seq(1L, 2L, 3L).forall(id => !sz.contains(id)))
+    assert(sz(4L) === 1L)
+    assert(sz(5L) === 5L)
+    assert(sz(7L) === 1L)
+    // one narrow pass: no shingle explode and no per-doc aggregate
+    val plan = fix.queryExecution.executedPlan.toString
+    Seq("Generate", "explode", "collect_list", "ObjectHashAggregate",
+        "HashAggregate").foreach(op =>
+      assert(!plan.contains(op), s"$op in the signature plan:\n$plan"))
+    // the streaming index packs its bands from the same minima
+    graft.functions.LshBandsText.register(spark)
+    val bands = Tables.t(spark, kernelDir, "documents")
+      .select(col("doc_id"), expr("lsh_bands_text(text)").as("b"))
+      .filter(col("b").isNotNull).collect()
+      .map(r => r.getLong(0) -> r.getSeq[Long](1).toList).toMap
+    assert(bands.keySet === g.map(_.head.asInstanceOf[Long]).toSet)
+    g.foreach { r =>
+      val m = r.slice(1, 17).map(_.asInstanceOf[Long])
+      assert(bands(r.head.asInstanceOf[Long]) === (0 until 4).map(b =>
+        m(4 * b) + 31L * m(4 * b + 1) + 961L * m(4 * b + 2) +
+          29791L * m(4 * b + 3)).toList)
+    }
+  }
+
+  test("minhash signatures fail clearly on a repeated doc_id") {
+    val docs = Seq((1L, mkText(1, 20)), (2L, mkText(2, 20)),
+        (1L, mkText(3, 20)))
+      .toDF("doc_id", "text")
+    val d2 = fixtureDir("dedup_dupkey")("documents" -> docs)
+    val e = intercept[IllegalArgumentException](
+      q("q_dedup_minhash", d2).collect())
+    assert(e.getMessage.contains("doc_id must be a unique non-null key"))
+    assert(e.getMessage.contains("3 documents with shingles carry 2 distinct"))
+  }
 }

@@ -18,10 +18,21 @@ class SumOrderSpec extends SparkSuite {
     * Large sums make the last-bit error of a double sum visible at two
     * decimals. */
   private val layoutsByScale =
-    scala.collection.mutable.Map[Long, (String, String)]()
+    scala.collection.mutable.Map[(Long, Long, Boolean), (String, String)]()
 
-  private def layouts(k: Long): (String, String) =
-    layoutsByScale.getOrElseUpdate(k, {
+  /** No sf0.001 supplier is in NATION_1 or NATION_2, the pair
+    * q_tpch_q7 reports, so its layouts swap those names with the
+    * nations of two suppliers whose parts ship to each other's
+    * customers. */
+  private val q7Names = Map(1L -> "NATION_18", 2L -> "NATION_19",
+    18L -> "NATION_1", 19L -> "NATION_2")
+
+  /** With `qtyK` > 0, every whole-unit quantity q also becomes
+    * q·qtyK + 0.37: a double sum of whole numbers is exact at any
+    * scale, so only a cent part can show the order of the sum. */
+  private def layouts(k: Long, qtyK: Long = 0L,
+      renamed: Boolean = false): (String, String) =
+    layoutsByScale.getOrElseUpdate((k, qtyK, renamed), {
       def scaled(t: String, c: String) = {
         val df = Tables.t(spark, sf0, t)
         df.select(df.columns.map { n =>
@@ -29,20 +40,32 @@ class SumOrderSpec extends SparkSuite {
           if (n == c) ((cents * k + cents % 100) / 100).as(n) else col(n)
         }: _*)
       }
-      val li = scaled("lineitem", "l_extendedprice")
+      val li0 = scaled("lineitem", "l_extendedprice")
+      val li = (if (qtyK > 0) li0.withColumn("l_quantity",
+          (col("l_quantity") * qtyK * 100 + 37) / 100) else li0)
         .withColumn("rid", monotonically_increasing_id())
-      val dims = Seq("part" -> scaled("part", "p_retailprice")) ++
-        Seq("orders", "supplier", "nation").map(n => n -> Tables.t(spark, sf0, n))
-      val one = fixtureDir(s"sumorder_${k}_one")(
+      val nation = Tables.t(spark, sf0, "nation")
+      val names = q7Names.foldLeft(col("n_name")) { case (c, (key, n)) =>
+        when(col("n_nationkey") === key, lit(n)).otherwise(c)
+      }
+      val dims = Seq("part" -> scaled("part", "p_retailprice"),
+        "nation" -> (if (renamed) nation.withColumn("n_name", names)
+          else nation)) ++
+        Seq("orders", "supplier", "customer", "region")
+          .map(n => n -> Tables.t(spark, sf0, n))
+      val name = s"sumorder_$k" + (if (qtyK > 0) s"_q$qtyK" else "") +
+        (if (renamed) "_n" else "")
+      val one = fixtureDir(s"${name}_one")(
         ("lineitem" -> li.orderBy("rid").drop("rid")) +: dims: _*)
-      val five = fixtureDir(s"sumorder_${k}_five")(dims: _*)
+      val five = fixtureDir(s"${name}_five")(dims: _*)
       li.repartition(5, col("rid")).drop("rid")
         .write.mode("overwrite").parquet(s"$five/lineitem.parquet")
       (one, five)
     })
 
-  private def sameAcrossLayouts(id: String, k: Long): Array[Row] = {
-    val (one, five) = layouts(k)
+  private def sameAcrossLayouts(id: String, k: Long, qtyK: Long = 0L,
+      renamed: Boolean = false): Array[Row] = {
+    val (one, five) = layouts(k, qtyK, renamed)
     val a = q(id, one).collect()
     val b = q(id, five).collect()
     assert(a.nonEmpty)
@@ -84,6 +107,27 @@ class SumOrderSpec extends SparkSuite {
     test(s"$id revenue does not depend on the file layout") {
       sameAcrossLayouts(id, 3000000000L)
     }
+  }
+
+  // At price scale 10⁹ the double revenue sums of these four differed
+  // between the layouts (e.g. q3 4.137335805000048E14 vs
+  // 4.1373358050000475E14; largest cent sum ~4.6·10¹⁷).
+  Seq("q_tpch_q3", "q_tpch_q5", "q_tpch_q10").foreach { id =>
+    test(s"$id revenue does not depend on the file layout") {
+      sameAcrossLayouts(id, 1000000000L)
+    }
+  }
+
+  test("q_tpch_q7 revenue does not depend on the file layout") {
+    assert(sameAcrossLayouts("q_tpch_q7", 1000000000L, renamed = true)
+      .length === 2)
+  }
+
+  // Quantities are whole numbers, so no price scale moves q18's
+  // double sum; with a cent part at 10¹² per unit it differed between
+  // the layouts (1.0600000000000186E14 vs 1.0600000000000184E14).
+  test("q_tpch_q18 quantity sums do not depend on the file layout") {
+    sameAcrossLayouts("q_tpch_q18", 1L, qtyK = 1000000000000L)
   }
 
   test("bits per bigram rounds a half-millionth tie up, like the oracle") {
