@@ -154,31 +154,10 @@ object Bench {
     // itself, not whichever registry neighbor ran first and paid for
     // the shared build (r9: q_dedup_cluster_keep read 3.3 → 8.7 s from
     // registry-order accounting alone, with an unchanged plan).
-    val warmDigest = scala.collection.mutable.ArrayBuffer[String]()
-    def warmLog(nm: String)(f: => Unit): Unit = {
-      val t0 = System.nanoTime()
-      try {
-        f
-        System.err.println(
-          f"[bench] warmed $nm in ${(System.nanoTime() - t0) / 1e9}%.1f s")
-        warmDigest += f"$nm=${(System.nanoTime() - t0) / 1e9}%.1fs"
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] warm $nm failed: ${e.getMessage}")
-        warmDigest += s"$nm=FAILED(${e.getMessage})"
-      }
+    val warmDigest = Fixpoints.warmAll(spark, sfDir, "bench").map {
+      case (nm, Right(sec)) => f"$nm=$sec%.1fs"
+      case (nm, Left(err)) => s"$nm=FAILED($err)"
     }
-    warmLog("dedup fixpoints")(ops.Dedup.warmShared(spark, sfDir))
-    warmLog("graph fixpoints")(ops.Insights.warmShared(spark, sfDir))
-    warmLog("graph peels")(ops.GraphScores.warmShared(spark, sfDir))
-    warmLog("day grid")(ops.Series.warmShared(spark, sfDir))
-    warmLog("anchor nn")(ops.Vector.warmShared(spark, sfDir))
-    warmLog("landmark bfs")(ops.Causal.warmShared(spark, sfDir))
-    warmLog("bigram models")(ops.Corpus.warmShared(spark, sfDir))
-    warmLog("mixture models")(ops.Doremi.warmShared(spark, sfDir))
-    warmLog("curate stages")(ops.TextOps.warmShared(spark, sfDir))
-    warmLog("quality scores")(ops.Learn.warmShared(spark, sfDir))
-    warmLog("kmeans cents")(ops.Pipeline.warmShared(spark, sfDir))
-    warmLog("phash frame")(ops.Multimodal.warmShared(spark, sfDir))
     // Buffer-pool warm was A/B'd here and REJECTED: pinning the driver
     // tables in columnar memory sped the TPC-H tier ~20% but thrashed
     // the storage pool the iterative tier needs for its own persisted

@@ -341,19 +341,12 @@ survivors, examined and deliberately kept:
       .getOrCreate()
     Tables.configure(spark)
     spark.sparkContext.setLogLevel("ERROR")
-    // Warm the shared fixpoint stores first (same list as Bench and
-    // PlanGuardSpec): a store consumer's plan is an InMemoryTableScan
-    // once the store exists, and the fresh-pipeline form it would show
-    // before any consumer ran is a state PLANS.md should not document —
-    // headliner ORDER must not decide which form lands in the file.
-    Seq[(SparkSession, String) => Unit](
-      ops.Dedup.warmShared, ops.Insights.warmShared,
-      ops.GraphScores.warmShared, ops.Series.warmShared,
-      ops.Vector.warmShared, ops.Causal.warmShared,
-      ops.Corpus.warmShared, ops.Doremi.warmShared,
-      ops.TextOps.warmShared, ops.Learn.warmShared,
-      ops.Multimodal.warmShared)
-      .foreach(w => try w(spark, sfDir) catch { case _: Throwable => () })
+    // Warm the shared fixpoint stores first (Bench's list): a store
+    // consumer's plan is an InMemoryTableScan once the store exists,
+    // and the fresh-pipeline form it would show before any consumer
+    // ran is a state PLANS.md should not document — headliner ORDER
+    // must not decide which form lands in the file.
+    Fixpoints.warmAll(spark, sfDir, "plandump")
     val sb = new StringBuilder
     sb.append("# PLANS — headline physical plans (generated)\n\n")
     sb.append("Regenerate: `sbt \"runMain graft.PlanDump\"` ")

@@ -105,7 +105,7 @@ object Tables {
     * compute-heavy consumers (q_sim_hardneg 2.1→3.1 s, q_ml_kfold
     * 2.1→2.5 s warm) even as it fixed the iterative tier. The
     * right-sizing that survived the A/B is row-measured and local to
-    * the shared-fixpoint memo: see Insights.cacheOnce.
+    * the shared-fixpoint memo: see Fixpoints.cacheOnce.
     *
     * Codegen cache cap. Spark keeps every Janino-compiled class in one
     * JVM-wide LRU of `spark.sql.codegen.cache.maxEntries` entries

@@ -253,12 +253,12 @@ object ScaleSmoke {
     * tokens + replica-suffixed sources, so vocabularies and dedup
     * blocks are disjoint across replicas — the same construction as
     * the 10× corpus). Times:
-    *  - the shared anchor-NN fixpoint BUILD (Vector.warmShared — the
+    *  - the shared anchor-NN fixpoint BUILD (warm step `anchor nn` — the
     *    128-anchor-capped pair stage on the codegen FloatL2Q path) and
     *    its two consumers. The cap claim is pairs = 128·|block| per
     *    label — LINEAR — so the ratio must sit near 100, never the
     *    ~10 000 an uncapped block self-join would show.
-    *  - the shared DEDUP fixpoint chain (Dedup.warmShared: per-doc
+    *  - the shared DEDUP fixpoint chain (warm step `dedup fixpoints`: per-doc
     *    minhash sketches, the 4×4-band LSH candidate join + exact
     *    Jaccard verify, pointer-doubled components, simhash, distinct
     *    bigrams) and its two headline consumers. The banding claim is
@@ -331,13 +331,15 @@ object ScaleSmoke {
         val t0 = System.nanoTime(); f
         label -> (System.nanoTime() - t0) / 1e9
       }
+      val steps = Fixpoints.warmSteps.toMap
+      def warm(step: String) = t(s"fixpoint:$step")(steps(step)(spark, dir))
       Seq(
-        t("anchor_nn_fixpoint")(ops.Vector.warmShared(spark, dir)),
+        warm("anchor nn"),
         t("q_embed_intrinsic_dim")(
           SparkEntry.queries("q_embed_intrinsic_dim")(spark, dir).count()),
         t("q_embed_hubness")(
           SparkEntry.queries("q_embed_hubness")(spark, dir).count()),
-        t("dedup_fixpoint")(ops.Dedup.warmShared(spark, dir)),
+        warm("dedup fixpoints"),
         t("q_dedup_near")(
           SparkEntry.queries("q_dedup_near")(spark, dir).count()),
         t("q_dedup_components")(
@@ -346,7 +348,7 @@ object ScaleSmoke {
         // text tier's corpus-width stage: map-side-combined aggregates
         // whose output is vocabulary²-bounded, so the BUILD must track
         // the corpus ~linearly and its consumers stay flat
-        t("bigram_models_fixpoint")(ops.Corpus.warmShared(spark, dir)),
+        warm("bigram models"),
         t("q_text_perplexity")(
           SparkEntry.queries("q_text_perplexity")(spark, dir).count()),
         // the graph tier's shared fixpoints are documents-derived
@@ -356,8 +358,8 @@ object ScaleSmoke {
         // ~2·log2 n: 38 hops at 500k docs vs 26 at 5k, so expect the
         // edge-linear 100 plus a ~1.5× round-count factor, never the
         // Θ(n²) an unbanded wedge join would show)
-        t("graph_edges_fixpoint")(ops.Insights.warmShared(spark, dir)),
-        t("graph_peels_fixpoint")(ops.GraphScores.warmShared(spark, dir)),
+        warm("graph fixpoints"),
+        warm("graph peels"),
         t("q_graph_ktruss")(
           SparkEntry.queries("q_graph_ktruss")(spark, dir).count()),
         t("q_graph_bfs")(
@@ -416,28 +418,13 @@ object ScaleSmoke {
     // JVM/codegen warmup so 1× doesn't absorb JIT cost
     spark.range(2000000L).selectExpr("sum(id)").collect()
     // Warm the SAME shared fixpoints Bench warms, per dir, timing each
-    // family as its own row — so per-query rows measure query-local
-    // cost (the bench's accounting) and the fixpoint builds' own 10×
-    // growth is measured instead of landing on whichever id ran first.
-    val warms: Seq[(String, (SparkSession, String) => Unit)] = Seq(
-      "fixpoint:dedup" -> ops.Dedup.warmShared _,
-      "fixpoint:graph" -> ops.Insights.warmShared _,
-      "fixpoint:peels" -> ops.GraphScores.warmShared _,
-      "fixpoint:daygrid" -> ops.Series.warmShared _,
-      "fixpoint:anchor_nn" -> ops.Vector.warmShared _,
-      "fixpoint:landmark_bfs" -> ops.Causal.warmShared _,
-      "fixpoint:bigram_models" -> ops.Corpus.warmShared _,
-      "fixpoint:mixture_models" -> ops.Doremi.warmShared _,
-      "fixpoint:curate_stages" -> ops.TextOps.warmShared _,
-      "fixpoint:quality_scores" -> ops.Learn.warmShared _,
-      "fixpoint:phash_frame" -> ops.Multimodal.warmShared _)
-    def warm(dir: String): Seq[(String, Double)] = warms.map {
-      case (n, f) =>
-        val t0 = System.nanoTime()
-        try f(spark, dir) catch { case e: Throwable =>
-          System.err.println(s"[smoke] warm $n failed: ${e.getMessage}") }
-        n -> (System.nanoTime() - t0) / 1e9
-    }
+    // step as its own row — so per-query rows measure query-local cost
+    // (the bench's accounting) and the fixpoint builds' own 10× growth
+    // is measured instead of landing on whichever id ran first.
+    def warm(dir: String): Seq[(String, Double)] =
+      Fixpoints.warmAll(spark, dir, "smoke").map { case (n, r) =>
+        s"fixpoint:$n" -> r.getOrElse(Double.NaN)
+      }
     def run(dir: String): Map[String, Double] = runIds.map { id =>
       val t0 = System.nanoTime()
       SparkEntry.queries(id)(spark, dir).count()

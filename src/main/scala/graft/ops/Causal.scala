@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, Tables}
+import graft.{Fixpoints, Q, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -318,7 +318,7 @@ object Causal {
     * accuracy, featimp's permutation harness) fit the identical model,
     * so the 3-pass GD chain runs once per (session, dir). */
   private def logregWeights(s: SparkSession, d: String): DataFrame =
-    Insights.cacheOnce(s, d, "logregw") { logregWeightsBuild(s, d) }
+    Fixpoints.cacheOnce(s, d, "logregw") { logregWeightsBuild(s, d) }
 
   private def logregWeightsBuild(s: SparkSession, d: String): DataFrame = {
     val base = logregBase(s, d)
@@ -1644,23 +1644,18 @@ object Causal {
     * consumer asks for (6): a 6-round min-dist table restricted to
     * dist ≤ r IS the r-round table (a node first reached by round r
     * has dist ≤ r), so one build serves all three instead of three
-    * fresh 4-6 round BFS runs per bench pass. Bounded like
-    * Insights.cachedDf. */
-  private val maxLbfsCache = 64
-  private val lbfsCache = scala.collection.concurrent
-    .TrieMap[(SparkSession, String), DataFrame]()
+    * fresh 4-6 round BFS runs per bench pass. Its release frees every
+    * round's checkpoint blocks. */
   private val lbfsMaxRounds = 6
 
-  private def landmarkBfs(s: SparkSession, d: String,
+  private[graft] def landmarkBfs(s: SparkSession, d: String,
       rounds: Int): DataFrame = {
     require(rounds <= lbfsMaxRounds,
       s"landmarkBfs memo built at radius $lbfsMaxRounds < $rounds")
-    if (lbfsCache.size >= maxLbfsCache && !lbfsCache.contains((s, d)))
-      lbfsCache.synchronized {
-        if (lbfsCache.size >= maxLbfsCache) lbfsCache.clear()
-      }
-    val full = lbfsCache.getOrElseUpdate((s, d),
-      landmarkBfsBuild(s, d, lbfsMaxRounds))
+    val full = Fixpoints.memo[DataFrame](s, d, "landmarkbfs") {
+      val perRound = landmarkBfsBuild(s, d, lbfsMaxRounds)
+      Fixpoints.holding(perRound.last, perRound: _*)
+    }
     if (rounds >= lbfsMaxRounds) full
     else full.filter(col("dist") <= rounds.toLong)
   }
@@ -1676,8 +1671,9 @@ object Causal {
     ()
   }
 
+  /** The checkpointed labels after each round; the last is the result. */
   private def landmarkBfsBuild(s: SparkSession, d: String,
-      rounds: Int): DataFrame = {
+      rounds: Int): Seq[DataFrame] = {
     val und = Insights.undirectedLinkEdges(s, d)
     val edges = und.select(col("a").as("u"), col("b").as("w"))
       .unionAll(und.select(col("b").as("u"), col("a").as("w")))
@@ -1687,17 +1683,16 @@ object Causal {
     s.conf.set("spark.sql.shuffle.partitions",
       math.min(8, saved.toInt).toString)
     try {
-      var labels = s.range(8)
+      val seed = s.range(8)
         .select(col("id").as("l"), col("id").as("v"), lit(0L).as("dist"))
-      for (_ <- 1 to rounds) {
+      (1 to rounds).scanLeft(seed) { (labels, _) =>
         val cand = labels.join(edges, col("v") === col("u"))
           .select(col("l"), col("w").as("v"),
             (col("dist") + 1L).as("dist"))
-        labels = labels.unionAll(cand)
+        labels.unionAll(cand)
           .groupBy(col("l"), col("v")).agg(min(col("dist")).as("dist"))
           .localCheckpoint() // eager: materialize under the capped width
-      }
-      labels
+      }.tail
     } finally s.conf.set("spark.sql.shuffle.partitions", saved)
   }
 

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, Tables}
+import graft.{Fixpoints, Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -332,7 +332,7 @@ object Corpus {
     * bounded by docs × min(doc bigrams, [[DsirBuckets]]) — the
     * explode itself never persists. */
   private[graft] def dsirDocBuckets(s: SparkSession, d: String): DataFrame =
-    Insights.cacheOnce(s, d, "dsirbuckets") {
+    Fixpoints.cacheOnce(s, d, "dsirbuckets") {
       dsirFeatures(docs(s, d))
         .groupBy(col("doc_id"), col("source"), col("b"))
         .agg(count(lit(1)).as("c"))
@@ -342,7 +342,7 @@ object Corpus {
     * persisted once — q_mix_dsir and q_mix_dsir_sample broadcast the
     * identical table. */
   private[graft] def dsirLrFull(s: SparkSession, d: String): DataFrame =
-    Insights.cacheOnce(s, d, "dsirlrfull") {
+    Fixpoints.cacheOnce(s, d, "dsirlrfull") {
       dsirLogRatioFromCounts(dsirDocBuckets(s, d))
     }
 
@@ -351,7 +351,7 @@ object Corpus {
     * static join re-plans its static side every batch; an un-persisted
     * model would re-fit on the whole corpus each time). */
   private[graft] def dsirLrTrain(s: SparkSession, d: String): DataFrame =
-    Insights.cacheOnce(s, d, "dsirlrtrain") {
+    Fixpoints.cacheOnce(s, d, "dsirlrtrain") {
       dsirLogRatioFromCounts(
         dsirDocBuckets(s, d).filter(col("doc_id") % 10 < 8))
     }
@@ -559,7 +559,7 @@ object Corpus {
     * tokens) rows — a distributed persist, never collected or
     * broadcast. */
   private[graft] def docBigrams(s: SparkSession, d: String): DataFrame =
-    Insights.cacheOnce(s, d, "docbigrams") {
+    Fixpoints.cacheOnce(s, d, "docbigrams") {
       bigramRows(Tables.t(s, d, "documents"))
         .groupBy(col("doc_id"), col("source"), col("w1"), col("w2"))
         .agg(count(lit(1)).as("c"))
@@ -573,17 +573,17 @@ object Corpus {
     * side) and [[bigramLqShared]]. */
   private[graft] def fullModel(
       s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) = {
-    val cnt = Insights.cacheOnce(s, d, "cntg") {
+    val cnt = Fixpoints.cacheOnce(s, d, "cntg") {
       docBigrams(s, d).groupBy(col("w1"), col("w2"))
         .agg(sum(col("c")).as("n"))
     }
-    val tot = Insights.cacheOnce(s, d, "totg") {
+    val tot = Fixpoints.cacheOnce(s, d, "totg") {
       cnt.groupBy(col("w1")).agg(sum(col("n")).as("t"))
     }
     // every token of a doc with at least 2 tokens sits in one of its
     // bigrams, so the vocabulary is the distinct words of the count
     // table: no second split + explode of the corpus
-    val voc = Insights.cacheOnce(s, d, "vocg") {
+    val voc = Fixpoints.cacheOnce(s, d, "vocg") {
       cnt.select(col("w1").as("token"))
         .union(cnt.select(col("w2").as("token")))
         .agg(countDistinct(col("token")).as("v"))
@@ -598,7 +598,7 @@ object Corpus {
     * (Heaps-sublinear in the corpus), so consumers join it WITHOUT a
     * broadcast hint and let size statistics pick the strategy. */
   private[graft] def bigramLqShared(s: SparkSession, d: String): DataFrame =
-    Insights.cacheOnce(s, d, "bigramlq") {
+    Fixpoints.cacheOnce(s, d, "bigramlq") {
       val (cnt, tot, voc) = fullModel(s, d)
       cnt.join(tot, Seq("w1"))
         .crossJoin(broadcast(voc))
@@ -612,7 +612,7 @@ object Corpus {
     * once: q_mix_doremi (general side) and q_text_contrast (general
     * side) consume the identical table. */
   private[graft] def genScore(s: SparkSession, d: String): DataFrame =
-    Insights.cacheOnce(s, d, "genscore") {
+    Fixpoints.cacheOnce(s, d, "genscore") {
       val (cg, tg, vg) = fullModel(s, d)
       scoreUnder(docBigrams(s, d), cg, tg, vg)
     }

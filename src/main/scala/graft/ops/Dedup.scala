@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, Tables}
+import graft.{Fixpoints, Q, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -100,34 +100,30 @@ object Dedup {
     * groups shingles by doc_id, so a repeated id would merge two texts
     * there and give two rows here; the materializing job counts rows
     * and distinct ids together and fails on a mismatch. */
-  private val minhashSetsCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
-
   private[graft] def minhashWithSets(s: SparkSession, d: String): DataFrame =
-    minhashSetsCache.getOrElseUpdate(
-      (s, d), {
-        graft.functions.MinhashSetsText.register(s)
-        // The kernel is NULL exactly when the text has fewer than 5
-        // tokens; those rows are dropped by that test on the text.
-        // Filtering the kernel's NULLs instead would be pushed below
-        // the projection and the fan-out, evaluating it twice, once on
-        // a single core.
-        val df = Tables.fanOutNarrow(s, Tables.t(s, d, "documents")
-            .select(col("doc_id"), col("text"))
-            .filter(size(split(col("text"), " ")) >= 5), col("doc_id"))
-          .select(col("doc_id"), expr("minhash_sets_text(text)").as("sig"))
-          .select(col("doc_id"), col("sig.*"))
-          .persist()
-        val c = df.agg(count(lit(1)), countDistinct(col("doc_id"))).head()
-        if (c.getLong(0) != c.getLong(1)) {
-          df.unpersist()
-          throw new IllegalArgumentException(
-            s"documents.doc_id must be a unique non-null key for MinHash " +
-              s"signatures: ${c.getLong(0)} documents with shingles carry " +
-              s"${c.getLong(1)} distinct doc_id values")
-        }
-        df
-      })
+    Fixpoints.memo(s, d, "minhashsets") {
+      graft.functions.MinhashSetsText.register(s)
+      // The kernel is NULL exactly when the text has fewer than 5
+      // tokens; those rows are dropped by that test on the text.
+      // Filtering the kernel's NULLs instead would be pushed below
+      // the projection and the fan-out, evaluating it twice, once on
+      // a single core.
+      val df = Tables.fanOutNarrow(s, Tables.t(s, d, "documents")
+          .select(col("doc_id"), col("text"))
+          .filter(size(split(col("text"), " ")) >= 5), col("doc_id"))
+        .select(col("doc_id"), expr("minhash_sets_text(text)").as("sig"))
+        .select(col("doc_id"), col("sig.*"))
+        .persist()
+      val c = df.agg(count(lit(1)), countDistinct(col("doc_id"))).head()
+      if (c.getLong(0) != c.getLong(1)) {
+        df.unpersist()
+        throw new IllegalArgumentException(
+          s"documents.doc_id must be a unique non-null key for MinHash " +
+            s"signatures: ${c.getLong(0)} documents with shingles carry " +
+            s"${c.getLong(1)} distinct doc_id values")
+      }
+      Fixpoints.holding(df, df)
+    }
 
   private def minhashLong(s: SparkSession, d: String): DataFrame = {
     val stackExpr = "stack(16, " + (0 until 16)
@@ -159,15 +155,12 @@ object Dedup {
     * q_dedup_drop, q_dedup_components and q_text_curation all consume
     * the same pair list — materialize it once per (session, sfDir)
     * (SURVEY §4.1: reuse of a prior result instead of a rescan). */
-  private val pairCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
-
   def nearPairs(s: SparkSession, d: String): DataFrame =
-    pairCache.getOrElseUpdate((s, d), {
+    Fixpoints.memo(s, d, "nearpairs") {
       val df = buildNearPairs(s, d).persist()
       df.count()
-      df
-    })
+      Fixpoints.holding(df, df)
+    }
 
   /** 4×4 LSH band keys from the 16 minhash columns — the ONE definition
     * every banded consumer (near pairs, incremental ingest) shares, so
@@ -259,11 +252,8 @@ object Dedup {
     * pair query self-joins it (two scans) and the sketch dump reads it
     * again; without the cache each consumer re-runs the shingle explode
     * and 32-agg pass (same reuse discipline as [[nearPairs]]). */
-  private val simhashCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
-
   def simhashTable(s: SparkSession, d: String): DataFrame =
-    simhashCache.getOrElseUpdate((s, d), {
+    Fixpoints.memo(s, d, "simhash") {
       val bitAggs = (0 until 32).map(j =>
         sum(expr(
           s"CASE WHEN (shiftright(h, $j) & 1) = 1 THEN 1 ELSE -1 END"))
@@ -277,8 +267,8 @@ object Dedup {
           expr(s"CAST($combine AS BIGINT)").as("simhash"))
         .persist()
       df.count()
-      df
-    })
+      Fixpoints.holding(df, df)
+    }
 
   val qDedupSimhash = Q(
     "q_dedup_simhash",
@@ -324,11 +314,8 @@ object Dedup {
     * sides of the candidate self-join, both sides of the verify join,
     * sizes) and without the cache each one re-runs the explode+distinct
     * shuffle over the full corpus. */
-  private val bigramCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
-
   private def bigrams(s: SparkSession, d: String): DataFrame =
-    bigramCache.getOrElseUpdate((s, d), {
+    Fixpoints.memo(s, d, "bigrams") {
       val df = Tables.t(s, d, "documents")
         .withColumn("toks", split(col("text"), " "))
         .withColumn("bg", explode(expr(
@@ -340,8 +327,8 @@ object Dedup {
         .distinct()
         .persist()
       df.count()
-      df
-    })
+      Fixpoints.holding(df, df)
+    }
 
   val qDedupNgram = Q(
     "q_dedup_ngram",
@@ -532,21 +519,18 @@ object Dedup {
     math.max(1L, math.min(confWidth.toLong, derived)).toInt
   }
 
-  private val compCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
-
   /** Component membership (doc_id, comp) over the verified near-pair
     * graph, computed once per (session, sfDir) — the min-id and
     * quality-argmax canonicalizations consume the SAME fixpoint, so
     * the pointer-doubling loop runs once, not per consumer (the
     * [[nearPairs]] reuse discipline). */
   private[graft] def nearComponents(s: SparkSession, d: String): DataFrame =
-    compCache.getOrElseUpdate((s, d), {
+    Fixpoints.memo(s, d, "nearcomps") {
       val df = connectedComponents(
         nearPairs(s, d).select(col("a_id"), col("b_id"))).persist()
       df.count()
-      df
-    })
+      Fixpoints.holding(df, df)
+    }
 
   private[graft] def connectedComponents(
       pairs: DataFrame, maxIter: Int = 64): DataFrame = {

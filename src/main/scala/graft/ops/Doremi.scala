@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, Tables}
+import graft.{Fixpoints, Q, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -23,15 +23,15 @@ object Doremi {
     * cntS to every mixture-scoring round). */
   private[graft] def sourceModel(
       s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) = {
-    val cntS = Insights.cacheOnce(s, d, "cnts") {
+    val cntS = Fixpoints.cacheOnce(s, d, "cnts") {
       Corpus.docBigrams(s, d)
         .groupBy(col("source"), col("w1"), col("w2"))
         .agg(sum(col("c")).as("n"))
     }
-    val totS = Insights.cacheOnce(s, d, "tots") {
+    val totS = Fixpoints.cacheOnce(s, d, "tots") {
       cntS.groupBy(col("source"), col("w1")).agg(sum(col("n")).as("t"))
     }
-    val vocS = Insights.cacheOnce(s, d, "vocs") {
+    val vocS = Fixpoints.cacheOnce(s, d, "vocs") {
       docs(s, d)
         .select(col("source"), split(col("text"), " ").as("ws"))
         .filter(size(col("ws")) >= 2)
@@ -48,7 +48,7 @@ object Doremi {
     * [[Corpus.scoreUnder]]; vocS (one row per source, bounded in any
     * real mixture) is the only broadcast. */
   private[graft] def ownScore(s: SparkSession, d: String): DataFrame =
-    Insights.cacheOnce(s, d, "ownscore") {
+    Fixpoints.cacheOnce(s, d, "ownscore") {
       val (cntS, totS, vocS) = sourceModel(s, d)
       Corpus.docBigrams(s, d)
         .join(cntS, Seq("source", "w1", "w2"), "left")

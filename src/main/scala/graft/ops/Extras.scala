@@ -232,8 +232,8 @@ object Extras {
     "q_sql_api",
     (s, d) => {
       Tables.t(s, d, "lineitem").createOrReplaceTempView("lineitem_v")
-      s.sql("""SELECT round(sum(l_extendedprice * l_discount), 2)
-                 AS revenue,
+      s.sql("""SELECT CAST(sum(CAST(floor(l_extendedprice * l_discount
+                   * 100 + 0.5) AS BIGINT)) AS BIGINT) / 100.0D AS revenue,
                  count(*) AS n_rows
                FROM lineitem_v
                WHERE l_shipdate >= TIMESTAMP '1997-01-01'
@@ -241,7 +241,8 @@ object Extras {
                  AND l_discount BETWEEN 0.05 AND 0.07
                  AND l_quantity < 24""")
     },
-    Some("""SELECT round(sum(l_extendedprice * l_discount), 2) AS revenue,
+    Some("""SELECT CAST(sum(CAST(floor(l_extendedprice * l_discount
+              * 100 + 0.5) AS BIGINT)) AS BIGINT) / 100.0e0 AS revenue,
               count(*) AS n_rows
             FROM lineitem
             WHERE l_shipdate >= TIMESTAMP '1997-01-01'

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, Tables}
+import graft.{Fixpoints, Q, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -17,9 +17,6 @@ object GraphScores {
     e.select(col("a").as("v")).unionAll(e.select(col("b").as("v")))
       .groupBy(col("v")).agg(count(lit(1)).as("deg"))
 
-  private val peelCache = scala.collection.concurrent
-    .TrieMap[(SparkSession, String, Int), Seq[(DataFrame, DataFrame)]]()
-
   /** Four deg ≥ k peel rounds over the shared link graph, memoized per
     * (session, dir, k) — ONE definition of the peel for every
     * consumer (census, per-node depth), so sibling queries don't each
@@ -30,9 +27,9 @@ object GraphScores {
     * (alive_r, edges_r) for r = 1..4. */
   private[graft] def peel(s: SparkSession, d: String, k: Int)
       : Seq[(DataFrame, DataFrame)] =
-    peelCache.getOrElseUpdate((s, d, k), {
+    Fixpoints.memo(s, d, s"peel$k") {
       var e = Insights.undirectedLinkEdges(s, d)
-      (1 to 4).map { _ =>
+      val rounds = (1 to 4).map { _ =>
         val alive = degrees(e).filter(col("deg") >= k)
           .select(col("v")).localCheckpoint(false)
         e = e
@@ -43,7 +40,8 @@ object GraphScores {
           .localCheckpoint(false)
         (alive, e)
       }
-    })
+      Fixpoints.holding(rounds, rounds.flatMap { case (a, r) => Seq(a, r) }: _*)
+    }
 
   /** Bench-warmup hook: materialize both peels the graph tier shares
     * so per-query timings charge the operator, not registry order. */

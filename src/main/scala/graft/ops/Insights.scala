@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, Tables}
+import graft.{Fixpoints, Q, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -32,351 +32,6 @@ object Insights {
     * post-filter, never a join strategy. Output: one census row with the
     * global clustering coefficient (3·triangles / wedges-over-UNDIRECTED
     * degrees, the standard definition). */
-  /** Persist-once memo for the graph tier's shared intermediates: a
-    * repeated bench/verify pass used to re-persist these on every
-    * invocation and never unpersist, leaking cached blocks for the life
-    * of the session (same fix as Extras.ensureFixture for format
-    * fixtures). Keyed by (session, dir, name) so scales never collide.
-    * BOUNDED: a handful of cached tables exist per (session, sf-dir)
-    * and the bench/verify/test drivers touch few dirs per JVM, but a
-    * long-lived service iterating many data dirs must not pin storage
-    * forever — past maxCachedDfs entries the whole memo is unpersisted
-    * and cleared (always correct: entries are pure derived tables, the
-    * next consumer just rebuilds). */
-  private val maxCachedDfs = 64
-  // Value carries the memoized frame AND its release action: plain
-  // persisted entries release via unpersist(), but checkpointed entries
-  // are flat LogicalRDDs the CacheManager never tracked — unpersist()
-  // on the DataFrame is a no-op for them, and their checkpoint blocks
-  // would otherwise stay pinned until GC + ContextCleaner got around to
-  // the RDD reference, weakening the documented storage bound for
-  // long-lived many-dir services. The release closure is captured at
-  // insert time, when the concrete RDD is known.
-  private val cachedDf = scala.collection.concurrent.TrieMap[
-    (SparkSession, String, String),
-    (org.apache.spark.sql.DataFrame, () => Unit,
-      java.util.concurrent.atomic.AtomicInteger, Boolean)]()
-
-  // Release actions DEFERRED on a WALL-CLOCK grace floor. Releasing a
-  // checkpointed victim's blocks at sweep time would unrecoverably
-  // fail a caller in another thread still mid-count on that DataFrame
-  // (a flat LogicalRDD has no lineage to recompute), so each victim's
-  // release parks with a deadline = eviction + grace
-  // (spark.graft.evictionGraceMs, default 60 s) and settles when it is
-  // DUE — via a daemon timer, so blocks free even if no further sweep
-  // ever runs — never merely "on the next sweep": two overflows in
-  // quick succession used to shrink the grace to near zero, and a
-  // session with no second overflow used to leak the blocks forever.
-  // The map entry is still removed immediately, so no NEW reader can
-  // adopt a doomed frame. Guards, in order (r17 — the outside-holder
-  // contract is now TRACKED, not time-based):
-  //  1. A victim whose TRACKED holder count (acquireOnce) is nonzero
-  //     waits for the count to reach zero — however long that takes;
-  //     the release is driven by the holder's release() call, with the
-  //     timer as backstop. This is the airtight form of the old "finish
-  //     within 60 s of eviction" wall-clock guess.
-  //  2. While ANY cacheOnce build is in flight (stacked fixpoints
-  //     consume inner fixpoints mid-build), due releases of UNTRACKED
-  //     victims are re-parked — but only up to maxBuildDeferrals beats:
-  //     under continuous build traffic the old unbounded re-park
-  //     starved block frees forever (ADVICE r16), so past the cap the
-  //     release settles loudly (the storage bound wins; an untracked
-  //     holder that needed longer should have used acquireOnce).
-  //  3. UNTRACKED holders keep the wall-clock grace floor
-  //     (spark.graft.evictionGraceMs, default 60 s) — each release
-  //     logs the freed RDD ids so a violation diagnoses from the log.
-  //  4. (r18, the ScanCensusSpec root cause) A PERSISTED victim's
-  //     release is df.unpersist(), which uncaches by PLAN, not by
-  //     instance. If the same (session, dir, name) was REBUILT while
-  //     the release was parked, the rebuild re-adopted the very same
-  //     CacheManager entry (persist() of an already-cached plan reuses
-  //     it) — so the stale release firing would silently uncache the
-  //     LIVE rebuilt fixpoint and every later consumer would re-plan
-  //     (and re-execute) the full build lineage. Plan-keyed releases
-  //     are therefore tagged with their memo key and are (a) cancelled
-  //     eagerly when cacheOnce starts a rebuild of that key and (b)
-  //     dropped at settle time if the key is live again. No leak: the
-  //     one CacheManager entry is then owned by the live map entry,
-  //     whose own parked release frees it when IT settles. Checkpoint
-  //     releases free instance-specific RDD blocks and always run.
-  private final case class Parked(
-      deadline: Long, key: (SparkSession, String, String),
-      planKeyed: Boolean, ids: Seq[Int], release: () => Unit,
-      refs: java.util.concurrent.atomic.AtomicInteger, defer: Int)
-  private val pendingRelease =
-    scala.collection.mutable.ArrayBuffer[Parked]()
-  private val inFlightBuilds =
-    new java.util.concurrent.atomic.AtomicInteger(0)
-  private val maxBuildDeferrals = 120
-  private lazy val releaseTimer =
-    new java.util.Timer("graft-evict-release", true)
-
-  /** Run every PAST-DUE parked release whose holder count is zero
-    * (re-parking held victims, and — up to the deferral cap —
-    * everything while a cacheOnce build is in flight). Called by the
-    * daemon timer at each parked deadline and opportunistically by the
-    * eviction sweep. */
-  private def settleDueReleases(): Unit = cachedDf.synchronized {
-    val now = System.currentTimeMillis()
-    val buildInFlight = inFlightBuilds.get() > 0
-    val keep = scala.collection.mutable.ArrayBuffer.empty[Parked]
-    var retimer = false
-    pendingRelease.foreach { case entry @ Parked(dl, key, planKeyed,
-        ids, r, refs, defer) =>
-      if (dl > now) keep += entry
-      else if (refs.get() > 0) {
-        // tracked holders still reading: wait on the COUNT, not a
-        // clock (the release() call also triggers a settle)
-        if (defer % 30 == 29) System.err.println(
-          s"[graft] evicted fixpoint rdd=${ids.mkString(",")} still " +
-            s"held by ${refs.get()} acquirer(s) ${defer + 1} beats past " +
-            "its grace deadline — waiting on release()")
-        keep += entry.copy(deadline = now + 1000L, defer = defer + 1)
-        retimer = true
-      } else if (planKeyed && cachedDf.contains(key)) {
-        // guard 4: the key was rebuilt — the live entry owns the one
-        // plan-keyed CacheManager entry now; firing this stale
-        // unpersist would uncache it (see the pendingRelease header)
-        System.err.println(
-          s"[graft] dropped stale plan-keyed release for rebuilt " +
-            s"fixpoint '${key._3}' (${key._2})")
-      } else if (buildInFlight && defer < maxBuildDeferrals) {
-        keep += entry.copy(deadline = now + 1000L, defer = defer + 1)
-        retimer = true
-      } else {
-        if (buildInFlight) System.err.println(
-          s"[graft] settling evicted fixpoint rdd=${ids.mkString(",")} " +
-            s"after $defer in-flight-build deferrals (cap " +
-            s"$maxBuildDeferrals) — storage bound wins")
-        try {
-          r()
-          if (ids.nonEmpty) System.err.println(
-            s"[graft] released evicted fixpoint blocks rdd=" +
-              ids.mkString(","))
-        } catch { case _: Throwable => () }
-      }
-    }
-    pendingRelease.clear(); pendingRelease ++= keep
-    if (retimer) releaseTimer.schedule(
-      new java.util.TimerTask { def run(): Unit = settleDueReleases() },
-      1100L)
-  }
-
-  private def parkRelease(s: SparkSession,
-      key: (SparkSession, String, String), planKeyed: Boolean,
-      ids: Seq[Int], release: () => Unit,
-      refs: java.util.concurrent.atomic.AtomicInteger): Unit = {
-    val graceMs =
-      try s.conf.get("spark.graft.evictionGraceMs", "60000").toLong
-      catch { case _: Throwable => 60000L }
-    pendingRelease += Parked(System.currentTimeMillis() + graceMs, key,
-      planKeyed, ids, release, refs, 0)
-    releaseTimer.schedule(
-      new java.util.TimerTask { def run(): Unit = settleDueReleases() },
-      graceMs + 50L)
-  }
-
-  private[graft] def cacheOnce(s: SparkSession, d: String, name: String)(
-      build: => org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    if (cachedDf.size >= maxCachedDfs && !cachedDf.contains((s, d, name)))
-      cachedDf.synchronized {
-        if (cachedDf.size >= maxCachedDfs) {
-          // Evict OTHER (session, dir) working sets first: a released
-          // checkpoint entry has no lineage to recompute from, so a
-          // caller still holding its DataFrame would fail loudly on
-          // next use — and live holders (a bench memo, a suite's local
-          // vals) point at the CURRENT dir. Entries per dir are far
-          // below maxCachedDfs (~30 names), so dropping the cold dirs
-          // always gets under the bound; the clear-all fallback stays
-          // for safety.
-          val (keep, drop) = cachedDf.toSeq.partition {
-            case ((ks, kd, _), _) => ks == s && kd == d
-          }
-          val victims = if (keep.size >= maxCachedDfs) cachedDf.toSeq
-            else drop
-          // opportunistically settle whatever is already PAST DUE
-          // (never early: the grace floor is wall-clock, so a second
-          // overflow moments after the first frees nothing)
-          settleDueReleases()
-          victims.foreach { case (key, (vdf, release, refs, planKeyed)) =>
-            val ids = vdf.queryExecution.analyzed.collect {
-              case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
-            }
-            parkRelease(s, key, planKeyed, ids, release, refs)
-            cachedDf.remove(key)
-          }
-        }
-      }
-    // Rebuild of an evicted key: cancel its stale PLAN-KEYED parked
-    // releases BEFORE the build persists (pendingRelease guard 4) —
-    // the rebuild's persist() re-adopts the same CacheManager entry,
-    // and a stale release firing mid-build (between persist and the
-    // map insert, a window as long as the build's count) would
-    // uncache the live data out from under every later consumer. If
-    // the build then THROWS, the old cache entry merely lingers until
-    // the next successful rebuild of the same plan adopts and
-    // eventually frees it — bounded, and builds do not fail in steady
-    // state. Checkpoint-kind releases (instance-specific RDD blocks)
-    // are never cancelled.
-    if (!cachedDf.contains((s, d, name))) cachedDf.synchronized {
-      val n0 = pendingRelease.size
-      pendingRelease.filterInPlace(p =>
-        !(p.planKeyed && p.key == ((s, d, name))))
-      if (pendingRelease.size != n0) System.err.println(
-        s"[graft] cancelled stale plan-keyed release for rebuilding " +
-          s"fixpoint '$name' ($d)")
-    }
-    // the in-flight increment rides the cachedDf monitor so
-    // settleDueReleases' check can never interleave between "counter
-    // reads 0" and a build starting (ADVICE r16 race)
-    cachedDf.synchronized { inFlightBuilds.incrementAndGet() }
-    try cachedDf.getOrElseUpdate((s, d, name), buildEntry(s, build))._1
-    finally cachedDf.synchronized { inFlightBuilds.decrementAndGet() }
-  }
-
-  /** Refcounted accessor for OUTSIDE holders (r17, verdict #4): returns
-    * the shared frame plus a release thunk. While the holder count is
-    * nonzero an evicted entry's blocks are NOT freed — the parked
-    * release waits on the count reaching zero instead of the wall-clock
-    * grace guess, so a slow external consumer can never have a
-    * checkpointed frame yanked mid-use. release() is idempotent per
-    * handle. Internal query-path callers keep using cacheOnce (they
-    * hold within one dir's lifetime, the documented untracked
-    * contract). */
-  private[graft] def acquireOnce(s: SparkSession, d: String, name: String)(
-      build: => org.apache.spark.sql.DataFrame)
-      : (org.apache.spark.sql.DataFrame, () => Unit) = {
-    val df = cacheOnce(s, d, name)(build)
-    // the entry may have been concurrently evicted between cacheOnce
-    // and here; retry through cacheOnce until we pin the LIVE entry
-    var pinned: Option[(org.apache.spark.sql.DataFrame, () => Unit)] = None
-    while (pinned.isEmpty) {
-      cachedDf.get((s, d, name)) match {
-        case Some((edf, _, refs, _)) =>
-          cachedDf.synchronized {
-            // re-check under the monitor: eviction parks under it too
-            if (cachedDf.contains((s, d, name))) {
-              refs.incrementAndGet()
-              val released = new java.util.concurrent.atomic.AtomicBoolean()
-              pinned = Some((edf, () => {
-                if (released.compareAndSet(false, true)) {
-                  refs.decrementAndGet()
-                  settleDueReleases()
-                }
-              }))
-            }
-          }
-        case None => cacheOnce(s, d, name)(build)
-      }
-    }
-    pinned.get
-  }
-
-  /** The cacheOnce build body (persist → measure → right-size →
-    * maybe-checkpoint), factored out so the in-flight counter wraps it
-    * without indenting 60 lines. */
-  private def buildEntry(s: SparkSession,
-      build: => org.apache.spark.sql.DataFrame)
-      : (org.apache.spark.sql.DataFrame, () => Unit,
-        java.util.concurrent.atomic.AtomicInteger, Boolean) = {
-    locally {
-      // Cluster-deployment switch: localCheckpoint truncates lineage,
-      // so on a real multi-executor cluster an executor loss makes the
-      // flat memo unrecoverable mid-query. spark.graft.durableFixpoints
-      // keeps the lineage-bearing persist with 2x block replication —
-      // an executor loss is then served from the replica (or, worst
-      // case, recomputed from the intact lineage) instead of failing
-      // the query. The single-JVM harness keeps the flat layout: there
-      // is no executor to lose and the plan-string tax is real.
-      val durable =
-        try s.conf.get("spark.graft.durableFixpoints", "false").toBoolean
-        catch { case _: Throwable => false }
-      // Materialize NOW, not at the first consumer's action: a lazily
-      // persisted store carries estimate statistics until something
-      // runs it, so the first consumer's join strategy (SMJ on the big
-      // estimate) differs from every later consumer's (broadcast on
-      // the measured small size) — plans must not depend on which
-      // consumer planned first. Eager count() pins every consumer to
-      // the measured-stats plan, which is also the bench's warm state.
-      val df =
-        if (durable) build.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_2)
-        else build.persist()
-      val n = df.count()
-      // Right-size the cached layout from the MEASURED row count: a
-      // fixpoint built under the session shuffle width caches at that
-      // width no matter how tiny it measured (Spark's AQE skips
-      // persisted plans by default), and the iterative tier then
-      // re-scans e.g. a ~20k-row edge cache as 64+ map tasks per
-      // round. Rows — not bytes — drive the target width so a small
-      // frame whose CONSUMERS are compute-heavy per row keeps its
-      // parallelism (a global canChangeCachedPlanOutputPartitioning
-      // A/B coalesced by bytes and serialized q_sim_hardneg /
-      // q_ml_kfold; rejected). coalesce() is a narrow merge of cached
-      // partitions, so the re-cache costs one cheap pass at warm time;
-      // at production scale n is large and the layout is untouched.
-      // The TARGET uses ONLY (n, session width) — never the build's
-      // actual partition count, which jitters with AQE's runtime
-      // coalescing and would make consumer plans (and the PlanGuard
-      // snapshot) nondeterministic run-to-run. r18: a build that came
-      // out NARROWER than the target (single-row-group scan through
-      // narrow ops → 1 partition; 24 of 55 warm fixpoints at sf0.1)
-      // used to stay narrow — coalesce can only merge — serializing
-      // every consumer's re-scan on one core. It now REPARTITIONS up
-      // to the target (one keyless shuffle at warm time over a ≤2M-row
-      // frame), so the cached width is exactly `target` either way —
-      // deterministic, and consumers fan out. Consumer arithmetic is
-      // partition-order-free by the house rule (integer-quantized
-      // sums); row-level results are unaffected.
-      val sessW = math.max(1,
-        s.conf.get("spark.sql.shuffle.partitions").toInt)
-      val target = math.max(1L, math.min(sessW.toLong,
-        (n + rowsPerCachedPartition - 1) / rowsPerCachedPartition)).toInt
-      if (!durable && n <= 2000000L && target < sessW) {
-        // Eager localCheckpoint, not a second persist: the memoized
-        // frame becomes a FLAT LogicalRDD leaf. A persisted narrow
-        // copy nests the wide InMemoryRelation inside the narrow one,
-        // and since fixpoints stack (und inside oriented inside
-        // tricorners ...), plan TREES grew exponentially with depth —
-        // every execution then pays a full-tree stringification +
-        // SparkPlanInfo walk in SQLExecution's listener event, which
-        // profiled as ~1 s of driver time on a 42-row cached count
-        // (q_graph_triangles). The checkpoint stores the same rows as
-        // RDD blocks, cuts the plan to one leaf, and frees the wide
-        // copy. Consumers must hold this accessor's reference — a
-        // consumer that re-builds the raw plan loses the shared
-        // store and re-runs its lineage, which ScanCensusSpec catches
-        // (it caught q_quality_classify; that query now consumes the
-        // accessor).
-        val shaped =
-          if (df.rdd.getNumPartitions < target) df.repartition(target)
-          else df.coalesce(target)
-        val narrow = shaped.localCheckpoint()
-        df.unpersist(blocking = false)
-        // Capture the checkpoint's backing RDD for the eviction sweep:
-        // the flat frame is a LogicalRDD leaf the CacheManager never
-        // tracked, so DataFrame.unpersist() cannot release its blocks —
-        // only the RDD handle can.
-        val ckptRdds = narrow.queryExecution.analyzed.collect {
-          case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-        }
-        (narrow, () => ckptRdds.foreach(_.unpersist(blocking = false)),
-          new java.util.concurrent.atomic.AtomicInteger(0),
-          false) // checkpoint release frees instance-specific blocks
-      } else (df, () => { df.unpersist(blocking = false); () },
-        new java.util.concurrent.atomic.AtomicInteger(0),
-        true) // PLAN-keyed release — see pendingRelease guard 4
-    }
-  }
-
-  /** Compute-parallelism proxy for cacheOnce's right-sizing: enough
-    * rows per cached partition that per-round re-scans stop paying
-    * 32-64 task launches over grid-sized frames, small enough that a
-    * ~60k-row vector frame still fans its per-row arithmetic across
-    * the session's cores. */
-  private val rowsPerCachedPartition = 2048L
-
   /** Raw DIRECTED edge multi-list of the deterministic derived link
     * graph — the ONE definition of the generator formulas (src div 2,
     * (src·31+17) % n, (src²+1) % n); every consumer (undirected view
@@ -405,7 +60,7 @@ object Insights {
     * ONCE per (session, dir): every consumer walks it several times. */
   private[graft] def undirectedLinkEdges(
       s: SparkSession, d: String): org.apache.spark.sql.DataFrame =
-    cacheOnce(s, d, "und") {
+    Fixpoints.cacheOnce(s, d, "und") {
       directedLinkEdges(s, d)
         .select(least(col("src"), col("dst")).as("a"),
           greatest(col("src"), col("dst")).as("b"))
@@ -422,7 +77,7 @@ object Insights {
     * most of the physical work). */
   private[graft] def directedDistinctEdges(
       s: SparkSession, d: String): org.apache.spark.sql.DataFrame =
-    cacheOnce(s, d, "dir") {
+    Fixpoints.cacheOnce(s, d, "dir") {
       directedLinkEdges(s, d).distinct()
     }
 
@@ -433,7 +88,7 @@ object Insights {
     * (two more generator copies) every round. */
   private[graft] def directedEdgesOutdeg(
       s: SparkSession, d: String): org.apache.spark.sql.DataFrame =
-    cacheOnce(s, d, "dirdeg") {
+    Fixpoints.cacheOnce(s, d, "dirdeg") {
       val e = directedDistinctEdges(s, d)
       e.join(e.groupBy(col("src")).agg(count(lit(1)).as("outdeg")), "src")
     }
@@ -447,7 +102,7 @@ object Insights {
     * (it grows with V). */
   private[graft] def linkDegrees(
       s: SparkSession, d: String): org.apache.spark.sql.DataFrame =
-    cacheOnce(s, d, "unddeg") {
+    Fixpoints.cacheOnce(s, d, "unddeg") {
       val und = undirectedLinkEdges(s, d)
       und.select(col("a").as("v"))
         .unionAll(und.select(col("b").as("v")))
@@ -462,7 +117,7 @@ object Insights {
     * q_graph_triangles and q_graph_clustcoef. */
   private[graft] def orientedEdges(
       s: SparkSession, d: String): org.apache.spark.sql.DataFrame =
-    cacheOnce(s, d, "oriented") {
+    Fixpoints.cacheOnce(s, d, "oriented") {
       val und = undirectedLinkEdges(s, d)
       val deg = linkDegrees(s, d)
       und
@@ -488,7 +143,7 @@ object Insights {
     * corners. Both joins are equi-joins; row count = n_triangles. */
   private[graft] def closedTriangles(
       s: SparkSession, d: String): org.apache.spark.sql.DataFrame =
-    cacheOnce(s, d, "tricorners") {
+    Fixpoints.cacheOnce(s, d, "tricorners") {
       val oriented = orientedEdges(s, d)
       val e1 = oriented.select(col("u"), col("v").as("v1"),
         col("vdeg").as("vdeg1"))
@@ -514,7 +169,7 @@ object Insights {
     * at fleet scale; all joins stay un-hinted so AQE sizes them. */
   private[graft] def wedgePairStats(
       s: SparkSession, d: String): org.apache.spark.sql.DataFrame =
-    cacheOnce(s, d, "wedgepairs") {
+    Fixpoints.cacheOnce(s, d, "wedgepairs") {
       val und = undirectedLinkEdges(s, d)
       val edges = und.select(col("a").as("node"), col("b").as("nbr"))
         .union(und.select(col("b").as("node"), col("a").as("nbr")))
@@ -1703,7 +1358,7 @@ object Insights {
     * q_graph_modularity's partition-quality score, so the propagation
     * has ONE definition. */
   private[graft] def labelPropLabels(s: SparkSession, d: String)
-      : DataFrame = cacheOnce(s, d, "lpl") {
+      : DataFrame = Fixpoints.cacheOnce(s, d, "lpl") {
     val und = undirectedLinkEdges(s, d)
     val edges = und.select(col("a").as("src"), col("b").as("dst"))
       .union(und.select(col("b").as("src"), col("a").as("dst")))
@@ -2236,7 +1891,7 @@ object Insights {
               / (CAST(hx_nano AS DOUBLE) + hy_nano), 6) AS nmi
           FROM mi, hx, hy"""))
 
-  /** Bench-warmup hook: materialize the cacheOnce fixpoints the graph
+  /** Bench-warmup hook: materialize the shared fixpoints the graph
     * tier shares (link edges, label-prop labels) so per-query bench
     * numbers charge the operator, not registry order. */
   private[graft] def warmShared(s: SparkSession, d: String): Unit = {

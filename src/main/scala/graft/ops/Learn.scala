@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, Tables}
+import graft.{Fixpoints, Q, Tables}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -440,7 +440,7 @@ object Learn {
     * this is the materialized score table a QA pass reads anyway. */
   private[graft] def qualityScores(s: SparkSession, d: String)
       : org.apache.spark.sql.DataFrame =
-    Insights.cacheOnce(s, d, "qualscores")(qualityClassifyBuild(s, d))
+    Fixpoints.cacheOnce(s, d, "qualscores")(qualityClassifyBuild(s, d))
 
   /** Bench-warmup hook for the shared verdict store. */
   private[graft] def warmShared(s: SparkSession, d: String): Unit = {

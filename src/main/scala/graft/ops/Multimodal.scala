@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, Tables}
+import graft.{Fixpoints, Q, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -747,7 +747,7 @@ object Multimodal {
     * pairs, and audit operators all start from this table, and each
     * was re-running the full decode+window pass (~2 s at sf0.1). */
   private[graft] def phashFrame(s: SparkSession, d: String): DataFrame =
-    Insights.cacheOnce(s, d, "phashframe")(phashFrameBuild(s, d))
+    Fixpoints.cacheOnce(s, d, "phashframe")(phashFrameBuild(s, d))
 
   /** Bench-warmup hook for the shared fingerprint frame. */
   private[graft] def warmShared(s: SparkSession, d: String): Unit = {

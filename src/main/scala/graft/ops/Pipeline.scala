@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, Tables}
+import graft.{Fixpoints, Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -343,7 +343,7 @@ object Pipeline {
     * query's number is its own corpus pass over the trained table. */
   private[graft] def kmeansFinalCents(
       s: SparkSession, d: String): DataFrame =
-    Insights.cacheOnce(s, d, "kmcents")(kmeansFinalCentsBuild(s, d))
+    Fixpoints.cacheOnce(s, d, "kmcents")(kmeansFinalCentsBuild(s, d))
 
   /** Bench-warmup hook for the shared Lloyd model. */
   private[graft] def warmShared(s: SparkSession, d: String): Unit = {

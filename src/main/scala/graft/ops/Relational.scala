@@ -106,12 +106,13 @@ object Relational {
         .groupBy($"r_name")
         .agg(
           count(lit(1)).as("n_items"),
-          round(sum($"l_extendedprice" * (lit(1.0) - $"l_discount")), 2)
-            .as("revenue"))
+          (Mart.centSum($"l_extendedprice" * (lit(1.0) - $"l_discount")) /
+            100.0).as("revenue"))
         .orderBy($"r_name")
     },
     Some("""SELECT r_name, count(*) AS n_items,
-              round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS revenue
+              CAST(sum(CAST(floor(l_extendedprice * (1.0 - l_discount)
+                * 100 + 0.5) AS BIGINT)) AS BIGINT) / 100.0e0 AS revenue
             FROM lineitem
               JOIN supplier ON l_suppkey = s_suppkey
               JOIN nation   ON s_nationkey = n_nationkey
@@ -472,32 +473,57 @@ object Relational {
 
   // ----------------------------------------------------------- aggregates
 
-  /** TPC-H Q1 shape: the canonical partial+final two-phase hash aggregate. */
+  /** TPC-H Q1 shape: the canonical partial+final two-phase hash
+    * aggregate. Sums and averages are taken over whole cents as BIGINT
+    * (the q_tpch_q1 rule), so they do not depend on row order. */
   val qAggHash = Q(
     "q_agg_hash",
-    (s, d) =>
+    (s, d) => {
+      def avgMicros(c: String) =
+        expr(s"($c * 20000 + count_order) div (2 * count_order)") / lit(1e6)
       li(s, d)
         .filter($"l_shipdate" <= lit("2001-09-01").cast("timestamp_ntz"))
         .groupBy($"l_returnflag", $"l_linestatus")
         .agg(
-          round(sum($"l_quantity"), 2).as("sum_qty"),
-          round(sum($"l_extendedprice"), 2).as("sum_base_price"),
-          round(sum($"l_extendedprice" * (lit(1.0) - $"l_discount")), 2)
-            .as("sum_disc_price"),
-          round(avg($"l_quantity"), 6).as("avg_qty"),
-          round(avg($"l_discount"), 6).as("avg_disc"),
+          Mart.centSum($"l_quantity").as("qty_c"),
+          Mart.centSum($"l_extendedprice").as("price_c"),
+          Mart.centSum($"l_extendedprice" * (lit(1.0) - $"l_discount"))
+            .as("disc_price_c"),
+          Mart.centSum($"l_discount").as("disc_c"),
           count(lit(1)).as("count_order"))
-        .orderBy($"l_returnflag", $"l_linestatus"),
-    Some("""SELECT l_returnflag, l_linestatus,
-              round(sum(l_quantity), 2) AS sum_qty,
-              round(sum(l_extendedprice), 2) AS sum_base_price,
-              round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS sum_disc_price,
-              round(avg(l_quantity), 6) AS avg_qty,
-              round(avg(l_discount), 6) AS avg_disc,
-              count(*) AS count_order
-            FROM lineitem
-            WHERE l_shipdate <= TIMESTAMP '2001-09-01'
-            GROUP BY l_returnflag, l_linestatus
+        .select($"l_returnflag", $"l_linestatus",
+          ($"qty_c" / 100.0).as("sum_qty"),
+          ($"price_c" / 100.0).as("sum_base_price"),
+          ($"disc_price_c" / 100.0).as("sum_disc_price"),
+          avgMicros("qty_c").as("avg_qty"),
+          avgMicros("disc_c").as("avg_disc"),
+          $"count_order")
+        .orderBy($"l_returnflag", $"l_linestatus")
+    },
+    Some("""WITH g AS (
+              SELECT l_returnflag, l_linestatus,
+                CAST(sum(CAST(floor(l_quantity * 100 + 0.5) AS BIGINT))
+                  AS BIGINT) AS qty_c,
+                CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT))
+                  AS BIGINT) AS price_c,
+                CAST(sum(CAST(floor(l_extendedprice * (1.0 - l_discount)
+                  * 100 + 0.5) AS BIGINT)) AS BIGINT) AS disc_price_c,
+                CAST(sum(CAST(floor(l_discount * 100 + 0.5) AS BIGINT))
+                  AS BIGINT) AS disc_c,
+                count(*) AS count_order
+              FROM lineitem
+              WHERE l_shipdate <= TIMESTAMP '2001-09-01'
+              GROUP BY l_returnflag, l_linestatus)
+            SELECT l_returnflag, l_linestatus,
+              qty_c / 100.0e0 AS sum_qty,
+              price_c / 100.0e0 AS sum_base_price,
+              disc_price_c / 100.0e0 AS sum_disc_price,
+              CAST((qty_c * 20000 + count_order) // (2 * count_order)
+                AS BIGINT) / 1e6 AS avg_qty,
+              CAST((disc_c * 20000 + count_order) // (2 * count_order)
+                AS BIGINT) / 1e6 AS avg_disc,
+              count_order
+            FROM g
             ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST"""))
 
   val qAggMulti = Q(

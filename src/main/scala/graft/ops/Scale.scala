@@ -17,7 +17,7 @@ object Scale {
     * pre-co-located buckets. */
   /** One-time bucketed-table setup per (session, sfDir): building the
     * co-located layout is a LOAD step, not part of the join — cache it
-    * the way Dedup.pairCache caches the near-dup pair list, so repeated
+    * the way Dedup.nearPairs memoizes the near-dup pair list, so repeated
     * queries (and the bench) measure the shuffle-free join itself. */
   private val bucketSetup =
     scala.collection.concurrent.TrieMap[(SparkSession, String), Unit]()
@@ -62,12 +62,13 @@ object Scale {
           col("o_orderkey") === col("l_orderkey"))
         .groupBy(col("o_orderkey"))
         .agg(count(lit(1)).as("n_items"),
-          round(sum(col("l_quantity")), 2).as("sum_qty"),
+          (Mart.centSum(col("l_quantity")) / 100.0).as("sum_qty"),
           round(max(col("o_totalprice")), 2).as("total"))
         .orderBy(col("o_orderkey"))
     },
     Some("""SELECT o_orderkey, count(*) AS n_items,
-              round(sum(l_quantity), 2) AS sum_qty,
+              CAST(sum(CAST(floor(l_quantity * 100 + 0.5) AS BIGINT))
+                AS BIGINT) / 100.0e0 AS sum_qty,
               round(max(o_totalprice), 2) AS total
             FROM orders JOIN lineitem ON o_orderkey = l_orderkey
             GROUP BY o_orderkey
@@ -93,11 +94,12 @@ object Scale {
           li("salt") === sup("salt"))
         .groupBy(col("s_suppkey"), col("s_name"))
         .agg(count(lit(1)).as("n_items"),
-          round(sum(col("l_extendedprice")), 2).as("revenue"))
+          (Mart.centSum(col("l_extendedprice")) / 100.0).as("revenue"))
         .orderBy(col("s_suppkey"))
     },
     Some("""SELECT s_suppkey, s_name, count(*) AS n_items,
-              round(sum(l_extendedprice), 2) AS revenue
+              CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT))
+                AS BIGINT) / 100.0e0 AS revenue
             FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
             GROUP BY s_suppkey, s_name
             ORDER BY s_suppkey NULLS FIRST"""))

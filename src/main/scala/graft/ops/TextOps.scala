@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, Tables}
+import graft.{Fixpoints, Q, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -391,13 +391,13 @@ object TextOps {
     * are the materialized keyed stores an ingest gate reads anyway. */
   private[graft] def curateStages(s: SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame) = (
-    Insights.cacheOnce(s, d, "cur_eg") {
+    Fixpoints.cacheOnce(s, d, "cur_eg") {
       Dedup.qDedupExact.fn(s, d).select(col("text_hash"), col("keep_id"))
     },
-    Insights.cacheOnce(s, d, "cur_sem") {
+    Fixpoints.cacheOnce(s, d, "cur_sem") {
       Dedup.qDedupSemantic.fn(s, d).select(col("vec_id"))
     },
-    Insights.cacheOnce(s, d, "cur_dsir") {
+    Fixpoints.cacheOnce(s, d, "cur_dsir") {
       Corpus.qMixDsir.fn(s, d)
         .select(col("doc_id").as("w_id"), col("logw"))
     })

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, Tables}
+import graft.{Fixpoints, Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -361,12 +361,12 @@ object Vector {
     * re-entered every reference (10 logical embeddings scans in
     * q_sim_ann_ivfpq alone). */
   private[graft] def pqCodesShared(s: SparkSession, d: String): DataFrame =
-    graft.ops.Insights.cacheOnce(s, d, "pqcodes") {
+    Fixpoints.cacheOnce(s, d, "pqcodes") {
       pqCodes(pqElems(emb(s, d)))
     }
 
   private[graft] def pqLutShared(s: SparkSession, d: String): DataFrame =
-    graft.ops.Insights.cacheOnce(s, d, "pqlut") {
+    Fixpoints.cacheOnce(s, d, "pqlut") {
       pqLut(pqElems(emb(s, d)), pqCodesShared(s, d))
     }
 
@@ -1527,16 +1527,6 @@ object Vector {
 
   // ---- shared label-anchor NN fixpoint ------------------------------------
 
-  /** Memoized anchor-NN fixpoints, keyed on the session REFERENCE
-    * (not its identity hash — hashes collide and are recycled after
-    * GC, which could hand a new session a persisted plan bound to a
-    * stopped one) plus the data dir. Bounded like Insights.cachedDf:
-    * past maxNnCache entries the memo is unpersisted and cleared —
-    * always correct, the next consumer rebuilds. */
-  private val maxNnCache = 64
-  private val nnCache = scala.collection.concurrent
-    .TrieMap[(SparkSession, String), DataFrame]()
-
   /** Ranked 3-NN lists of each ANCHOR vector within its label block —
     * the shared candidate stage of q_embed_intrinsic_dim and
     * q_embed_hubness. The anchor side is capped at the 128 lowest
@@ -1552,17 +1542,8 @@ object Vector {
     * so Spark plans a partial WindowGroupLimit. Memoized + persisted
     * once per (session, dir): ≤ labels × 128 × 3 rows feed both
     * consumers. */
-  private[graft] def labelAnchorNn3(s: SparkSession, d: String): DataFrame = {
-    if (nnCache.size >= maxNnCache && !nnCache.contains((s, d)))
-      nnCache.synchronized {
-        if (nnCache.size >= maxNnCache) {
-          nnCache.values.foreach(df =>
-            try df.unpersist(blocking = false)
-            catch { case _: Throwable => () })
-          nnCache.clear()
-        }
-      }
-    nnCache.getOrElseUpdate((s, d), {
+  private[graft] def labelAnchorNn3(s: SparkSession, d: String): DataFrame =
+    Fixpoints.memo(s, d, "anchornn3") {
       graft.functions.FloatL2Q.register(s)
       val e = Tables.t(s, d, "embeddings")
         .select(col("vec_id"), col("label"), col("embedding"))
@@ -1581,11 +1562,11 @@ object Vector {
           expr("float_l2q(x.embedding, y.embedding)").as("d2p"))
       val w = Window.partitionBy(col("label"), col("a"))
         .orderBy(col("d2p"), col("b"))
-      pairs.withColumn("rk", row_number().over(w))
+      val nn = pairs.withColumn("rk", row_number().over(w))
         .filter(col("rk") <= 3)
         .persist()
-    })
-  }
+      Fixpoints.holding(nn, nn)
+    }
 
   /** Bench-warmup hook: materialize the shared anchor-NN lists. */
   private[graft] def warmShared(s: SparkSession, d: String): Unit = {

@@ -11,7 +11,10 @@ package graft
   * partition count from the MEASURED rows so per-round re-scans stop
   * paying session-width task fans over grid-sized frames. A regression
   * back to nested persist() would pass every value check and silently
-  * re-tax the whole cached tier — this spec fails instead. */
+  * re-tax the whole cached tier — this spec fails instead. It also pins
+  * the registry's lifecycle: a dir released, past the bound or on
+  * request, frees every entry's blocks at once and rebuilds the same
+  * rows when read again. */
 class CacheShapeSpec extends SparkSuite {
   import org.apache.spark.sql.DataFrame
   import org.apache.spark.sql.execution.LogicalRDD
@@ -51,7 +54,7 @@ class CacheShapeSpec extends SparkSuite {
     // loss must be recomputable) and carry 2x block replication.
     spark.conf.set("spark.graft.durableFixpoints", "true")
     try {
-      val df = ops.Insights.cacheOnce(spark, sf0, "cacheshape_durable") {
+      val df = Fixpoints.cacheOnce(spark, sf0, "cacheshape_durable") {
         spark.range(100).toDF("id")
       }
       assert(!df.queryExecution.analyzed.isInstanceOf[LogicalRDD],
@@ -63,160 +66,88 @@ class CacheShapeSpec extends SparkSuite {
     } finally spark.conf.unset("spark.graft.durableFixpoints")
   }
 
-  test("eviction frees victims on a wall-clock grace floor, not sweeps") {
-    // Past maxCachedDfs the sweep must (a) evict OTHER dirs first —
-    // live holders point at the current dir — and (b) free a victim's
-    // checkpoint blocks only after the GRACE FLOOR
-    // (spark.graft.evictionGraceMs) of wall-clock has passed: a
-    // released flat LogicalRDD has no lineage to recompute, so a
-    // caller in another thread still mid-count on the victim would
-    // fail unrecoverably if the sweep released at eviction time. Two
-    // failure modes of the old sweep-count deferral are pinned here:
-    // a SECOND overflow moments after the first must NOT shrink the
-    // grace to zero, and the blocks must free EVENTUALLY (daemon
-    // timer) even if no further sweep ever runs.
-    import org.apache.spark.sql.execution.{LogicalRDD => LR}
-    def rddId(df: org.apache.spark.sql.DataFrame): Int =
-      df.queryExecution.analyzed.collect { case l: LR => l.rdd.id }.head
-    spark.conf.set("spark.graft.evictionGraceMs", "60000")
-    try {
-      val cold = ops.Insights.cacheOnce(spark, "/cacheshape_evict_cold",
-        "probe") { spark.range(10).toDF("id") }
-      val coldId = rddId(cold)
-      assert(spark.sparkContext.getPersistentRDDs.contains(coldId),
-        "checkpointed memo should be persisted before eviction")
-      // overflow the memo from many other fake dirs → sweep #1 evicts
-      // the cold dir's ENTRY and parks its release on the grace floor
-      (1 to 70).foreach { i =>
-        ops.Insights.cacheOnce(spark, s"/cacheshape_evict_$i", "probe") {
-          spark.range(5).toDF("id")
-        }
-      }
-      assert(spark.sparkContext.getPersistentRDDs.contains(coldId),
-        "victim blocks must survive the evicting sweep (grace floor)")
-      assert(cold.count() === 10L,
-        "an in-flight holder of the victim must still be able to run")
-      // a fresh request for the evicted key REBUILDS (entry is gone) —
-      // it must not resurrect the doomed frame
-      val rebuilt = ops.Insights.cacheOnce(spark, "/cacheshape_evict_cold",
-        "probe") { spark.range(10).toDF("id") }
-      assert(rddId(rebuilt) !== coldId, "evicted entry must rebuild fresh")
-      // overflow AGAIN immediately → the quick-succession sweep must
-      // NOT free the victim: its 60 s grace floor has not passed
-      // (the old sweep-count rule freed it here — near-zero grace)
-      (71 to 140).foreach { i =>
-        ops.Insights.cacheOnce(spark, s"/cacheshape_evict_$i", "probe") {
-          spark.range(5).toDF("id")
-        }
-      }
-      assert(spark.sparkContext.getPersistentRDDs.contains(coldId),
-        "a quick second overflow must not shrink the grace floor")
-      assert(cold.count() === 10L)
-      // now a victim parked under a SHORT floor must free by TIMER —
-      // zero further cacheOnce traffic after its eviction
-      spark.conf.set("spark.graft.evictionGraceMs", "200")
-      val brief = ops.Insights.cacheOnce(spark, "/cacheshape_evict_brief",
-        "probe") { spark.range(9).toDF("id") }
-      val briefId = rddId(brief)
-      (141 to 210).foreach { i =>
-        ops.Insights.cacheOnce(spark, s"/cacheshape_evict_$i", "probe") {
-          spark.range(5).toDF("id")
-        }
-      }
-      val deadline = System.currentTimeMillis() + 10000
-      while (spark.sparkContext.getPersistentRDDs.contains(briefId) &&
-          System.currentTimeMillis() < deadline) Thread.sleep(100)
-      assert(!spark.sparkContext.getPersistentRDDs.contains(briefId),
-        "past the grace floor the daemon timer must free the victim " +
-          "without any further sweep")
-      val hot = ops.Insights.cacheOnce(spark, "/cacheshape_evict_hot",
-        "probe") { spark.range(7).toDF("id") }
-      assert(hot.count() === 7L)
-      val hot2 = ops.Insights.cacheOnce(spark, "/cacheshape_evict_hot",
-        "probe") { sys.error("must be served from the memo"); null }
-      assert(hot2.count() === 7L)
-    } finally spark.conf.unset("spark.graft.evictionGraceMs")
+  /** RDD ids a memoized frame pins: its cached relation's blocks and
+    * the checkpoint leaves its plan reads. */
+  private def pinnedIds(df: DataFrame): Set[Int] = {
+    val cached = df.queryExecution.withCachedData.collect {
+      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
+        r.cacheBuilder.cachedColumnBuffers.id
+    }
+    val leaves = df.queryExecution.analyzed.collect {
+      case l: LogicalRDD => l.rdd.id
+    }
+    (cached ++ leaves).toSet
   }
 
-  test("acquireOnce holder blocks an evicted victim's release past the " +
-      "grace floor until release() (r17 refcount contract)") {
-    // The r16 outside-holder contract was a 60 s wall-clock guess; the
-    // r17 accessor makes it airtight: while a tracked holder count is
-    // nonzero, a parked release waits on the COUNT, not the clock.
-    // Here the grace floor is 200 ms, the holder keeps the victim for
-    // seconds past it, and the blocks must survive until release().
-    import org.apache.spark.sql.execution.{LogicalRDD => LR}
-    def rddId(df: org.apache.spark.sql.DataFrame): Int =
-      df.queryExecution.analyzed.collect { case l: LR => l.rdd.id }.head
-    spark.conf.set("spark.graft.evictionGraceMs", "200")
-    try {
-      val (held, release) = ops.Insights.acquireOnce(
-        spark, "/cacheshape_ref_cold", "probe") {
-        spark.range(11).toDF("id")
-      }
-      val heldId = rddId(held)
-      assert(spark.sparkContext.getPersistentRDDs.contains(heldId))
-      // overflow the memo → the held entry is evicted and parked
-      (1 to 70).foreach { i =>
-        ops.Insights.cacheOnce(spark, s"/cacheshape_ref_$i", "probe") {
-          spark.range(5).toDF("id")
-        }
-      }
-      // wait far past the 200 ms grace floor: the holder must keep it
-      Thread.sleep(3000)
-      assert(spark.sparkContext.getPersistentRDDs.contains(heldId),
-        "a tracked holder must block the release past the grace floor")
-      assert(held.count() === 11L,
-        "the held victim must stay runnable while acquired")
-      // release → the timer settles the parked release on its next beat
-      release()
-      val deadline = System.currentTimeMillis() + 10000
-      while (spark.sparkContext.getPersistentRDDs.contains(heldId) &&
-          System.currentTimeMillis() < deadline) Thread.sleep(100)
-      assert(!spark.sparkContext.getPersistentRDDs.contains(heldId),
-        "after release() the parked release must settle promptly")
-      release() // idempotent per handle — must not over-decrement
-    } finally spark.conf.unset("spark.graft.evictionGraceMs")
+  private def persistentIds: Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** sf0's documents and embeddings under a path of their own, so its
+    * fixpoints share no cached plan with sf0's. */
+  private def copyOfSf0(name: String): String = {
+    val dir = s"${sys.props("java.io.tmpdir")}/graft_fix_$name"
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+    Seq("documents", "embeddings").foreach { t =>
+      java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf0/$t.parquet"),
+        java.nio.file.Paths.get(s"$dir/$t.parquet"),
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    }
+    dir
   }
 
-  test("a stale plan-keyed release never uncaches a rebuilt fixpoint " +
-      "(r18 ScanCensusSpec root cause)") {
-    // A PERSISTED (non-checkpointed) memo's release is df.unpersist(),
-    // which uncaches by PLAN. Evict such an entry, REBUILD it under the
-    // same key (the rebuild's persist() re-adopts the same CacheManager
-    // entry), then let the stale parked release come due: the rebuilt
-    // fixpoint must STAY cached — in r17 the stale unpersist fired and
-    // every later consumer silently re-planned the full build lineage
-    // (the ScanCensusSpec 479/480 failure on the driver's gate).
-    spark.conf.set("spark.graft.evictionGraceMs", "2000")
-    try {
-      // 9000 rows → target = min(sessW, ceil(9000/2048)) = sessW → the
-      // PERSIST branch (plan-keyed release), not the checkpoint branch
-      def cold = ops.Insights.cacheOnce(spark, "/cacheshape_stale_cold",
-        "probe") { spark.range(9000).toDF("id") }
-      assert(cold.storageLevel.useMemory,
-        "precondition: the persist-kind memo must be cached")
-      // Overflow from other dirs, REBUILDING the cold key after every
-      // filler insert: whichever filler evicts it, the rebuild lands
-      // milliseconds later — well inside the 2 s grace — so a stale
-      // plan-keyed release is parked while its key is live again
-      // (several times over), the exact r17 failure geometry.
-      (1 to 70).foreach { i =>
-        ops.Insights.cacheOnce(spark, s"/cacheshape_stale_$i", "probe") {
-          spark.range(5).toDF("id")
-        }
-        cold
+  test("a dir released past the bound frees every entry's blocks") {
+    // One more dir than the bound allows: the first dir is then the
+    // least recently used, and its entries of every kind (checkpoint
+    // leaves, eager and lazy persists, per-round checkpoints) must
+    // leave the block manager at once, not on a timer.
+    val dir = copyOfSf0("fixpoints_bound")
+    val frames = Seq(
+      ops.Insights.undirectedLinkEdges(spark, dir),
+      ops.Dedup.minhashWithSets(spark, dir),
+      ops.Dedup.nearPairs(spark, dir),
+      ops.Dedup.nearComponents(spark, dir),
+      ops.Dedup.simhashTable(spark, dir),
+      ops.Vector.labelAnchorNn3(spark, dir),
+      ops.Causal.landmarkBfs(spark, dir, 6))
+    frames.foreach(_.count())
+    val ids = frames.flatMap(pinnedIds).toSet
+    assert(ids.size >= frames.size && ids.subsetOf(persistentIds),
+      s"entries should pin their blocks: $ids")
+    (1 to Fixpoints.MaxDirs).foreach { i =>
+      Fixpoints.cacheOnce(spark, s"/fixpoints_bound_$i", "probe") {
+        spark.range(5).toDF("id")
       }
-      val rebuilt = cold
-      assert(rebuilt.storageLevel.useMemory,
-        "rebuilt memo must be cached immediately after rebuild")
-      // let every stale deadline (and several settle beats) pass
-      Thread.sleep(4500)
-      assert(rebuilt.storageLevel.useMemory,
-        "stale plan-keyed release uncached the rebuilt fixpoint — " +
-          "consumers would re-plan (and re-execute) the build lineage")
-      assert(rebuilt.count() === 9000L)
-    } finally spark.conf.unset("spark.graft.evictionGraceMs")
+    }
+    val left = ids.intersect(persistentIds)
+    assert(left.isEmpty, s"evicted dir still pins rdds ${left.toSeq.sorted}")
+    // the dirs inside the bound keep theirs
+    val hot = Fixpoints.cacheOnce(spark, s"/fixpoints_bound_1", "probe") {
+      sys.error("must be served from the registry")
+    }
+    assert(hot.count() === 5L)
+    (1 to Fixpoints.MaxDirs).foreach(i =>
+      Fixpoints.release(spark, s"/fixpoints_bound_$i"))
+  }
+
+  test("after release(s, dir) a read rebuilds the same rows") {
+    val dir = copyOfSf0("fixpoints_release")
+    def read() = Seq(
+      ops.Insights.undirectedLinkEdges(spark, dir),
+      ops.Dedup.simhashTable(spark, dir),
+      ops.Dedup.nearPairs(spark, dir))
+    def rows(dfs: Seq[DataFrame]) =
+      dfs.map(_.collect().map(_.toString).sorted.toSeq)
+    val first = read()
+    val want = rows(first)
+    val ids = first.flatMap(pinnedIds).toSet
+    Fixpoints.release(spark, dir)
+    assert(ids.intersect(persistentIds).isEmpty,
+      "release must free the dir's blocks")
+    val again = read()
+    assert(again.flatMap(pinnedIds).toSet.intersect(ids).isEmpty,
+      "a released entry must be rebuilt, not resurrected")
+    assert(rows(again) === want)
+    Fixpoints.release(spark, dir)
   }
 
   test("plan strings over stacked fixpoints stay leaf-sized") {

@@ -26,15 +26,7 @@ object ExecProf {
     if (sys.env.get("SPARK_GRAFT_WARM").contains("1")) {
       try ops.Scale.warm(spark, sfDir) catch { case _: Throwable => () }
       try ops.Extras.warm(spark, sfDir) catch { case _: Throwable => () }
-      Seq[(SparkSession, String) => Unit](
-        ops.Dedup.warmShared, ops.Insights.warmShared,
-        ops.GraphScores.warmShared, ops.Series.warmShared,
-        ops.Vector.warmShared, ops.Causal.warmShared,
-        ops.Corpus.warmShared, ops.Doremi.warmShared,
-        ops.TextOps.warmShared, ops.Learn.warmShared,
-        ops.Pipeline.warmShared,
-        ops.Multimodal.warmShared)
-        .foreach(w => try w(spark, sfDir) catch { case _: Throwable => () })
+      Fixpoints.warmAll(spark, sfDir)
     }
     // A/B: SPARK_GRAFT_PREPARED_MODE=off|force|auto routes through
     // PreparedCount's spark.graft.preparedNoAqe hatch

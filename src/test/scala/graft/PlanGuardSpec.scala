@@ -17,7 +17,6 @@ package graft
   * the hash is stable across JVMs while still pinning the operator
   * tree, join strategies, exchanges, and pushed filters. */
 class PlanGuardSpec extends SparkSuite {
-  import org.apache.spark.sql.SparkSession
 
   private val snapshotPath =
     java.nio.file.Paths.get("src/test/resources/plan_hashes.tsv")
@@ -116,16 +115,7 @@ class PlanGuardSpec extends SparkSuite {
     // InMemoryTableScan via cache-manager plan matching. Warming first
     // pins every headliner to the latter on both isolated and
     // full-suite runs.
-    Seq[(SparkSession, String) => Unit](
-      ops.Dedup.warmShared, ops.Insights.warmShared,
-      ops.GraphScores.warmShared, ops.Series.warmShared,
-      ops.Vector.warmShared, ops.Causal.warmShared,
-      ops.Corpus.warmShared, ops.Doremi.warmShared,
-      ops.TextOps.warmShared, ops.Learn.warmShared,
-        ops.Pipeline.warmShared,
-      ops.Multimodal.warmShared)
-      .foreach(w => try w(spark, sf0)
-        catch { case _: Throwable => () })
+    Fixpoints.warmAll(spark, sf0)
     PlanDump.headliners.map { case (name, _) =>
       val p = q(name).queryExecution.executedPlan.toString
       val c = canonical(p)

@@ -35,28 +35,7 @@ object ScaleRoll {
       try Tables.t(spark, sfDir, n) catch { case _: Throwable => () })
     try ops.Scale.warm(spark, sfDir) catch { case _: Throwable => () }
     try ops.Extras.warm(spark, sfDir) catch { case _: Throwable => () }
-    Seq[(String, (SparkSession, String) => Unit)](
-      "dedup" -> ops.Dedup.warmShared _,
-      "graph" -> ops.Insights.warmShared _,
-      "peels" -> ops.GraphScores.warmShared _,
-      "daygrid" -> ops.Series.warmShared _,
-      "anchor_nn" -> ops.Vector.warmShared _,
-      "landmark_bfs" -> ops.Causal.warmShared _,
-      "bigram_models" -> ops.Corpus.warmShared _,
-      "mixture_models" -> ops.Doremi.warmShared _,
-      "curate_stages" -> ops.TextOps.warmShared _,
-      "quality_scores" -> ops.Learn.warmShared _,
-      "kmeans" -> ops.Pipeline.warmShared _,
-      "phash" -> ops.Multimodal.warmShared _).foreach { case (n, f) =>
-      val t0 = System.nanoTime()
-      try {
-        f(spark, sfDir)
-        System.err.println(
-          f"[roll] warmed $n in ${(System.nanoTime() - t0) / 1e9}%.1f s")
-      } catch { case e: Throwable =>
-        System.err.println(s"[roll] warm $n FAILED: ${e.getMessage}")
-      }
-    }
+    Fixpoints.warmAll(spark, sfDir, "roll")
     def sweep(): Map[String, Double] = args.map { id =>
       val t0 = System.nanoTime()
       try SparkEntry.queries(id)(spark, sfDir).count()

@@ -28,24 +28,16 @@ package graft
   * lineage instead: localCheckpoint the small grid, persist the shared
   * frame, see SCALE.md's round-12 section). */
 class ScanCensusSpec extends SparkSuite {
-  import org.apache.spark.sql.SparkSession
 
   private val snapshotPath =
     java.nio.file.Paths.get("src/test/resources/scan_census.tsv")
 
   test("fact-table scan counts stay within the checked-in allowlist") {
-    // MUST mirror Bench's warmShared list exactly — a missing tier
-    // (Pipeline was absent until r15) makes its consumers' counts
-    // depend on whether an earlier suite happened to warm (or evict)
-    // the shared memo, flipping the census run-to-run.
-    Seq[(SparkSession, String) => Unit](
-      ops.Dedup.warmShared, ops.Insights.warmShared,
-      ops.GraphScores.warmShared, ops.Series.warmShared,
-      ops.Vector.warmShared, ops.Causal.warmShared,
-      ops.Corpus.warmShared, ops.Doremi.warmShared,
-      ops.TextOps.warmShared, ops.Learn.warmShared,
-      ops.Pipeline.warmShared, ops.Multimodal.warmShared)
-      .foreach(w => try w(spark, sf0) catch { case _: Throwable => () })
+    // Warm through the one list right before counting: a consumer
+    // whose store is missing plans the store's whole build pipeline,
+    // so without this the counts would depend on which earlier suite
+    // built (or which dir traffic released) the shared fixpoints.
+    Fixpoints.warmAll(spark, sf0)
 
     val got = ScanCensus.census(spark, sf0)
     val errs = got.collect { case (n, Left(e)) => s"$n: $e" }

@@ -45,16 +45,7 @@ object TinyProfile {
       // mirror Bench's accounting: shared fixpoints are warmed before
       // the timed loop, so a tiny fixpoint-consumer's number is its
       // query-local cost, not the shared build
-      Seq[(SparkSession, String) => Unit](
-        ops.Dedup.warmShared, ops.Insights.warmShared,
-        ops.GraphScores.warmShared, ops.Series.warmShared,
-        ops.Vector.warmShared, ops.Causal.warmShared,
-        ops.Corpus.warmShared, ops.Doremi.warmShared,
-        ops.TextOps.warmShared, ops.Learn.warmShared,
-        ops.Pipeline.warmShared,
-        ops.Multimodal.warmShared)
-        .foreach(w => try w(spark, sfDir)
-          catch { case _: Throwable => () })
+      Fixpoints.warmAll(spark, sfDir)
       try ops.Scale.warm(spark, sfDir) catch { case _: Throwable => () }
       // whole-tier A/B: every id under 0.3 s in the committed closing
       // bench, run once each in bench (alphabetical) order
