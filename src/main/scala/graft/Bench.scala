@@ -97,22 +97,12 @@ object Bench {
   }
 
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // A/B hatch for the prepared no-decision fast path (see
-      // PreparedCount): off = always keep the AQE wrapper (the r15
-      // protocol), auto = shipped gate. Never ship "force" — measured
-      // net-negative on multi-exchange plans (BASELINE.md).
-      .config("spark.graft.preparedNoAqe",
-        sys.env.getOrElse("SPARK_GRAFT_PREPARED_MODE", "auto"))
-      .getOrCreate()
-    Tables.configure(spark)
-    spark.sparkContext.setLogLevel("WARN")
+  /** The load phase of a bench-protocol run on `sfDir`, untimed:
+    * quiet the two chatty loggers, warm the JVM, pre-touch every
+    * table, then build the bucketed layout, the format fixtures and
+    * every shared fixpoint. Returns the warm steps' digest
+    * (`name=secs` or `name=FAILED(..)`), printed under `tag`. */
+  def load(spark: SparkSession, sfDir: String, tag: String): Seq[String] = {
     // The bounded global windows (PlanSpec asserts their input
     // cardinality) each emit a "No Partition Defined for Window
     // operation" WARN; dozens of those scroll the 12 `[bench] warmed`
@@ -154,10 +144,7 @@ object Bench {
     // itself, not whichever registry neighbor ran first and paid for
     // the shared build (r9: q_dedup_cluster_keep read 3.3 → 8.7 s from
     // registry-order accounting alone, with an unchanged plan).
-    val warmDigest = Fixpoints.warmAll(spark, sfDir, "bench").map {
-      case (nm, Right(sec)) => f"$nm=$sec%.1fs"
-      case (nm, Left(err)) => s"$nm=FAILED($err)"
-    }
+    //
     // Buffer-pool warm was A/B'd here and REJECTED: pinning the driver
     // tables in columnar memory sped the TPC-H tier ~20% but thrashed
     // the storage pool the iterative tier needs for its own persisted
@@ -165,6 +152,18 @@ object Bench {
     // 238 s → 296 s on the common set). Parquet scans at this scale are
     // already pruned+pushed; CACHE TABLE belongs to deployments with
     // memory to spare, not this 8g harness.
+    Fixpoints.warmAll(spark, sfDir, tag).map {
+      case (nm, Right(sec)) => f"$nm=$sec%.1fs"
+      case (nm, Left(err)) => s"$nm=FAILED($err)"
+    }
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark =
+      Tables.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+    spark.sparkContext.setLogLevel("WARN")
+    val warmDigest = load(spark, sfDir, "bench")
     // Pre-build the PURE-PLAN queries once (warm phase, untimed) so the
     // sweeps execute a pre-analyzed DataFrame — the prepared-statement
     // discipline: a library user builds the frame once and runs it many

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates PLANS.md: the formatted physical plan of each headline
   * query at sf0.01, the artifact backing the "is this the plan you'd
   * want at 100 TB" audit. Run: `sbt "runMain graft.PlanDump"`. */
@@ -333,13 +331,7 @@ survivors, examined and deliberately kept:
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    Tables.configure(spark)
+    val spark = Tables.session(8)
     spark.sparkContext.setLogLevel("ERROR")
     // Warm the shared fixpoint stores first (Bench's list): a store
     // consumer's plan is an InMemoryTableScan once the store exists,

@@ -126,11 +126,13 @@ object Tables {
     * the first compile). `spark.conf.set` refuses static confs, so
     * the value goes on the session's SQLConf, and the object is
     * initialized right here under that conf, so the cap no longer
-    * depends on which thread or session compiles first. Every
-    * program-owned session therefore calls configure right after
-    * getOrCreate(), before its first query; if this JVM has already
-    * compiled code the cap is frozen at whatever was read then, and
-    * configure warns once. CodegenReuseSpec pins the ordering.
+    * depends on which thread or session compiles first. The one way a
+    * program opens its own session is [[session]], which calls
+    * configure before the session can compile anything; if this JVM
+    * has already compiled code the cap is frozen at whatever was read
+    * then, and configure warns once. A session the program does not
+    * own (a driver's, a harness's) gets configure from its first
+    * [[t]] read. CodegenReuseSpec pins the ordering.
     *
     * Cache keys. The cache is keyed by (classloader, source), so a
     * class is reused only when both repeat. Two confs, each left alone
@@ -177,6 +179,21 @@ object Tables {
           true, classOf[org.apache.spark.sql.internal.SQLConf].getClassLoader)
       }
     }
+  }
+
+  /** The program-owned session: `local[cpus]` with shuffle width
+    * `cpus`, UTC and the UI off, configured before anything can
+    * compile. Entry points and the test suites open their session here
+    * and nowhere else (DocsConsistencySpec enforces it). */
+  def session(cpus: Int): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    configure(spark)
+    spark
   }
 
   private val CodegenCacheKey = "spark.sql.codegen.cache.maxEntries"

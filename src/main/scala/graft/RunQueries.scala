@@ -15,15 +15,9 @@ object RunQueries {
     val sfDir =
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val out = sys.env.getOrElse("SPARK_GRAFT_OUT", "/tmp/xtest")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val countOnly = sys.env.get("SPARK_GRAFT_COUNT_ONLY").contains("1")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    Tables.configure(spark)
+    val spark =
+      Tables.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
     spark.sparkContext.setLogLevel("WARN")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
     if (countOnly)

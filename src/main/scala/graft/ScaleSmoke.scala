@@ -385,34 +385,21 @@ object ScaleSmoke {
 
   def main(args: Array[String]): Unit = {
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     if (sys.env.contains("SPARK_GRAFT_SCALE100")) {
-      val spark = SparkSession.builder()
-        .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-        .config("spark.sql.shuffle.partitions",
-          sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      Tables.configure(spark)
+      val spark = Tables.session(cpus)
       spark.sparkContext.setLogLevel("WARN")
       run100(spark, src)
       spark.stop()
       return
     }
     val out = sys.props("java.io.tmpdir") + "/graft_scale10"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // SPARK_GRAFT_SMOKE_IDS=q_a,q_b runs a targeted subset (e.g. the
     // ids a new round just added) without re-measuring the full list
     val runIds = sys.env.get("SPARK_GRAFT_SMOKE_IDS")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(ids)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    Tables.configure(spark)
+    val spark = Tables.session(cpus)
     spark.sparkContext.setLogLevel("WARN")
     build10x(spark, src, out)
     // JVM/codegen warmup so 1× doesn't absorb JIT cost

@@ -61,13 +61,7 @@ object ScanCensus {
   def main(args: Array[String]): Unit = {
     val sfDir =
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    Tables.configure(spark)
+    val spark = Tables.session(32)
     spark.sparkContext.setLogLevel("ERROR")
     val rows = census(spark, sfDir).flatMap {
       case (name, Left(err)) => Some(s"$name -> ERR $err")

@@ -58,14 +58,6 @@ object Decode {
       expr("shiftright(word, 27) & 15").as("pix_row"),
       expr("shiftright(word, 31) & 3").as("kind"))
 
-  val decodeSql: String =
-    """word & 511 AS tot,
-       (word >> 9) & 1023 AS toa,
-       (word >> 19) & 15 AS cal,
-       (word >> 23) & 15 AS pix_col,
-       (word >> 27) & 15 AS pix_row,
-       (word >> 31) & 3 AS kind"""
-
   /** Full binary-stream scan (q_scan_binary, md:196-209): drain the whole
     * stream, verify word-level integrity via count/min/max/sum — the
     * occupancy/`readBlock(128)` accounting idiom as one aggregate pass. */

@@ -22,27 +22,14 @@ object Dedup {
 
   // ---- shared shingle machinery -----------------------------------------
 
-  /** doc_id → distinct 32-bit shingle hashes (Spark side). r18: the
-    * explode + per-window md5 is the consumers' dominant map work, and
-    * a single-row-group documents file serializes it on one core
-    * (JobProf: q_dedup_substring spent 0.93 of 1.37 s in that one
-    * task). fanOutNarrow spreads the narrow scan across the session
-    * cores before the heavy map; identity at production row-group
-    * counts. Downstream is integer hash aggregation — partition-order
-    * free. */
+  /** doc_id → distinct 32-bit shingle hashes (Spark side): the `hs`
+    * sets of the shared [[minhashWithSets]] fixpoint, exploded. The
+    * fixpoint's kernel hashes shingles by the same md5 routine as the
+    * DuckDB [[shinglesCte]], so these are exactly its rows; a document
+    * with fewer than 5 tokens has none. Precondition: `doc_id` is the
+    * key of `documents` (the fixpoint fails clearly otherwise). */
   private def shingles(s: SparkSession, d: String): DataFrame =
-    Tables.fanOutNarrow(s, Tables.t(s, d, "documents")
-        .select(col("doc_id"), col("text")), col("doc_id"))
-      .withColumn("toks", split(col("text"), " "))
-      .withColumn("sh_str", explode(expr(
-        """CASE WHEN size(toks) >= 5
-             THEN transform(sequence(1, size(toks) - 4),
-                    i -> concat_ws(' ', slice(toks, i, 5)))
-             ELSE array() END""")))
-      .select(col("doc_id"),
-        expr("CAST(conv(substring(md5(CAST(sh_str AS BINARY)), 1, 8), 16, 10) AS BIGINT)")
-          .as("h"))
-      .distinct()
+    minhashWithSets(s, d).select(col("doc_id"), explode(col("hs")).as("h"))
 
   /** Same shingle table for DuckDB. */
   val shinglesCte: String =
@@ -763,8 +750,8 @@ object Dedup {
       val sh = shingles(s, d)
       val eval_ = sh.filter(col("doc_id") < 10)
         .select(col("h")).distinct()
-      val corpusSizes = sh.filter(col("doc_id") >= 10)
-        .groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
+      val corpusSizes = minhashWithSets(s, d).filter(col("doc_id") >= 10)
+        .select(col("doc_id"), col("sz"))
       val shared = sh.filter(col("doc_id") >= 10)
         .join(broadcast(eval_), "h")
         .groupBy(col("doc_id")).agg(count(lit(1)).as("n_shared"))

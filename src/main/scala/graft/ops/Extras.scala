@@ -542,7 +542,7 @@ object Extras {
       // r18: the JSON round trip is ~14 µs/row of per-row codec work,
       // and the events table arrives as ONE parquet row group at the
       // bench SFs — the whole to_json → from_json → map-parse pipeline
-      // serialized on a single core (JobProf: one 1.2 s single-task
+      // serialized on a single core (measured: one 1.2 s single-task
       // job, 31 cores idle). Project the four consumed columns, then
       // fan the narrow scan out (guide §2.5) so the codec runs on
       // every core; at production row-group counts fanOutNarrow is the

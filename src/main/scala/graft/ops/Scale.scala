@@ -15,35 +15,40 @@ object Scale {
     * the plan shape PlanSpec asserts. At 100 TB this is the difference
     * between re-shuffling the fact table per query and reading
     * pre-co-located buckets. */
-  /** One-time bucketed-table setup per (session, sfDir): building the
-    * co-located layout is a LOAD step, not part of the join — cache it
-    * the way Dedup.nearPairs memoizes the near-dup pair list, so repeated
-    * queries (and the bench) measure the shuffle-free join itself. */
-  private val bucketSetup =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), Unit]()
+  /** Bucketed-table setup: building the co-located layout is a LOAD
+    * step, not part of the join, so repeated queries (and the bench)
+    * measure the shuffle-free join itself. The two tables have fixed
+    * names, so they hold one (session, sfDir) at a time: the setup is
+    * skipped only while they hold the pair asked for, and rebuilt
+    * whenever a query asks for another session or dir. */
+  private var bucketsHold: Option[(SparkSession, String)] = None
 
   private def ensureBucketTables(s: SparkSession, d: String): Unit =
-    bucketSetup.getOrElseUpdate((s, d), {
-      val wh = sys.props("java.io.tmpdir") + "/graft_warehouse"
-      s.sql(s"CREATE DATABASE IF NOT EXISTS graft_buckets LOCATION '$wh'")
-      // the in-memory catalog forgets tables across sessions but their
-      // directories persist — clear both before rebuilding
-      Seq("orders_b", "lineitem_b").foreach { t =>
-        s.sql(s"DROP TABLE IF EXISTS graft_buckets.$t")
-        org.apache.commons.io.FileUtils.deleteQuietly(
-          new java.io.File(s"$wh/$t"))
+    synchronized {
+      if (!bucketsHold.contains((s, d))) {
+        bucketsHold = None
+        val wh = sys.props("java.io.tmpdir") + "/graft_warehouse"
+        s.sql(s"CREATE DATABASE IF NOT EXISTS graft_buckets LOCATION '$wh'")
+        // the in-memory catalog forgets tables across sessions but
+        // their directories persist — clear both before rebuilding
+        Seq("orders_b", "lineitem_b").foreach { t =>
+          s.sql(s"DROP TABLE IF EXISTS graft_buckets.$t")
+          org.apache.commons.io.FileUtils.deleteQuietly(
+            new java.io.File(s"$wh/$t"))
+        }
+        val o = Tables.t(s, d, "orders")
+          .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
+        val li = Tables.t(s, d, "lineitem")
+          .select(col("l_orderkey"), col("l_quantity"))
+        o.write.mode("overwrite")
+          .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
+          .saveAsTable("graft_buckets.orders_b")
+        li.write.mode("overwrite")
+          .bucketBy(8, "l_orderkey").sortBy("l_orderkey")
+          .saveAsTable("graft_buckets.lineitem_b")
+        bucketsHold = Some((s, d))
       }
-      val o = Tables.t(s, d, "orders")
-        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-      val li = Tables.t(s, d, "lineitem")
-        .select(col("l_orderkey"), col("l_quantity"))
-      o.write.mode("overwrite")
-        .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-        .saveAsTable("graft_buckets.orders_b")
-      li.write.mode("overwrite")
-        .bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-        .saveAsTable("graft_buckets.lineitem_b")
-    })
+    }
 
   /** Load-phase warmup: build the bucketed layout outside any timed
     * query. Bench's warmup block and Verify's preamble call this, so a

@@ -763,7 +763,7 @@ object Vector {
       // r18: band/probe construction is the query's heaviest map work
       // (4 band keys + up to 9 multi-probes per vector), and a
       // single-row-group embeddings file serializes it on one core
-      // (JobProf: a 0.5 s single-task job). Fan the narrow scan out
+      // (measured: a 0.5 s single-task job). Fan the narrow scan out
       // (guide §2.5) for the banding side only — the rerank joins stay
       // on the raw scan, whose per-row work is one dot product per
       // candidate. Identity at production row-group counts.

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.{Q, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 /** Structured Streaming surface (SURVEY.md §2.2 q_stream_*): the
   * watchdog's file-arrival semantics (md:306-314) as micro-batch
@@ -32,10 +32,8 @@ object StreamOps {
     * 22.4 s (w=2) — below 8 the lost processing parallelism costs more
     * than the saved state-store instances. Production streams size
     * this to sustained throughput via the same session conf; the cap
-    * only lowers the session value, never raises it.
-    * SPARK_GRAFT_STREAM_WIDTH overrides for A/B measurement only. */
-  private[streaming] val drainWidth =
-    sys.env.get("SPARK_GRAFT_STREAM_WIDTH").map(_.toInt).getOrElse(8)
+    * only lowers the session value, never raises it. */
+  private val drainWidth = 8
 
 
   /** Streaming view of `events` (schema from a batch footer read; same
@@ -72,84 +70,77 @@ object StreamOps {
     }
   }
 
-  /** Run `f` with checkpoint I/O routed through the RAM-backed
-    * [[EphemeralCheckpoint]] manager. A finite AvailableNow drain on a
-    * TEMPORARY checkpoint gets zero recovery value from durable
-    * checkpoint files (Spark deletes the directory on success), yet
-    * pays ~40 LocalFileSystem round-trips per drain for them —
-    * measured ~115 ms of walCommit/commitOffsets/latestOffset plus
-    * ~80 ms of metadata-log reads inside queryPlanning, ~0.2-0.25 s of
-    * a warm drain's ~0.8 s wall. Restored after the drain so any
-    * explicitly-checkpointed query (StreamSpec's cross-run replays on
-    * real paths, production restarts) keeps the durable default. */
-  private def ephemeral[T](s: SparkSession)(f: => T): T = {
-    if (sys.env.contains("SPARK_GRAFT_NO_EPHEMERAL")) return f // A/B hatch
-    val key = "spark.sql.streaming.checkpointFileManagerClass"
-    val saved = s.conf.getOption(key)
-    s.conf.set(key, "graft.streaming.EphemeralCheckpoint")
-    try f
-    finally saved match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
+  /** Run `w` to completion (Trigger.AvailableNow) in the scope every
+    * finite drain shares; the session confs it sets are restored once
+    * the drain settles, so batch queries and explicitly checkpointed
+    * streams (StreamSpec's cross-run replays on real paths, production
+    * restarts) never see them:
+    *  - shuffle width capped at [[drainWidth]] (see its note on
+    *    state-store instance cost);
+    *  - background state-store maintenance pushed out of the way: a
+    *    finite drain is gone before the first interval fires, and
+    *    hundreds of finished-drain providers accumulate over a bench
+    *    session for the walker to re-visit;
+    *  - checkpoint I/O routed through the RAM-backed
+    *    [[EphemeralCheckpoint]] manager. A finite drain on a TEMPORARY
+    *    checkpoint gets zero recovery value from durable checkpoint
+    *    files (Spark deletes the directory on success), yet pays ~40
+    *    LocalFileSystem round-trips per drain for them — measured
+    *    ~115 ms of walCommit/commitOffsets/latestOffset plus ~80 ms of
+    *    metadata-log reads inside queryPlanning, ~0.2-0.25 s of a warm
+    *    drain's ~0.8 s wall;
+    *  - with `noDataBatches = false`, no trailing no-data micro-batch
+    *    (see [[drain]] for when that is safe). */
+  private def settle(s: SparkSession, w: DataStreamWriter[_],
+      noDataBatches: Boolean = true): Unit = {
+    val width = math.min(drainWidth,
+      s.conf.get("spark.sql.shuffle.partitions").toInt)
+    val scoped = Seq(
+      "spark.sql.shuffle.partitions" -> width.toString,
+      "spark.sql.streaming.stateStore.maintenanceInterval" -> "3600s",
+      "spark.sql.streaming.checkpointFileManagerClass" ->
+        "graft.streaming.EphemeralCheckpoint") ++
+      (if (noDataBatches) Nil
+       else Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> "false"))
+    val saved = scoped.map { case (k, _) => k -> s.conf.getOption(k) }
+    scoped.foreach { case (k, v) => s.conf.set(k, v) }
+    try w.trigger(Trigger.AvailableNow()).start().awaitTermination()
+    finally saved.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
     }
   }
 
   /** Run a streaming frame to completion into a memory sink; return the
     * settled table.
     *
-    * The streaming query runs with shuffle width capped at
-    * [[drainWidth]] (see its note on state-store instance cost). Batch
-    * queries are unaffected (the width is restored once the drain
-    * settles). */
+    * The trailing no-data micro-batch AvailableNow appends for
+    * watermark finalization only matters when an operator EMITS on
+    * watermark advance; skip it (≈100-150 ms/drain) whenever the
+    * settled table provably cannot change:
+    *  - complete mode: every batch is the full recomputed aggregate;
+    *  - emit-on-arrival operators (the call site passes
+    *    emitsOnFinalize = false): dropDuplicates without timers,
+    *    *WithState with NoTimeout/TimeMode.None, stream-stream INNER
+    *    joins, update-mode aggs (rows emit when their value changes —
+    *    the no-data batch changes none, it only evicts state).
+    * Kept (emitsOnFinalize = true, the default) wherever finalization
+    * DOES emit: append-mode windowed aggs (final windows emit when
+    * the watermark passes the window end), OUTER joins (null-padded
+    * rows emit on watermark advance), timer-driven processors.
+    * spark.graft.forceFinalize=true disables every skip — the
+    * reference path StreamFinalizeSpec uses to PROVE, per query, that
+    * the settled table is identical with and without the no-data
+    * batch. */
   private def drain(s: SparkSession, df: DataFrame, name: String,
       mode: String, emitsOnFinalize: Boolean = true): DataFrame = {
-    val saved = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions",
-      math.min(StreamOps.drainWidth, saved.toInt).toString)
-    // A finite drain never benefits from background snapshot
-    // maintenance (the query is gone before the first interval fires,
-    // and hundreds of finished-drain providers accumulate over a bench
-    // session for the walker to re-visit) — push it out of the way.
-    s.conf.set("spark.sql.streaming.stateStore.maintenanceInterval",
-      "3600s")
-    // The trailing no-data micro-batch AvailableNow appends for
-    // watermark finalization only matters when an operator EMITS on
-    // watermark advance; skip it (≈100-150 ms/drain) whenever the
-    // settled table provably cannot change:
-    //  - complete mode: every batch is the full recomputed aggregate;
-    //  - emit-on-arrival operators (the call site passes
-    //    emitsOnFinalize = false): dropDuplicates without timers,
-    //    *WithState with NoTimeout/TimeMode.None, stream-stream INNER
-    //    joins, update-mode aggs (rows emit when their value changes —
-    //    the no-data batch changes none, it only evicts state).
-    // Kept (emitsOnFinalize = true, the default) wherever finalization
-    // DOES emit: append-mode windowed aggs (final windows emit when
-    // the watermark passes the window end), OUTER joins (null-padded
-    // rows emit on watermark advance), timer-driven processors.
-    // spark.graft.forceFinalize=true disables every skip — the A/B
-    // hatch StreamFinalizeSpec uses to PROVE, per query, that the
-    // settled table is identical with and without the no-data batch.
     val forceFinalize =
       try s.conf.get("spark.graft.forceFinalize", "false").toBoolean
       catch { case _: Throwable => false }
-    val savedNoData =
-      s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    if ((mode == "complete" || !emitsOnFinalize) && !forceFinalize)
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-        "false")
-    try ephemeral(s) {
-      val q = df.writeStream
-        .outputMode(mode)
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", saved)
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-        savedNoData)
-    }
+    settle(s, df.writeStream.outputMode(mode).format("memory")
+        .queryName(name),
+      noDataBatches =
+        forceFinalize || (mode != "complete" && emitsOnFinalize))
     s.table(name)
   }
 
@@ -314,22 +305,14 @@ object StreamOps {
     (s, d) => {
       val out = sys.props("java.io.tmpdir") + "/graft_stream_archive"
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
-      val saved = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions",
-        math.min(StreamOps.drainWidth, saved.toInt).toString)
-      try ephemeral(s) {
-        val q = eventsStream(s, d)
-          .select(col("event_id"), col("user_id"), col("event_type"),
-            col("value"))
-          .writeStream
-          .outputMode("append")
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            batch.write.mode("append").parquet(out)
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", saved)
+      settle(s, eventsStream(s, d)
+        .select(col("event_id"), col("user_id"), col("event_type"),
+          col("value"))
+        .writeStream
+        .outputMode("append")
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          batch.write.mode("append").parquet(out)
+        })
       s.read.parquet(out)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
@@ -593,82 +576,74 @@ object StreamOps {
       val dir = sys.props("java.io.tmpdir") + "/graft_stream_raw_dat"
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
       new java.io.File(dir).mkdirs()
-      val saved = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions",
-        math.min(StreamOps.drainWidth, saved.toInt).toString)
-      try ephemeral(s) {
-        val w = eventsStream(s, d)
-          .select(unix_micros(col("ts").cast("timestamp")).as("us"),
-            expr(graft.ops.Decode.wordSparkSql).as("word"))
-          .writeStream
-          .outputMode("append")
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            batch.foreachPartition {
-              (it: Iterator[org.apache.spark.sql.Row]) =>
-                if (it.hasNext) {
-                  val pid = org.apache.spark.TaskContext.getPartitionId()
-                  val f = new java.io.File(s"$dir/batch-$id-part-$pid.dat")
-                  val os = new java.io.BufferedOutputStream(
-                    new java.io.FileOutputStream(f))
-                  try it.foreach { r =>
-                    val us = r.getLong(0)
-                    val wd = r.getLong(1)
-                    var sh = 56
-                    while (sh >= 0) {
-                      os.write(((us >> sh) & 0xFF).toInt); sh -= 8
-                    }
-                    sh = 32
-                    while (sh >= 0) {
-                      os.write(((wd >> sh) & 0xFF).toInt); sh -= 8
-                    }
-                  } finally os.close()
-                }
-            }
+      settle(s, eventsStream(s, d)
+        .select(unix_micros(col("ts").cast("timestamp")).as("us"),
+          expr(graft.ops.Decode.wordSparkSql).as("word"))
+        .writeStream
+        .outputMode("append")
+        .foreachBatch { (batch: DataFrame, id: Long) =>
+          batch.foreachPartition {
+            (it: Iterator[org.apache.spark.sql.Row]) =>
+              if (it.hasNext) {
+                val pid = org.apache.spark.TaskContext.getPartitionId()
+                val f = new java.io.File(s"$dir/batch-$id-part-$pid.dat")
+                val os = new java.io.BufferedOutputStream(
+                  new java.io.FileOutputStream(f))
+                try it.foreach { r =>
+                  val us = r.getLong(0)
+                  val wd = r.getLong(1)
+                  var sh = 56
+                  while (sh >= 0) {
+                    os.write(((us >> sh) & 0xFF).toInt); sh -= 8
+                  }
+                  sh = 32
+                  while (sh >= 0) {
+                    os.write(((wd >> sh) & 0xFF).toInt); sh -= 8
+                  }
+                } finally os.close()
+              }
           }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        w.awaitTermination()
-        // binaryFile's schema is fixed but the streaming source still
-        // demands it be spelled out
-        val binSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("path",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("modificationTime",
-            org.apache.spark.sql.types.TimestampType),
-          org.apache.spark.sql.types.StructField("length",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("content",
-            org.apache.spark.sql.types.BinaryType)))
-        val words = s.readStream.format("binaryFile").schema(binSchema)
-          .load(dir)
-          .select(col("content"),
-            (length(col("content")) / 13).cast("long").as("n"))
-          .filter(col("n") >= 1)
-          .select(col("content"),
-            explode(expr("sequence(CAST(0 AS BIGINT), n - 1)")).as("i"))
-          .select(
-            expr("""CAST(conv(hex(substring(content,
-                      CAST(i * 13 + 1 AS INT), 8)), 16, 10) AS BIGINT)""")
-              .as("us"),
-            expr("""CAST(conv(hex(substring(content,
-                      CAST(i * 13 + 9 AS INT), 5)), 16, 10) AS BIGINT)""")
-              .as("word"))
-          .withColumn("ts", expr(
-            "CAST(timestamp_micros(us) AS TIMESTAMP_NTZ)"))
-          .withColumn("kind", expr("shiftright(word, 31) & 3"))
-          .withColumn("pix_row", expr("shiftright(word, 27) & 15"))
-          .filter(col("kind") =!= 0)                 // filler suppression
-        drain(s,
-          words
-            .groupBy(window(col("ts"), "1 hour"), col("pix_row"))
-            .agg(count(lit(1)).as("n_hits"),
-              sum(expr("word & 511")).as("sum_tot")),
-          "stream_binary_raw_tbl", "complete")
-          .select(
-            col("window.start").cast("timestamp_ntz").as("w_start"),
-            col("pix_row"), col("n_hits"), col("sum_tot"))
-          .orderBy(col("w_start"), col("pix_row"))
-      } finally s.conf.set("spark.sql.shuffle.partitions", saved)
+        })
+      // binaryFile's schema is fixed but the streaming source still
+      // demands it be spelled out
+      val binSchema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("path",
+          org.apache.spark.sql.types.StringType),
+        org.apache.spark.sql.types.StructField("modificationTime",
+          org.apache.spark.sql.types.TimestampType),
+        org.apache.spark.sql.types.StructField("length",
+          org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("content",
+          org.apache.spark.sql.types.BinaryType)))
+      val words = s.readStream.format("binaryFile").schema(binSchema)
+        .load(dir)
+        .select(col("content"),
+          (length(col("content")) / 13).cast("long").as("n"))
+        .filter(col("n") >= 1)
+        .select(col("content"),
+          explode(expr("sequence(CAST(0 AS BIGINT), n - 1)")).as("i"))
+        .select(
+          expr("""CAST(conv(hex(substring(content,
+                    CAST(i * 13 + 1 AS INT), 8)), 16, 10) AS BIGINT)""")
+            .as("us"),
+          expr("""CAST(conv(hex(substring(content,
+                    CAST(i * 13 + 9 AS INT), 5)), 16, 10) AS BIGINT)""")
+            .as("word"))
+        .withColumn("ts", expr(
+          "CAST(timestamp_micros(us) AS TIMESTAMP_NTZ)"))
+        .withColumn("kind", expr("shiftright(word, 31) & 3"))
+        .withColumn("pix_row", expr("shiftright(word, 27) & 15"))
+        .filter(col("kind") =!= 0)                 // filler suppression
+      drain(s,
+        words
+          .groupBy(window(col("ts"), "1 hour"), col("pix_row"))
+          .agg(count(lit(1)).as("n_hits"),
+            sum(expr("word & 511")).as("sum_tot")),
+        "stream_binary_raw_tbl", "complete")
+        .select(
+          col("window.start").cast("timestamp_ntz").as("w_start"),
+          col("pix_row"), col("n_hits"), col("sum_tot"))
+        .orderBy(col("w_start"), col("pix_row"))
     },
     Some(s"""${graft.ops.Decode.framesCte}
              SELECT time_bucket(INTERVAL '1 hour', ts) AS w_start,
@@ -802,21 +777,13 @@ object StreamOps {
     (s, d) => {
       val dir = sys.props("java.io.tmpdir") + "/graft_stream_upsert"
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-      val saved = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions",
-        math.min(StreamOps.drainWidth, saved.toInt).toString)
-      try ephemeral(s) {
-        val w = eventsStream(s, d)
-          .select(col("user_id"), col("event_id"), col("ts"), col("value"))
-          .writeStream
-          .outputMode("append")
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            upsertBatch(s, dir, batch, id)
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        w.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", saved)
+      settle(s, eventsStream(s, d)
+        .select(col("user_id"), col("event_id"), col("ts"), col("value"))
+        .writeStream
+        .outputMode("append")
+        .foreachBatch { (batch: DataFrame, id: Long) =>
+          upsertBatch(s, dir, batch, id)
+        })
       s.read.parquet(s"$dir/current")
         .select(col("user_id"), col("event_id").as("latest_event"),
           col("ts"), col("value"))
@@ -907,22 +874,14 @@ object StreamOps {
     (s, d) => {
       val dir = sys.props("java.io.tmpdir") + "/graft_stream_decon"
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-      val saved = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions",
-        math.min(StreamOps.drainWidth, saved.toInt).toString)
-      try ephemeral(s) {
-        val w = documentsStream(s, d)
-          .select(col("doc_id"), col("text"), col("source"))
-          .writeStream
-          .outputMode("append")
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            deconBatchPartial(batch, d)
-              .write.mode("append").parquet(s"$dir/partials")
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        w.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", saved)
+      settle(s, documentsStream(s, d)
+        .select(col("doc_id"), col("text"), col("source"))
+        .writeStream
+        .outputMode("append")
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          deconBatchPartial(batch, d)
+            .write.mode("append").parquet(s"$dir/partials")
+        })
       s.read.parquet(s"$dir/partials")
         .groupBy(col("source"))
         .agg(sum(col("n_docs")).as("n_docs"),

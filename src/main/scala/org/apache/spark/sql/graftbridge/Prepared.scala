@@ -40,7 +40,7 @@ import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
   * runtime stats. For those plans the AQE wrapper is pure per-run tax
   * — it splits the one-exchange job into map-stage + result-stage JOBS
   * with a DAGScheduler gap and a listener round-trip between them
-  * (ExecProf: 2+ jobs of 5-30 ms plus 10-40 ms inter-job gaps, ~0.14 s
+  * (measured: 2+ jobs of 5-30 ms plus 10-40 ms inter-job gaps, ~0.14 s
   * per tiny-tier query at the bench's scale) — so run() prepares them
   * with the plain rule set (`QueryExecution.preparations(session,
   * None, false)`: PlanSubqueries, EnsureRequirements, codegen — the
@@ -141,43 +141,8 @@ object PreparedCount {
   def apply(df: org.apache.spark.sql.Dataset[_]): PreparedCount = {
     val counted = df.groupBy().count()
     val qe0 = counted.queryExecution
-    // A/B hatch (dev only — the shipped gate is "auto"): "off" keeps
-    // the AQE wrapper on every run, "force" drops it on every run.
-    // Used by profiling mains to measure the wrapper's per-run cost on
-    // plans the auto gate keeps adaptive.
-    val mode =
-      try qe0.sparkSession.conf.get("spark.graft.preparedNoAqe", "auto")
-      catch { case _: Throwable => "auto" }
-    val skip = mode match {
-      case "off"   => false
-      case "force" => true
-      case _       => noDecisionPlan(qe0.sparkSession, qe0.sparkPlan)
-    }
     new PreparedCount(
       qe0.sparkSession, qe0.analyzed, qe0.optimizedPlan, qe0.sparkPlan,
-      skip)
-  }
-
-  /** Dev-profiler hook (ExecProf): one prepared run split into
-    * (plan-prep, execution-id bookkeeping, job wall) seconds. Lives
-    * here because the split needs the QE internals; not used by the
-    * bench, which charges the three parts as one number. */
-  def profile(df: org.apache.spark.sql.Dataset[_])
-      : () => (Double, Double, Double) = {
-    val p = apply(df)
-    () => {
-      val t0 = System.nanoTime()
-      val qe = p.freshQe()
-      val plan = qe.executedPlan
-      val t1 = System.nanoTime()
-      var tInner = 0L
-      SQLExecution.withNewExecutionId(qe) {
-        val s = System.nanoTime()
-        plan.executeCollect()
-        tInner = System.nanoTime() - s
-      }
-      val t2 = System.nanoTime()
-      ((t1 - t0) / 1e9, (t2 - t1 - tInner) / 1e9, tInner / 1e9)
-    }
+      noDecisionPlan(qe0.sparkSession, qe0.sparkPlan))
   }
 }

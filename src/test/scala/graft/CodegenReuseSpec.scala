@@ -7,8 +7,8 @@ import org.apache.spark.metrics.source.CodegenMetrics
   * below generate more than that per pass, so under the default the
   * LRU evicts every class before its next use and each repeat pass
   * recompiles all of them. Tables.configure sizes the cache before the
-  * JVM's first compile (SparkSuite.session calls it right after
-  * getOrCreate), so the second pass compiles nothing. Counts only, no
+  * JVM's first compile (SparkSuite.session opens through
+  * Tables.session), so the second pass compiles nothing. Counts only, no
   * timings. */
 class CodegenReuseSpec extends SparkSuite {
 

@@ -14,6 +14,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *  2. Every SCALE-worthy id (bench_full.json time > 1 s at sf0.1)
   *     appears somewhere in SCALE.md — heavy operators must carry
   *     measured 10× evidence, not an argument.
+  *  3. Only `Tables.session` builds a SparkSession, so every
+  *     program-owned session is configured before it can compile.
   *
   * Pure file/registry checks — no SparkSession, runs in milliseconds.
   */
@@ -81,5 +83,29 @@ class DocsConsistencySpec extends AnyFunSuite {
         s"${missing.toSeq.sorted.mkString(", ")}\n" +
         "Measure them (SPARK_GRAFT_SMOKE_IDS=... runMain " +
         "graft.ScaleSmoke) and record the 10x ratio in SCALE.md.")
+  }
+
+  test("only Tables.session builds a SparkSession") {
+    val builder = """SparkSession\s*\.\s*builder\s*\(""".r
+    val files = {
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src"))
+      try {
+        import scala.jdk.CollectionConverters._
+        walk.iterator().asScala.map(_.toString)
+          .filter(_.endsWith(".scala")).toList
+      } finally walk.close()
+    }
+    // code only: scaladoc and line comments may name the builder
+    def calls(path: String): Boolean =
+      read(path).linesIterator.map(_.trim)
+        .filterNot(l => l.startsWith("*") || l.startsWith("/*") ||
+          l.startsWith("//"))
+        .exists(l => builder.findFirstIn(l).isDefined)
+    val registry = "src/main/scala/graft/Registry.scala"
+    val builders = files.filter(calls).sorted
+    assert(files.contains(registry), s"no $registry")
+    assert(builders == Seq(registry),
+      "sessions built outside Tables.session: " +
+        builders.filterNot(_ == registry).mkString(", "))
   }
 }

@@ -332,4 +332,31 @@ class RelationalSpec extends SparkSuite {
     // the same program under a plain = join loses exactly the NULL row
     assert(got.length === rows.map(_._1).distinct.length)
   }
+
+  test("q_join_bucketed reads the dir it is asked for, dir after dir") {
+    // the bucketed tables have fixed names: a second dir must rebuild
+    // them, and coming back to the first must rebuild them again
+    val subset = fixtureDir("bucketed_subset")(
+      "orders" -> Tables.t(spark, sf0, "orders")
+        .filter(col("o_orderkey") % 3 === 0),
+      "lineitem" -> Tables.t(spark, sf0, "lineitem")
+        .filter(col("l_orderkey") % 3 === 0))
+    def unbucketed(dir: String): Seq[String] =
+      Tables.t(spark, dir, "orders")
+        .join(Tables.t(spark, dir, "lineitem"),
+          col("o_orderkey") === col("l_orderkey"))
+        .groupBy(col("o_orderkey"))
+        .agg(count(lit(1)).as("n_items"),
+          (sum(floor(col("l_quantity") * 100 + 0.5).cast("long")) / 100.0)
+            .as("sum_qty"),
+          round(max(col("o_totalprice")), 2).as("total"))
+        .collect().map(_.toString).sorted.toSeq
+    Seq(sf0, subset, sf0).foreach { dir =>
+      val got = q("q_join_bucketed", dir).collect().map(_.toString)
+        .sorted.toSeq
+      val want = unbucketed(dir)
+      assert(got.size === want.size, s"row count on $dir")
+      assert(got === want, s"rows on $dir")
+    }
+  }
 }

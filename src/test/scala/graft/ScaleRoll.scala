@@ -1,11 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** r17: the 4th ratio-vs-scale point (~sf1). Rolls a named id subset
-  * over an arbitrary data dir with the Bench protocol's shape — same
-  * warm phase (shared fixpoints, table pre-touch, format fixtures),
-  * two separated full sweeps, each id charged min(pass1, pass2), the
-  * timed action a bench-parity count() — WITHOUT the prepared-plan
+  * over an arbitrary data dir with the Bench protocol's shape — the
+  * same load phase (`Bench.load`), two separated full sweeps, each id
+  * charged min(pass1, pass2), the timed action a bench-parity
+  * count() — WITHOUT the prepared-plan
   * memo (every pass rebuilds from the registry fn and pays the whole
   * Catalyst pipeline, which only makes the Spark side SLOWER than the
   * official protocol: conservative for a ratio claim). Usage:
@@ -16,26 +15,10 @@ object ScaleRoll {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "pass query ids")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/graft_scale10")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark =
+      Tables.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("WARN")
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window",
-      org.apache.logging.log4j.Level.ERROR)
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.streaming.runtime",
-      org.apache.logging.log4j.Level.ERROR)
-    spark.range(2000000L).selectExpr("sum(id)").collect()
-    Tables.names.foreach(n =>
-      try Tables.t(spark, sfDir, n) catch { case _: Throwable => () })
-    try ops.Scale.warm(spark, sfDir) catch { case _: Throwable => () }
-    try ops.Extras.warm(spark, sfDir) catch { case _: Throwable => () }
-    Fixpoints.warmAll(spark, sfDir, "roll")
+    Bench.load(spark, sfDir, "roll")
     def sweep(): Map[String, Double] = args.map { id =>
       val t0 = System.nanoTime()
       try SparkEntry.queries(id)(spark, sfDir).count()

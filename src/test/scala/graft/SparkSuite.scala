@@ -28,24 +28,14 @@ trait SparkSuite extends AnyFunSuite {
 
 object SparkSuite {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // FileSourceScanExec renders its metadata (DataFilters, …) into
-      // a string ONCE, lazily, truncated at this length under whichever
-      // conf is active at first render. PlanGuardSpec hashes plans that
-      // can embed scan nodes first rendered by an earlier suite — keep
-      // every render in the test JVM untruncated so the hash cannot
-      // depend on suite order.
-      .config("spark.sql.maxMetadataStringLength", "100000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // before the JVM's first query: sizes the codegen cache (see
-    // Tables.configure), which can only take effect ahead of the first
-    // compile
-    Tables.configure(s)
+    val s = Tables.session(4)
+    // FileSourceScanExec renders its metadata (DataFilters, …) into
+    // a string ONCE, lazily, truncated at this length under whichever
+    // conf is active at first render. PlanGuardSpec hashes plans that
+    // can embed scan nodes first rendered by an earlier suite — keep
+    // every render in the test JVM untruncated so the hash cannot
+    // depend on suite order. Set before the session's first query.
+    s.conf.set("spark.sql.maxMetadataStringLength", "100000")
     s.sparkContext.setLogLevel("ERROR")
     s
   }
