@@ -11,17 +11,21 @@ import org.apache.spark.sql.execution.LogicalRDD
   *  - Keying: an entry is keyed by (session, dir, name). It is built
   *    once, by the first caller, and its value carries the action that
   *    frees what it pins.
-  *  - Materialization stays with each entry's build: [[cacheOnce]]
-  *    for the right-sized checkpoint layout, an eager or lazy
-  *    `persist()` for the rest (see [[holding]]).
+  *  - One materialization rule: an entry's build returns materialized
+  *    data. [[cacheOnce]] persists, counts and right-sizes; the other
+  *    builds run their own action (a `count()` of a `persist()`, an
+  *    eager checkpoint) before they return. So every consumer plans
+  *    against measured statistics, whether or not anything was warmed
+  *    first, and a second read of an entry launches no job.
   *  - Bound: at most [[MaxDirs]] (session, dir) working sets are held.
   *    When a new one arrives past the bound, the least recently used
   *    OTHER working set is released, synchronously, under the registry
   *    lock. The dir being entered is never the victim, so fixpoints
   *    stacked inside one build never lose their inner entries.
   *    [[release]] frees one working set on request.
-  *  - Warm list: [[warmSteps]] is the one named list of warm steps that
-  *    builds every shared fixpoint of a dir ahead of its consumers. */
+  *  - Warm list: [[warmSteps]] calls the accessors of every shared
+  *    fixpoint of a dir, tier by tier. It exists only so that a
+  *    query's time charges the operator and not the shared build. */
 object Fixpoints {
 
   /** A memoized value and the action that frees what it pins. */
@@ -194,22 +198,45 @@ object Fixpoints {
   private val rowsPerCachedPartition = 2048L
 
   /** The shared-fixpoint warm list, in the order Bench runs it. Each
-    * step builds one tier's fixpoints of a (session, dir), so that a
-    * query's time charges the operator itself and its plan reads the
-    * stores, whichever query runs first. */
-  val warmSteps: Seq[(String, (SparkSession, String) => Unit)] = Seq(
-    "dedup fixpoints" -> ops.Dedup.warmShared,
-    "graph fixpoints" -> ops.Insights.warmShared,
-    "graph peels" -> ops.GraphScores.warmShared,
-    "day grid" -> ops.Series.warmShared,
-    "anchor nn" -> ops.Vector.warmShared,
-    "landmark bfs" -> ops.Causal.warmShared,
-    "bigram models" -> ops.Corpus.warmShared,
-    "mixture models" -> ops.Doremi.warmShared,
-    "curate stages" -> ops.TextOps.warmShared,
-    "quality scores" -> ops.Learn.warmShared,
-    "kmeans cents" -> ops.Pipeline.warmShared,
-    "phash frame" -> ops.Multimodal.warmShared)
+    * step reads one tier's accessors of a (session, dir); reading an
+    * entry builds it, and a build returns materialized data. */
+  val warmSteps: Seq[(String, (SparkSession, String) => Unit)] = {
+    import ops._
+    def step(name: String)(read: (SparkSession, String) => Any) =
+      name -> ((s: SparkSession, d: String) => { read(s, d); () })
+    Seq(
+      step("dedup fixpoints") { (s, d) =>
+        Dedup.nearComponents(s, d) // builds minhashWithSets, nearPairs
+        Dedup.simhashTable(s, d); Dedup.bigrams(s, d)
+      },
+      step("graph fixpoints") { (s, d) =>
+        Insights.undirectedLinkEdges(s, d)
+        Insights.directedEdgesOutdeg(s, d) // builds directedDistinctEdges
+        Insights.labelPropLabels(s, d); Insights.linkDegrees(s, d)
+        Insights.closedTriangles(s, d); Insights.wedgePairStats(s, d)
+      },
+      step("graph peels")((s, d) =>
+        Seq(3, 5).foreach(GraphScores.peel(s, d, _))),
+      step("day grid")(Series.dailyRevenue),
+      step("anchor nn") { (s, d) =>
+        Vector.labelAnchorNn3(s, d)
+        Vector.pqLutShared(s, d) // builds pqCodesShared
+      },
+      step("landmark bfs") { (s, d) =>
+        Causal.landmarkBfs(s, d, Causal.lbfsMaxRounds)
+        Causal.logregWeights(s, d)
+      },
+      step("bigram models") { (s, d) =>
+        Corpus.bigramLqShared(s, d) // builds docBigrams and fullModel
+        Corpus.genScore(s, d)
+        Corpus.dsirLrFull(s, d); Corpus.dsirLrTrain(s, d) // dsirDocBuckets
+      },
+      step("mixture models")(Doremi.ownScore), // builds sourceModel
+      step("curate stages")(TextOps.curateStages),
+      step("quality scores")(Learn.qualityScores),
+      step("kmeans cents")(Pipeline.kmeansFinalCents),
+      step("phash frame")(Multimodal.phashFrame))
+  }
 
   /** Run every warm step on (s, d), in order. Each step's time or
     * failure is printed on stderr under `tag` and returned; a failed

@@ -96,7 +96,9 @@ object Tables {
 
   /** Session conf every entry point (Verify/Bench/tests) applies —
     * also re-applied lazily on the first table read per session, so a
-    * driver-owned session gets it too.
+    * driver-owned session gets it too. It installs graft's SQL
+    * functions and as-of planner hooks ([[GraftExtensions.install]]);
+    * stream clones of the session copy them.
     *
     * Cached-plan partitioning stays at Spark's stock behavior (AQE
     * does not re-bucket persisted plans): a global
@@ -163,6 +165,7 @@ object Tables {
   def configure(spark: SparkSession): Unit = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    GraftExtensions.install(spark)
     val conf = spark.sessionState.conf
     CodegenDefaults.foreach { case (k, v) =>
       if (!conf.contains(k)) conf.setConfString(k, v)
@@ -178,6 +181,19 @@ object Tables {
           "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator$",
           true, classOf[org.apache.spark.sql.internal.SQLConf].getClassLoader)
       }
+    }
+  }
+
+  /** Run `body` with the session confs `kv` set, then restore each key
+    * as it was before: its old value, or unset when it had none. A frame
+    * `body` returns lazily runs after the restore. */
+  def withConfs[T](s: SparkSession, kv: (String, String)*)(body: => T): T = {
+    val saved = kv.map { case (k, _) => k -> s.conf.getOption(k) }
+    kv.foreach { case (k, v) => s.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
     }
   }
 

@@ -14,8 +14,10 @@ import org.apache.spark.sql.functions._
   * replicas — near-dup structure (pairs, clusters, shingle blocks) is
   * exactly 10 independent copies of the original, never a cross-replica
   * pair explosion. Embeddings replicate with shifted ids (k-means/PCA
-  * build no pairs, so identical vectors are harmless). All other
-  * tables symlink to the originals.
+  * build no pairs, so identical vectors are harmless). Events
+  * replicate with disjoint users; orders and lineitem share one
+  * order-key shift per replica, so every line keeps its order. The
+  * dimension tables symlink to the originals.
   *
   * Usage: sbt "runMain graft.ScaleSmoke"; prints a markdown table. */
 object ScaleSmoke {
@@ -446,10 +448,11 @@ object ScaleSmoke {
     java.nio.file.Files.move(tmp.toPath, dir.toPath)
   }
 
-  /** Write the 10× documents/embeddings blow-up; symlink other tables. */
+  /** Write the 10× blow-up of documents, embeddings, events, orders and
+    * lineitem; symlink the other tables. */
   private def build10x(spark: SparkSession, src: String, out: String): Unit = {
     val dir = new java.io.File(out)
-    if (new java.io.File(out + "/_done").exists()) return
+    if (new java.io.File(out + "/_done_fk").exists()) return
     org.apache.commons.io.FileUtils.deleteQuietly(dir)
     dir.mkdirs()
     val rep = spark.range(10).select(col("id").as("rep"))
@@ -490,22 +493,25 @@ object ScaleSmoke {
       .repartition(1)
       .write.mode("overwrite").parquet(s"$out/events.parquet")
     collapseToFile(s"$out/events.parquet")
-    // lineitem: shifted order keys keep orders at ~7 lines each, so the
-    // basket pair explode scales 10x, never 100x
-    val li = spark.read.parquet(s"$src/lineitem.parquet")
-    val liMx = li.agg(max(col("l_orderkey"))).first().getLong(0) + 1
-    li.crossJoin(broadcast(rep))
-      .withColumn("l_orderkey", col("l_orderkey") + col("rep") * liMx)
-      .drop("rep")
-      .repartition(1)
-      .write.mode("overwrite").parquet(s"$out/lineitem.parquet")
-    collapseToFile(s"$out/lineitem.parquet")
-    Seq("region", "nation", "customer", "supplier", "part",
-      "orders").foreach { t =>
+    // orders and lineitem: one order-key shift per replica for both, so
+    // every replica's lines keep their order (~7 lines each: the basket
+    // pair explode scales 10x, never 100x); o_custkey is kept
+    val okMx = spark.read.parquet(s"$src/orders.parquet")
+      .agg(max(col("o_orderkey"))).first().getLong(0) + 1
+    Seq("orders" -> "o_orderkey", "lineitem" -> "l_orderkey").foreach {
+      case (t, key) =>
+        spark.read.parquet(s"$src/$t.parquet").crossJoin(broadcast(rep))
+          .withColumn(key, col(key) + col("rep") * okMx)
+          .drop("rep")
+          .repartition(1)
+          .write.mode("overwrite").parquet(s"$out/$t.parquet")
+        collapseToFile(s"$out/$t.parquet")
+    }
+    Seq("region", "nation", "customer", "supplier", "part").foreach { t =>
       java.nio.file.Files.createSymbolicLink(
         java.nio.file.Paths.get(s"$out/$t.parquet"),
         java.nio.file.Paths.get(s"$src/$t.parquet"))
     }
-    new java.io.File(out + "/_done").createNewFile()
+    new java.io.File(out + "/_done_fk").createNewFile()
   }
 }

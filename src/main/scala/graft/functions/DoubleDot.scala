@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -75,12 +74,4 @@ case class DoubleDot(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DoubleDot =
     copy(left = newLeft, right = newRight)
-}
-
-object DoubleDot {
-  /** Register `double_dot` in the session's function registry
-    * (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "double_dot", exprs => DoubleDot(exprs(0), exprs(1)), "scala_udf")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -78,12 +77,4 @@ case class FloatDot(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): FloatDot =
     copy(left = newLeft, right = newRight)
-}
-
-object FloatDot {
-  /** Register `float_dot` in the session's function registry (idempotent)
-    * so query code can use it via expr("float_dot(a, b)") / SQL. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "float_dot", exprs => FloatDot(exprs(0), exprs(1)), "scala_udf")
 }

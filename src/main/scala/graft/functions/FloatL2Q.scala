@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -89,12 +88,4 @@ case class FloatL2Q(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): FloatL2Q =
     copy(left = newLeft, right = newRight)
-}
-
-object FloatL2Q {
-  /** Register `float_l2q` in the session's function registry
-    * (idempotent) so query code can use it via expr / SQL. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "float_l2q", exprs => FloatL2Q(exprs(0), exprs(1)), "scala_udf")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -73,7 +72,7 @@ object LshBandsText {
     new GenericArrayData(bands)
   }
 
-  /** Arity-checked builder shared by the registry hooks: a zero-arg or
+  /** Arity-checked builder of `GraftExtensions.sqlFunctions`: a zero-arg or
     * multi-arg `lsh_bands_text(...)` call must fail analysis cleanly,
     * not throw NoSuchElementException / silently drop arguments. */
   def build(exprs: Seq[Expression]): LshBandsText = {
@@ -87,10 +86,4 @@ object LshBandsText {
           "docroot" -> ""))
     LshBandsText(exprs.head)
   }
-
-  /** Register `lsh_bands_text` in the session's function registry
-    * (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "lsh_bands_text", build, "scala_udf")
 }

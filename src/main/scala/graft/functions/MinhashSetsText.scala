@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression, UnsafeArrayData}
@@ -157,7 +156,7 @@ object MinhashSetsText {
     new GenericInternalRow(row)
   }
 
-  /** Arity-checked builder shared by the registry hooks. */
+  /** Arity-checked builder of `GraftExtensions.sqlFunctions`. */
   def build(exprs: Seq[Expression]): MinhashSetsText = {
     if (exprs.length != 1)
       throw new org.apache.spark.sql.AnalysisException(
@@ -169,10 +168,4 @@ object MinhashSetsText {
           "docroot" -> ""))
     MinhashSetsText(exprs.head)
   }
-
-  /** Register `minhash_sets_text` in the session's function registry
-    * (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sets_text", build, "scala_udf")
 }

@@ -317,7 +317,7 @@ object Causal {
     * A shared persisted fixpoint: TWO registered consumers (logreg
     * accuracy, featimp's permutation harness) fit the identical model,
     * so the 3-pass GD chain runs once per (session, dir). */
-  private def logregWeights(s: SparkSession, d: String): DataFrame =
+  private[graft] def logregWeights(s: SparkSession, d: String): DataFrame =
     Fixpoints.cacheOnce(s, d, "logregw") { logregWeightsBuild(s, d) }
 
   private def logregWeightsBuild(s: SparkSession, d: String): DataFrame = {
@@ -1646,7 +1646,7 @@ object Causal {
     * has dist ≤ r), so one build serves all three instead of three
     * fresh 4-6 round BFS runs per bench pass. Its release frees every
     * round's checkpoint blocks. */
-  private val lbfsMaxRounds = 6
+  private[graft] val lbfsMaxRounds = 6
 
   private[graft] def landmarkBfs(s: SparkSession, d: String,
       rounds: Int): DataFrame = {
@@ -1660,17 +1660,6 @@ object Causal {
     else full.filter(col("dist") <= rounds.toLong)
   }
 
-  /** Bench-warmup hook: materialize the shared landmark-BFS labels. */
-  private[graft] def warmShared(s: SparkSession, d: String): Unit = {
-    landmarkBfs(s, d, lbfsMaxRounds).count()
-    // the logistic weights are a shared fixpoint too (q_ml_logreg and
-    // q_ml_featimp both consume the one trained model) — un-warmed,
-    // whichever consumer the bench reaches first was charged the whole
-    // 4-round IRLS build (~1.2 s at sf0.1 landing on q_ml_featimp)
-    logregWeights(s, d).count()
-    ()
-  }
-
   /** The checkpointed labels after each round; the last is the result. */
   private def landmarkBfsBuild(s: SparkSession, d: String,
       rounds: Int): Seq[DataFrame] = {
@@ -1679,10 +1668,8 @@ object Causal {
       .unionAll(und.select(col("b").as("u"), col("a").as("w")))
     // size the tiny per-round shuffles to the (cached, counted) edge
     // list, not the session default — the q_graph_bfs discipline
-    val saved = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions",
-      math.min(8, saved.toInt).toString)
-    try {
+    val width = math.min(8, s.conf.get("spark.sql.shuffle.partitions").toInt)
+    Tables.withConfs(s, "spark.sql.shuffle.partitions" -> width.toString) {
       val seed = s.range(8)
         .select(col("id").as("l"), col("id").as("v"), lit(0L).as("dist"))
       (1 to rounds).scanLeft(seed) { (labels, _) =>
@@ -1693,7 +1680,7 @@ object Causal {
           .groupBy(col("l"), col("v")).agg(min(col("dist")).as("dist"))
           .localCheckpoint() // eager: materialize under the capped width
       }.tail
-    } finally s.conf.set("spark.sql.shuffle.partitions", saved)
+    }
   }
 
   val qGraphCloseness = Q(
@@ -1809,10 +1796,9 @@ object Causal {
       val labels = landmarkBfs(s, d, betwRounds)
       // the 2R sigma/delta rounds shuffle tiny frontier tables — cap
       // their width like the BFS itself
-      val saved = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions",
-        math.min(8, saved.toInt).toString)
-      try {
+      val width =
+        math.min(8, s.conf.get("spark.sql.shuffle.partitions").toInt)
+      Tables.withConfs(s, "spark.sql.shuffle.partitions" -> width.toString) {
       // forward: shortest-path counts per (landmark, node, depth).
       // Each round checkpoints ONLY its own (small) sigma stage — the
       // old form checkpointed the whole growing union, re-copying
@@ -1867,7 +1853,7 @@ object Causal {
         // IEEE quotient of the same integer is bit-identical in both
         // engines (the per-row-doubles-stay-raw rule).
         .selectExpr("v", "del_sum", "del_sum / 2e6 AS betweenness")
-      } finally s.conf.set("spark.sql.shuffle.partitions", saved)
+      }
     },
     Some {
       val sigStages = (1 to betwRounds).map { k =>

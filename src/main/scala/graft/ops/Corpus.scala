@@ -617,20 +617,6 @@ object Corpus {
       scoreUnder(docBigrams(s, d), cg, tg, vg)
     }
 
-  /** Bench-warmup hook for the shared bigram-model fixpoints, so each
-    * consumer's bench number charges the query-local work, not
-    * whichever registry neighbor built the corpus model first. */
-  private[graft] def warmShared(s: SparkSession, d: String): Unit = {
-    docBigrams(s, d).count()
-    val (cg, tg, vg) = fullModel(s, d)
-    cg.count(); tg.count(); vg.count()
-    bigramLqShared(s, d).count()
-    genScore(s, d).count()
-    dsirDocBuckets(s, d).count()
-    dsirLrFull(s, d).count()
-    dsirLrTrain(s, d).count()
-  }
-
   /** Bits per bigram from a doc's exact integer score: `sumI`
     * millionths of a bit over `nb` bigrams, rounded half-up to a whole
     * millionth in integer arithmetic (sumI >= 0, nb > 0) and divided

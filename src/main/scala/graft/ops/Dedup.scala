@@ -89,7 +89,6 @@ object Dedup {
     * and distinct ids together and fails on a mismatch. */
   private[graft] def minhashWithSets(s: SparkSession, d: String): DataFrame =
     Fixpoints.memo(s, d, "minhashsets") {
-      graft.functions.MinhashSetsText.register(s)
       // The kernel is NULL exactly when the text has fewer than 5
       // tokens; those rows are dropped by that test on the text.
       // Filtering the kernel's NULLs instead would be pushed below
@@ -301,7 +300,7 @@ object Dedup {
     * sides of the candidate self-join, both sides of the verify join,
     * sizes) and without the cache each one re-runs the explode+distinct
     * shuffle over the full corpus. */
-  private def bigrams(s: SparkSession, d: String): DataFrame =
+  private[graft] def bigrams(s: SparkSession, d: String): DataFrame =
     Fixpoints.memo(s, d, "bigrams") {
       val df = Tables.t(s, d, "documents")
         .withColumn("toks", split(col("text"), " "))
@@ -414,7 +413,6 @@ object Dedup {
   val qDedupEmbed = Q(
     "q_dedup_embed",
     (s, d) => {
-      graft.functions.FloatDot.register(s)
       val e = Tables.t(s, d, "embeddings")
         .withColumn("bucket", expr(
           """aggregate(sequence(1, 8),
@@ -532,11 +530,10 @@ object Dedup {
     // the edge count is already materialized by the persist action above,
     // so sizing the propagation shuffles to the graph costs nothing extra
     val spark = pairs.sparkSession
-    val saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      propagationWidth(nEdges, saved.toInt).toString)
-    try connectedComponentsLoop(edges, maxIter)
-    finally spark.conf.set("spark.sql.shuffle.partitions", saved)
+    val width = propagationWidth(nEdges,
+      spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    Tables.withConfs(spark, "spark.sql.shuffle.partitions" -> width.toString)(
+      connectedComponentsLoop(edges, maxIter))
   }
 
   private def connectedComponentsLoop(
@@ -843,9 +840,7 @@ object Dedup {
 
   /** Embeddings with the 6-bit sign cell and double-typed vector — the
     * shared base frame of the semantic-dedup tier. */
-  private def semE0(s: SparkSession, d: String): DataFrame = {
-    graft.functions.FloatDot.register(s)
-    graft.functions.DoubleDot.register(s)
+  private def semE0(s: SparkSession, d: String): DataFrame =
     Tables.t(s, d, "embeddings")
       .withColumn("cell", expr(
         """aggregate(sequence(1, 6), CAST(0 AS BIGINT),
@@ -853,7 +848,6 @@ object Dedup {
                THEN shiftleft(CAST(1 AS BIGINT), i - 1) ELSE 0 END)"""))
       .withColumn("emb_d",
         expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
-  }
 
   /** Centroid-affinity priority per vector: exact per-cell elementwise
     * BIGINT sums of millionth-quantized elements (cosine is scale-
@@ -1388,7 +1382,6 @@ object Dedup {
     "q_dedup_bloom_ingest",
     (s, d) => {
       import org.apache.spark.sql.expressions.Window
-      graft.functions.BloomFns.register(s)
       val mh = minhashWithSets(s, d)
       val corpusBands = lshBands(mh.filter(col("doc_id") % 10 < 8))
         .withColumn("ck", col("band_key") * 4 + col("band"))
@@ -1494,18 +1487,6 @@ object Dedup {
        FROM scored
        WHERE 5 * n_common >= 4 * least(asz, bsz)
        ORDER BY sub_id NULLS FIRST, sup_id NULLS FIRST"""))
-
-  /** Bench-warmup hook: materialize the session-scoped shared
-    * fixpoints (each builder counts internally) so per-query bench
-    * numbers charge the operator, not whichever registry neighbor
-    * happens to run first and pay the shared build. */
-  private[graft] def warmShared(s: SparkSession, d: String): Unit = {
-    minhashWithSets(s, d)
-    nearPairs(s, d)
-    nearComponents(s, d)
-    simhashTable(s, d)
-    bigrams(s, d)
-  }
 
   // ---- q_text_rouge -----------------------------------------------------
 

@@ -31,11 +31,11 @@ object Doremi {
     val totS = Fixpoints.cacheOnce(s, d, "tots") {
       cntS.groupBy(col("source"), col("w1")).agg(sum(col("n")).as("t"))
     }
+    // every token of a doc with at least 2 tokens sits in one of its
+    // bigrams, as for Corpus.fullModel's vocabulary
     val vocS = Fixpoints.cacheOnce(s, d, "vocs") {
-      docs(s, d)
-        .select(col("source"), split(col("text"), " ").as("ws"))
-        .filter(size(col("ws")) >= 2)
-        .select(col("source"), explode(col("ws")).as("token"))
+      cntS.select(col("source"), col("w1").as("token"))
+        .union(cntS.select(col("source"), col("w2").as("token")))
         .groupBy(col("source"))
         .agg(countDistinct(col("token")).as("v"))
     }
@@ -63,14 +63,6 @@ object Doremi {
         .groupBy(col("doc_id"), col("source"))
         .agg(sum(col("c")).as("nb"), sum(col("c") * col("lqi")).as("so"))
     }
-
-  /** Bench-warmup hook: materialize the mixture tier's shared
-    * fixpoints (per-source model + own-model doc scores). */
-  private[graft] def warmShared(s: SparkSession, d: String): Unit = {
-    val (cntS, totS, vocS) = sourceModel(s, d)
-    cntS.count(); totS.count(); vocS.count()
-    ownScore(s, d).count()
-  }
 
   // ---- q_mix_doremi -----------------------------------------------------
 

@@ -21,9 +21,10 @@ object GraphScores {
     * (session, dir, k) — ONE definition of the peel for every
     * consumer (census, per-node depth), so sibling queries don't each
     * re-run a 4-round checkpointed fixpoint. Each round's alive set
-    * and surviving edge list are lazily checkpointed: the plan pyramid
-    * is cut per round (the connectedComponentsLoop lesson) and repeat
-    * consumers read the materialized RDDs, not the lineage. Returns
+    * and surviving edge list are checkpointed, and the last round's
+    * count fills every round: the plan pyramid is cut per round (the
+    * connectedComponentsLoop lesson) and consumers read the
+    * materialized RDDs, not the lineage. Returns
     * (alive_r, edges_r) for r = 1..4. */
   private[graft] def peel(s: SparkSession, d: String, k: Int)
       : Seq[(DataFrame, DataFrame)] =
@@ -40,13 +41,10 @@ object GraphScores {
           .localCheckpoint(false)
         (alive, e)
       }
+      // one job runs every round: each round reads the one before
+      rounds.last._2.count()
       Fixpoints.holding(rounds, rounds.flatMap { case (a, r) => Seq(a, r) }: _*)
     }
-
-  /** Bench-warmup hook: materialize both peels the graph tier shares
-    * so per-query timings charge the operator, not registry order. */
-  private[graft] def warmShared(s: SparkSession, d: String): Unit =
-    Seq(3, 5).foreach(k => peel(s, d, k).last._2.count())
 
   // ---- q_graph_kcore ----------------------------------------------------
 

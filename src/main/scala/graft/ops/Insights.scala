@@ -1149,10 +1149,9 @@ object Insights {
       // size the per-round shuffles to the (cached, already-counted)
       // edge list, not the session default — same discipline as
       // Dedup.propagationWidth for the components loop
-      val saved = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions",
-        Dedup.propagationWidth(und.count() * 2, saved.toInt).toString)
-      try {
+      val width = Dedup.propagationWidth(und.count() * 2,
+        s.conf.get("spark.sql.shuffle.partitions").toInt)
+      Tables.withConfs(s, "spark.sql.shuffle.partitions" -> width.toString) {
       var labels = s.range(1)
         .select(lit(0L).as("v"), lit(0L).as("dist"))
       // Convergence via the (n, Σdist) fingerprint instead of a
@@ -1191,7 +1190,7 @@ object Insights {
       labels.groupBy(col("dist"))
         .agg(count(lit(1)).as("n_nodes"))
         .orderBy(col("dist"))
-      } finally s.conf.set("spark.sql.shuffle.partitions", saved)
+      }
     },
     Some(s"""WITH RECURSIVE $undirectedLinkEdgesSql,
             edges AS (SELECT a AS u, b AS v FROM und
@@ -1890,18 +1889,6 @@ object Insights {
             round(2.0e0 * CAST(mi_nano AS DOUBLE)
               / (CAST(hx_nano AS DOUBLE) + hy_nano), 6) AS nmi
           FROM mi, hx, hy"""))
-
-  /** Bench-warmup hook: materialize the shared fixpoints the graph
-    * tier shares (link edges, label-prop labels) so per-query bench
-    * numbers charge the operator, not registry order. */
-  private[graft] def warmShared(s: SparkSession, d: String): Unit = {
-    undirectedLinkEdges(s, d).count()
-    directedEdgesOutdeg(s, d).count() // warms directedDistinctEdges too
-    labelPropLabels(s, d).count()
-    linkDegrees(s, d).count()
-    closedTriangles(s, d).count()
-    wedgePairStats(s, d).count()
-  }
 
   // ---- q_graph_degree_gini ----------------------------------------------
 

@@ -442,12 +442,6 @@ object Learn {
       : org.apache.spark.sql.DataFrame =
     Fixpoints.cacheOnce(s, d, "qualscores")(qualityClassifyBuild(s, d))
 
-  /** Bench-warmup hook for the shared verdict store. */
-  private[graft] def warmShared(s: SparkSession, d: String): Unit = {
-    qualityScores(s, d)
-    ()
-  }
-
   /** Classifier calibration (q_quality_calibrate): reliability table
     * of the distilled quality classifier — fixed-width log-odds bins
     * (width 5, clamped to [-4, 3]) with per-bin document counts, the

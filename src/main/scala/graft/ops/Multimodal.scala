@@ -749,12 +749,6 @@ object Multimodal {
   private[graft] def phashFrame(s: SparkSession, d: String): DataFrame =
     Fixpoints.cacheOnce(s, d, "phashframe")(phashFrameBuild(s, d))
 
-  /** Bench-warmup hook for the shared fingerprint frame. */
-  private[graft] def warmShared(s: SparkSession, d: String): Unit = {
-    phashFrame(s, d)
-    ()
-  }
-
   private def phashFrameBuild(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val blobs = Tables.t(s, d, "documents")

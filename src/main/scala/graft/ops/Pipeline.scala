@@ -312,13 +312,11 @@ object Pipeline {
   /** The corpus side of the Lloyd loop: (vec_id, v, aa) with the
     * self-dot precomputed — shared by q_sim_kmeans and the silhouette
     * audit so both walk the identical program. */
-  private[graft] def kmeansPoints(s: SparkSession, d: String): DataFrame = {
-    graft.functions.DoubleDot.register(s)
+  private[graft] def kmeansPoints(s: SparkSession, d: String): DataFrame =
     Tables.t(s, d, "embeddings")
       .select(col("vec_id"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
       .withColumn("aa", ddot("v", "v"))
-  }
 
   /** One broadcast nested-loop assignment against a k-row centroid
     * table (ties toward the lowest cid, the oracle's row_number rule). */
@@ -344,12 +342,6 @@ object Pipeline {
   private[graft] def kmeansFinalCents(
       s: SparkSession, d: String): DataFrame =
     Fixpoints.cacheOnce(s, d, "kmcents")(kmeansFinalCentsBuild(s, d))
-
-  /** Bench-warmup hook for the shared Lloyd model. */
-  private[graft] def warmShared(s: SparkSession, d: String): Unit = {
-    kmeansFinalCents(s, d)
-    ()
-  }
 
   private def kmeansFinalCentsBuild(
       s: SparkSession, d: String): DataFrame = {

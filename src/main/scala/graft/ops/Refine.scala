@@ -1155,7 +1155,6 @@ object Refine {
   val qSampleCoreset = Q(
     "q_sample_coreset",
     (s, d) => {
-      graft.functions.FloatDot.register(s)
       val sq = Tables.t(s, d, "embeddings")
         .select(col("vec_id"), col("embedding"),
           expr("float_dot(embedding, embedding)").as("n2"))
@@ -1238,7 +1237,6 @@ object Refine {
   val qEmbedNorms = Q(
     "q_embed_norms",
     (s, d) => {
-      graft.functions.FloatDot.register(s)
       val nq = Tables.t(s, d, "embeddings")
         .select(col("label"),
           floor(sqrt(expr("float_dot(embedding, embedding)")) * 1e6
@@ -1590,7 +1588,6 @@ object Refine {
   val qSimMmr = Q(
     "q_sim_mmr",
     (s, d) => {
-      graft.functions.FloatDot.register(s)
       val base = Tables.t(s, d, "embeddings")
         .select(col("vec_id"), col("embedding"),
           sqrt(expr("float_dot(embedding, embedding)")).as("nrm"))

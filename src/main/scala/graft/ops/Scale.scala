@@ -200,7 +200,6 @@ object Scale {
   val qJoinBloom = Q(
     "q_join_bloom",
     (s, d) => {
-      graft.functions.BloomFns.register(s)
       Tables.t(s, d, "orders").createOrReplaceTempView("orders_bloom_v")
       Tables.t(s, d, "customer").createOrReplaceTempView("customer_bloom_v")
       // might_contain requires the sketch as a scalar subquery (it is

@@ -38,14 +38,9 @@ object Series {
           floor(col("value") * 100 + 0.5).cast("long").as("c"))
         .groupBy(col("day")).agg(sum(col("c")).as("v"))
         .persist()
+      days.count()
       Fixpoints.holding(days, days)
     }
-
-  /** Bench-warmup hook: materialize the shared day grid. */
-  private[graft] def warmShared(s: SparkSession, d: String): Unit = {
-    dailyRevenue(s, d).count()
-    ()
-  }
 
   /** Autocorrelation of `value` at lags 1–3 per event_type, ordered by
     * (ts, event_id). One window exchange on the series key feeds all

@@ -402,12 +402,6 @@ object TextOps {
         .select(col("doc_id").as("w_id"), col("logw"))
     })
 
-  /** Bench-warmup hook for the funnel's stage stores. */
-  private[graft] def warmShared(s: SparkSession, d: String): Unit = {
-    val (eg, sem, dsir) = curateStages(s, d)
-    eg.count(); sem.count(); dsir.count()
-  }
-
   /** Curation funnel v2 (q_curate_v2): the staged selection pipeline a
     * modern pre-training build runs, with per-source survivor
     * accounting at every stage — exact dedup (md5 keeper groups) →

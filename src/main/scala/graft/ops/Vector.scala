@@ -25,11 +25,9 @@ object Vector {
     * side of the cosine must never be recomputed per candidate at 100 TB).
     * Dot products use the custom codegen FloatDot expression
     * (graft.functions.FloatDot) over the raw FLOAT arrays. */
-  private def emb(s: SparkSession, d: String): DataFrame = {
-    graft.functions.FloatDot.register(s)
+  private def emb(s: SparkSession, d: String): DataFrame =
     Tables.t(s, d, "embeddings")
       .withColumn("nrm", sqrt(expr("float_dot(embedding, embedding)")))
-  }
 
   /** Codegen'd dot product over two FLOAT arrays (DOUBLE accumulate). */
   private def dot(a: String, b: String): Column =
@@ -252,10 +250,9 @@ object Vector {
       s: SparkSession, d: String, bands: Int, bits: Int, flip: Boolean,
       probeId: Long, k: Int, table: DataFrame = null): DataFrame = {
     require(bands * bits <= 64, "band slices must fit the 64-dim vector")
-    val e0 = if (table == null) emb(s, d) else {
-      graft.functions.FloatDot.register(s)
-      table.withColumn("nrm", sqrt(expr("float_dot(embedding, embedding)")))
-    }
+    val e0 = if (table == null) emb(s, d)
+      else table.withColumn("nrm",
+        sqrt(expr("float_dot(embedding, embedding)")))
     def bkeySpark(b: Int): String = (1 to bits).map(i =>
       s"(CASE WHEN element_at(embedding, ${bits * b + i}) > 0 " +
         s"THEN ${1 << (i - 1)} ELSE 0 END)").mkString(" + ")
@@ -1165,7 +1162,6 @@ object Vector {
     "q_sim_matryoshka",
     (s, d) => {
       import org.apache.spark.sql.expressions.Window
-      graft.functions.DoubleDot.register(s)
       // r18 (guide §1.2/§2.4): the old form instantiated the ENTIRE
       // corpus × 20-probe pair program FIVE times (full + one per
       // width) — Catalyst has no logical common-subtree reuse, so the
@@ -1407,7 +1403,6 @@ object Vector {
   val qEmbedCentroidMatrix = Q(
     "q_embed_centroid_matrix",
     (s, d) => {
-      graft.functions.DoubleDot.register(s)
       val cents = Tables.t(s, d, "embeddings")
         .join(Tables.t(s, d, "documents")
           .select(col("doc_id").as("vec_id"), col("source")),
@@ -1544,7 +1539,6 @@ object Vector {
     * consumers. */
   private[graft] def labelAnchorNn3(s: SparkSession, d: String): DataFrame =
     Fixpoints.memo(s, d, "anchornn3") {
-      graft.functions.FloatL2Q.register(s)
       val e = Tables.t(s, d, "embeddings")
         .select(col("vec_id"), col("label"), col("embedding"))
       val anchors = e
@@ -1565,15 +1559,9 @@ object Vector {
       val nn = pairs.withColumn("rk", row_number().over(w))
         .filter(col("rk") <= 3)
         .persist()
+      nn.count()
       Fixpoints.holding(nn, nn)
     }
-
-  /** Bench-warmup hook: materialize the shared anchor-NN lists. */
-  private[graft] def warmShared(s: SparkSession, d: String): Unit = {
-    labelAnchorNn3(s, d).count()
-    pqLutShared(s, d).count() // warms pqCodesShared too
-    ()
-  }
 
   /** The anchors + pairs + ranked CTE prefix both consumers' oracles
     * share — the DuckDB mirror of [[labelAnchorNn3]]. */

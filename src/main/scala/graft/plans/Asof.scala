@@ -5,23 +5,17 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.graftbridge.Bridge
 
 /** Public entry for the native as-of join: resolves the key/time columns
-  * against each side's analyzed plan, registers the planner strategy on
-  * the session (idempotent), and returns the joined DataFrame —
-  * left columns followed by right columns (right side nullable). */
+  * against each side's analyzed plan and returns the joined DataFrame —
+  * left columns followed by right columns (right side nullable). The
+  * session plans it through the strategy and rule that
+  * `GraftExtensions` installs (`Tables.configure` does so for every
+  * session the program reads through). */
 object Asof {
   def join(left: DataFrame, right: DataFrame,
       leftKey: String, leftTime: String,
       rightKey: String, rightTime: String,
       broadcastRight: Option[Boolean] = None): DataFrame = {
     val s = left.sparkSession
-    if (!s.experimental.extraStrategies.contains(AsofJoinStrategy)) {
-      s.experimental.extraStrategies =
-        s.experimental.extraStrategies :+ AsofJoinStrategy
-    }
-    if (!s.experimental.extraOptimizations.contains(AsofJoinFilterPushdown)) {
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ AsofJoinFilterPushdown
-    }
     val lp = Bridge.analyzed(left)
     val rp = Bridge.analyzed(right)
     def attr(p: LogicalPlan, n: String) =

@@ -48,9 +48,9 @@ case class AsofJoin(
   * cost at 100 TB when the right side is reference data); otherwise the
   * co-clustered sort-merge form. The choice follows the same
   * autoBroadcastJoinThreshold the built-in joins use, overridable with
-  * an explicit hint on the logical node. Registered per session via
-  * `spark.experimental.extraStrategies` (or globally through
-  * graft.GraftExtensions). */
+  * an explicit hint on the logical node. Installed on a session by
+  * `GraftExtensions` (the extension, or `install` from
+  * `Tables.configure`). */
 object AsofJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case AsofJoin(l, r, lk, rk, lt, rt, hint) =>

@@ -51,12 +51,12 @@ object StreamOps {
       : org.apache.spark.sql.types.StructType =
     schemaCache.getOrElseUpdate(
       (s, path), {
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        // a stream query may be the first read of a foreign session
+        Tables.configure(s)
         s.read.parquet(path).schema
       })
 
   private def eventsStream(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = footerSchema(s, s"$d/events.parquet")
     // the streaming file source wants a directory: point it at the sf dir
     // and glob-filter down to the events file (watchdog arrival pattern)
@@ -102,13 +102,8 @@ object StreamOps {
         "graft.streaming.EphemeralCheckpoint") ++
       (if (noDataBatches) Nil
        else Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> "false"))
-    val saved = scoped.map { case (k, _) => k -> s.conf.getOption(k) }
-    scoped.foreach { case (k, v) => s.conf.set(k, v) }
-    try w.trigger(Trigger.AvailableNow()).start().awaitTermination()
-    finally saved.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
+    Tables.withConfs(s, scoped: _*)(
+      w.trigger(Trigger.AvailableNow()).start().awaitTermination())
   }
 
   /** Run a streaming frame to completion into a memory sink; return the
@@ -496,6 +491,11 @@ object StreamOps {
     }
   }
 
+  /** The state store transformWithState requires. */
+  private val rocksDbState =
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
   /** Arbitrary state via the Spark 4 transformWithState API
     * (q_stream_tws): the modern replacement for flatMapGroupsWithState —
     * typed ValueState through a StatefulProcessor handle, RocksDB state
@@ -508,11 +508,7 @@ object StreamOps {
     (s, d) => {
       import s.implicits._
       import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-      val savedProv =
-        s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
+      Tables.withConfs(s, rocksDbState) {
         val src = eventsStream(s, d)
           .select(col("event_id"),
             unix_micros(col("ts").cast("timestamp")).as("us"),
@@ -540,11 +536,6 @@ object StreamOps {
              JOIN carries c
                ON l.event_type = c.event_type AND l.day = c.day""")
           .orderBy(col("event_id"))
-      } finally savedProv match {
-        case Some(v) =>
-          s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None =>
-          s.conf.unset("spark.sql.streaming.stateStore.providerClass")
       }
     },
     Some("""SELECT event_id, event_type,
@@ -830,7 +821,6 @@ object StreamOps {
     // aggregate against batch.sparkSession rather than capturing one
     // from the outer session
     val sess = batch.sparkSession
-    graft.functions.BloomFns.register(sess)
     val hashed = batch.withColumn("h",
       md5(lower(trim(col("text"))).cast("binary")))
     hashed.createOrReplaceTempView("decon_batch_v")
@@ -932,7 +922,6 @@ object StreamOps {
     * interpreted); values are the identical integer recurrence, so
     * Dedup.bandsCteSql still mirrors it exactly. */
   private[graft] def lshBandSignatures(docs: DataFrame): DataFrame = {
-    graft.functions.LshBandsText.register(docs.sparkSession)
     // posexplode emits no row for a NULL array (fewer than 5 tokens).
     // The kernel sits inside the generator rather than in a column of
     // its own: a NULL filter or the inferred `size > 0` guard on such
@@ -1609,11 +1598,7 @@ object StreamOps {
     (s, d) => {
       import s.implicits._
       import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-      val savedProv =
-        s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
+      Tables.withConfs(s, rocksDbState) {
         val src = eventsStream(s, d)
           .select(col("user_id"),
             unix_micros(col("ts").cast("timestamp")).as("us"),
@@ -1629,11 +1614,6 @@ object StreamOps {
           .groupBy(col("prev_type"), col("next_type"))
           .agg(count(lit(1)).as("n"))
           .orderBy(col("prev_type"), col("next_type"))
-      } finally savedProv match {
-        case Some(v) =>
-          s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None =>
-          s.conf.unset("spark.sql.streaming.stateStore.providerClass")
       }
     },
     Some("""WITH seq AS (
@@ -1764,11 +1744,7 @@ object StreamOps {
     (s, d) => {
       import s.implicits._
       import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-      val savedProv =
-        s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
+      Tables.withConfs(s, rocksDbState) {
         val src = eventsStream(s, d)
           .select(col("event_type"),
             unix_micros(col("ts").cast("timestamp")).as("us"),
@@ -1787,11 +1763,6 @@ object StreamOps {
             expr("CAST(timestamp_micros(min(us)) AS TIMESTAMP_NTZ)")
               .as("first_at"))
           .orderBy(col("event_type"))
-      } finally savedProv match {
-        case Some(v) =>
-          s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None =>
-          s.conf.unset("spark.sql.streaming.stateStore.providerClass")
       }
     },
     Some("""WITH base AS (

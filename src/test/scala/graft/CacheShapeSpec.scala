@@ -14,9 +14,12 @@ package graft
   * re-tax the whole cached tier — this spec fails instead. It also pins
   * the registry's lifecycle: a dir released, past the bound or on
   * request, frees every entry's blocks at once and rebuilds the same
-  * rows when read again. */
+  * rows when read again; and its one materialization rule: an entry
+  * holds its blocks when its build returns, so a warm list that only
+  * reads accessors runs no job the second time. */
 class CacheShapeSpec extends SparkSuite {
   import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.graftbridge.Bridge
   import org.apache.spark.sql.execution.LogicalRDD
 
   private def leafOnly(df: DataFrame, what: String): Unit = {
@@ -82,12 +85,12 @@ class CacheShapeSpec extends SparkSuite {
   private def persistentIds: Set[Int] =
     spark.sparkContext.getPersistentRDDs.keySet.toSet
 
-  /** sf0's documents and embeddings under a path of their own, so its
-    * fixpoints share no cached plan with sf0's. */
+  /** sf0's tables under a path of their own, so its fixpoints share no
+    * cached plan with sf0's. */
   private def copyOfSf0(name: String): String = {
     val dir = s"${sys.props("java.io.tmpdir")}/graft_fix_$name"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    Seq("documents", "embeddings").foreach { t =>
+    Tables.names.foreach { t =>
       java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf0/$t.parquet"),
         java.nio.file.Paths.get(s"$dir/$t.parquet"),
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
@@ -148,6 +151,47 @@ class CacheShapeSpec extends SparkSuite {
       "a released entry must be rebuilt, not resurrected")
     assert(rows(again) === want)
     Fixpoints.release(spark, dir)
+  }
+
+  test("a second warmAll on the same dir launches no Spark job") {
+    // every entry is materialized by its build, so the warm list only
+    // reads accessors: once built, a warm step is registry lookups
+    val dir = copyOfSf0("fixpoints_warm_twice")
+    val first = Fixpoints.warmAll(spark, dir)
+    assert(first.forall(_._2.isRight), s"warm steps failed: $first")
+    Bridge.flushListenerBus(spark)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val lsn = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(lsn)
+    try {
+      Fixpoints.warmAll(spark, dir)
+      assert(Bridge.flushListenerBus(spark), "listener bus did not drain")
+    } finally spark.sparkContext.removeSparkListener(lsn)
+    Fixpoints.release(spark, dir)
+    assert(jobs.get === 0, s"a second warmAll launched ${jobs.get} jobs")
+  }
+
+  test("the day grid, anchor-NN and peel entries hold blocks when built") {
+    val dir = copyOfSf0("fixpoints_eager")
+    def cachedIds = spark.sparkContext.getRDDStorageInfo
+      .filter(_.numCachedPartitions > 0).map(_.id).toSet
+    val unfilled = Seq(
+      "daygrid" -> Seq(ops.Series.dailyRevenue(spark, dir)),
+      "anchornn3" -> Seq(ops.Vector.labelAnchorNn3(spark, dir)),
+      "peel3" -> ops.GraphScores.peel(spark, dir, 3)
+        .flatMap { case (alive, edges) => Seq(alive, edges) }
+    ).map { case (name, frames) =>
+      val ids = frames.flatMap(pinnedIds).toSet
+      assert(ids.nonEmpty, s"$name pins no rdd")
+      name -> (ids -- cachedIds).toSeq.sorted
+    }.filter(_._2.nonEmpty)
+    Fixpoints.release(spark, dir)
+    assert(unfilled.isEmpty, s"entries returned before their rdds held " +
+      s"blocks: $unfilled")
   }
 
   test("plan strings over stacked fixpoints stay leaf-sized") {

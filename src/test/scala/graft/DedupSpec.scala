@@ -450,7 +450,6 @@ class DedupSpec extends SparkSuite {
         "HashAggregate").foreach(op =>
       assert(!plan.contains(op), s"$op in the signature plan:\n$plan"))
     // the streaming index packs its bands from the same minima
-    graft.functions.LshBandsText.register(spark)
     val bands = Tables.t(spark, kernelDir, "documents")
       .select(col("doc_id"), expr("lsh_bands_text(text)").as("b"))
       .filter(col("b").isNotNull).collect()

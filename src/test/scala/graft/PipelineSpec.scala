@@ -442,8 +442,6 @@ class PipelineSpec extends SparkSuite {
   // ---- double_dot -------------------------------------------------------
 
   test("double_dot matches the interpreted fold and float_dot bit-for-bit") {
-    functions.DoubleDot.register(spark)
-    functions.FloatDot.register(spark)
     val rows = Tables.t(spark, sf0, "embeddings")
       .selectExpr(
         "double_dot(transform(embedding, x -> CAST(x AS DOUBLE)), " +
@@ -465,9 +463,6 @@ class PipelineSpec extends SparkSuite {
   }
 
   test("dot/l2q expressions null out on length mismatch or null element") {
-    functions.DoubleDot.register(spark)
-    functions.FloatDot.register(spark)
-    functions.FloatL2Q.register(spark)
     // codegen path (selectExpr compiles the expressions) and the
     // interpreted fallback (factoryMode=NO_CODEGEN) must agree: a
     // length mismatch or a NULL slot yields NULL — never a silent

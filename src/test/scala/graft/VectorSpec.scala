@@ -333,7 +333,6 @@ class VectorSpec extends SparkSuite {
     // ranking - the fixture's quasi-random vectors are the adversarial
     // case for LSH, so this bound is the honest floor, not a showcase
     val e = Tables.t(spark, sf0, "embeddings")
-    graft.functions.FloatDot.register(spark)
     def exactTop10(probe: Long): Set[Long] = {
       val p = e.filter(col("vec_id") === probe)
         .select(col("embedding").as("p_emb"))
