@@ -98,14 +98,14 @@ object Bench {
 
 
   /** The load phase of a bench-protocol run on `sfDir`, untimed:
-    * quiet the two chatty loggers, warm the JVM, pre-touch every
-    * table, then build the bucketed layout, the format fixtures and
-    * every shared fixpoint. Returns the warm steps' digest
-    * (`name=secs` or `name=FAILED(..)`), printed under `tag`. */
+    * quiet the two chatty loggers, warm the JVM, run the `entry()`
+    * smoke, then run the warm list (tables, bucketed layout, format
+    * fixtures and every shared fixpoint). Returns the warm steps'
+    * digest (`name=secs` or `name=FAILED(..)`), printed under `tag`. */
   def load(spark: SparkSession, sfDir: String, tag: String): Seq[String] = {
     // The bounded global windows (PlanSpec asserts their input
     // cardinality) each emit a "No Partition Defined for Window
-    // operation" WARN; dozens of those scroll the 12 `[bench] warmed`
+    // operation" WARN; dozens of those scroll the 15 `[bench] warmed`
     // lines out of the driver's ~2 KB retained log tail, hiding a
     // silent warm failure — which WOULD be a real 10-20 s accounting
     // error — from the official record. Silence just that logger.
@@ -122,22 +122,7 @@ object Bench {
     // Warm the JVM/codegen/parquet-footer paths so the first timed query
     // doesn't absorb JIT cost (we measure the engine, not startup).
     spark.range(2000000L).selectExpr("sum(id)").collect()
-    // Pre-touch every driver table: the FIRST Tables.t for a (session,
-    // dir, table) runs parquet footer inference, which submits a small
-    // Spark job — and a build that merely happened to be the first
-    // reader of a cold table was being classified as job-running and
-    // exiled from the prepared path (r15: q_join_broadcast and
-    // q_agg_rollup read `region` first and were misclassified dirty).
-    // Schema inference is load-time work, not query work.
-    Tables.names.foreach(n =>
-      try Tables.t(spark, sfDir, n) catch { case _: Throwable => () })
     try SparkEntry.entry(spark).collect() catch { case _: Throwable => () }
-    // Bucketed-layout build is a load step, not query work — do it here
-    // so the one-pass bench times the shuffle-free join itself.
-    try ops.Scale.warm(spark, sfDir) catch { case _: Throwable => () }
-    // Format fixtures (csv/json/orc/xml/text round-trip dirs) are load
-    // steps too — pre-write them so the scan entries time the read.
-    try ops.Extras.warm(spark, sfDir) catch { case _: Throwable => () }
     // Shared session-scoped fixpoints (minhash, near pairs, components,
     // label-prop labels, graph peels) are multi-consumer intermediates:
     // warm them here so each query's bench number charges the operator

@@ -57,31 +57,49 @@ object Tables {
     * reader rejects — read it as raw nanos (`nanosAsLong`) and rebuild a
     * micros NTZ column (verified lossless: every testdata ns value is
     * micro-aligned, and DuckDB 1.x reads the same file at micros). */
-  // Memoized per (session, dir, table): schema inference re-reads the
-  // parquet footer on every spark.read, and across a 165-query bench
-  // those listings add up. The DataFrame (an immutable plan) is safe to
-  // share; file CHANGES under a cached path would go unseen, which is
-  // fine for the driver's immutable sf dirs and per-JVM test fixtures.
-  // The key holds the session strongly for the life of the JVM, so a
-  // throwaway child session must go through `read` instead.
-  private val tCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String, String), DataFrame]()
-
+  // One `table:<name>` entry of the (session, dir) working set in
+  // graft.Fixpoints: schema inference re-reads the parquet footer on
+  // every spark.read, and across a 165-query bench those listings add
+  // up. The DataFrame (an immutable plan) is safe to share; file
+  // CHANGES under a cached path would go unseen, which is fine for the
+  // driver's immutable sf dirs and per-JVM test fixtures.
   def t(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    tCache.getOrElseUpdate((spark, sfDir, name), read(spark, sfDir, name))
+    table(spark, sfDir, name)._1
+
+  /** The parquet footer schema of a driver table, before the events
+    * normalization: what a stream source over the file is typed with.
+    * Listed once per (session, dir, table), with [[t]]'s read. */
+  def rawSchema(spark: SparkSession, sfDir: String, name: String)
+      : org.apache.spark.sql.types.StructType =
+    table(spark, sfDir, name)._2
+
+  private def table(spark: SparkSession, sfDir: String, name: String) =
+    Fixpoints.memo[(DataFrame, org.apache.spark.sql.types.StructType)](
+        spark, sfDir, "table:" + name) {
+      val df0 = raw(spark, sfDir, name)
+      Fixpoints.Entry((normalize(name, df0), df0.schema), () => ())
+    }
 
   /** The unmemoized read behind `t`, for sessions that must not outlive
-    * their query (q_join_skew_aqe's per-call `newSession()`): same
-    * confs, same events normalization, nothing pinned. */
-  def read(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    * their query (q_join_skew_aqe's per-call `newSession()`, a stream
+    * drain's clone): same confs, same events normalization, nothing
+    * pinned. */
+  def read(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    normalize(name, raw(spark, sfDir, name))
+
+  private def raw(spark: SparkSession, sfDir: String, name: String) = {
     // Idempotent: the confs must be live before the footer is read /
     // the first derived frame is persisted, and a caller may invoke
     // entry()/queries with a session of its own.
     configure(spark)
-    val df0 = spark.read.parquet(s"$sfDir/$name.parquet")
-    // Normalize events.ts to micros NTZ whatever the physical type:
-    // the reference data is TIMESTAMP(NANOS) (read as long), test fixtures
-    // may write plain timestamps.
+    spark.read.parquet(s"$sfDir/$name.parquet")
+  }
+
+  /** Normalize events.ts to micros NTZ whatever the physical type: the
+    * reference data is TIMESTAMP(NANOS) (read as long), test fixtures
+    * may write plain timestamps. Batch reads and the events stream
+    * share it. */
+  private[graft] def normalize(name: String, df0: DataFrame): DataFrame =
     if (name == "events") {
       import org.apache.spark.sql.functions.expr
       import org.apache.spark.sql.types.LongType
@@ -92,7 +110,6 @@ object Tables {
           expr("CAST(ts AS TIMESTAMP_NTZ)"))
       }
     } else df0
-  }
 
   /** Session conf every entry point (Verify/Bench/tests) applies —
     * also re-applied lazily on the first table read per session, so a

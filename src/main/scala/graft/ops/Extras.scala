@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, Tables}
+import graft.{Fixpoints, Q, Tables}
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
@@ -15,72 +15,57 @@ object Extras {
   private def tmp(sub: String): String =
     sys.props("java.io.tmpdir") + "/" + sub
 
-  /** Format-fixture dirs are WRITTEN once per (format, sfDir) per JVM —
-    * the write is load/setup (the driver tables are immutable), the
-    * operator under test is the format READ. Bench pre-triggers the
-    * writes from its warmup block (same discipline as the bucketed-table
-    * setup in [[Scale.warm]]) so the one-pass bench times the scan, not
-    * the fixture dump. The output path encodes the sfDir so scales never
-    * collide. */
-  private val fixtureWritten =
-    scala.collection.concurrent.TrieMap[String, Boolean]()
-
-  private def ensureFixture(sub: String, d: String)(
-      write: String => Unit): String = {
-    val out = tmp(sub + "_" + d.replaceAll("[^a-zA-Z0-9]", "_"))
-    fixtureWritten.getOrElseUpdate(out, { write(out); true })
-    out
-  }
-
-  /** Pre-write every format fixture for `d` (called from Bench warmup).
-    * Each write is guarded separately so one failing format can't stop
-    * the later fixtures from warming, and each outcome is logged so the
-    * bench record shows which scans were actually pre-warmed. */
-  def warm(s: SparkSession, d: String): Unit = {
-    val steps: Seq[(String, () => String)] = Seq(
-      "csv" -> (() => csvDir(s, d)), "json" -> (() => jsonDir(s, d)),
-      "orc" -> (() => orcDir(s, d)), "xml" -> (() => xmlDir(s, d)),
-      "text" -> (() => textDir(s, d)),
-      "evolution" -> (() => evoDir(s, d)),
-      "corrupt" -> (() => corruptDir(s, d)))
-    steps.foreach { case (fmt, run) =>
-      val t0 = System.nanoTime()
-      try { run(); System.err.println(
-        f"[warm] $fmt fixture ok (${(System.nanoTime() - t0) / 1e9}%.2fs)") }
-      catch { case e: Throwable =>
-        System.err.println(s"[warm] $fmt fixture FAILED: $e") }
+  /** A format fixture of (s, d): a dir WRITTEN once from the dir's
+    * tables, as the `fixture:<sub>` entry of its working set. The write
+    * is load/setup (the driver tables are immutable), the operator
+    * under test is the format READ, so the warm list's "format
+    * fixtures" step writes them all and a one-pass bench times the
+    * scan, not the dump. The path carries the dir
+    * ([[Fixpoints.dirTag]]) so scales never collide; release
+    * deletes it. */
+  private def ensureFixture(s: SparkSession, sub: String, d: String)(
+      write: String => Unit): String =
+    Fixpoints.memo[String](s, d, "fixture:" + sub) {
+      val out = tmp(sub + "_" + Fixpoints.dirTag(d))
+      write(out)
+      Fixpoints.Entry(out, () =>
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out)))
     }
-  }
+
+  /** Every format fixture of (s, d): the warm list's step. */
+  private[graft] def fixtures(s: SparkSession, d: String): Seq[String] =
+    Seq(csvDir(s, d), jsonDir(s, d), orcDir(s, d), xmlDir(s, d),
+      textDir(s, d), evoDir(s, d), corruptDir(s, d))
 
   private def csvDir(s: SparkSession, d: String): String =
-    ensureFixture("graft_scan_csv", d) { out =>
+    ensureFixture(s, "graft_scan_csv", d) { out =>
       ev(s, d).select(col("event_id"), col("user_id"), col("event_type"),
           col("value"))
         .write.mode("overwrite").option("header", "true").csv(out)
     }
 
   private def jsonDir(s: SparkSession, d: String): String =
-    ensureFixture("graft_scan_json", d) { out =>
+    ensureFixture(s, "graft_scan_json", d) { out =>
       ev(s, d).select(col("event_id"), col("event_type"), col("value"),
           col("props"))
         .write.mode("overwrite").json(out)
     }
 
   private def orcDir(s: SparkSession, d: String): String =
-    ensureFixture("graft_scan_orc", d) { out =>
+    ensureFixture(s, "graft_scan_orc", d) { out =>
       ev(s, d).select(col("event_id"), col("user_id"), col("event_type"),
           col("value"))
         .write.mode("overwrite").orc(out)
     }
 
   private def xmlDir(s: SparkSession, d: String): String =
-    ensureFixture("graft_scan_xml", d) { out =>
+    ensureFixture(s, "graft_scan_xml", d) { out =>
       ev(s, d).select(col("event_id"), col("event_type"), col("value"))
         .write.mode("overwrite").option("rowTag", "event").xml(out)
     }
 
   private def textDir(s: SparkSession, d: String): String =
-    ensureFixture("graft_scan_text", d) { out =>
+    ensureFixture(s, "graft_scan_text", d) { out =>
       Tables.t(s, d, "documents")
         .select(concat_ws("\t", col("doc_id"), col("lang"), col("text"))
           .as("value"))
@@ -89,7 +74,7 @@ object Extras {
 
   /** Two-version lake layout: v1 files predate the event_type column. */
   private def evoDir(s: SparkSession, d: String): String =
-    ensureFixture("graft_scan_evo", d) { out =>
+    ensureFixture(s, "graft_scan_evo", d) { out =>
       ev(s, d).filter(col("event_id") % 2 === 0)
         .select(col("event_id"), col("value"))
         .write.mode("overwrite").parquet(out + "/v1")
@@ -101,7 +86,7 @@ object Extras {
   /** JSON-lines feed with deterministically corrupted rows
     * (event_id % 7 == 3 → truncated JSON). */
   private def corruptDir(s: SparkSession, d: String): String =
-    ensureFixture("graft_scan_corrupt", d) { out =>
+    ensureFixture(s, "graft_scan_corrupt", d) { out =>
       ev(s, d)
         .select(when(col("event_id") % 7 === 3,
             concat(lit("{\"event_id\": "), col("event_id"),

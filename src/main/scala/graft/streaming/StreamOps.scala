@@ -36,39 +36,22 @@ object StreamOps {
   private val drainWidth = 8
 
 
-  /** Streaming view of `events` (schema from a batch footer read; same
-    * physical-type-dependent ts normalization as Tables.t — driver data
+  /** Streaming view of `events`, typed by its footer schema and
+    * normalized as [[Tables.t]] normalizes the batch read: driver data
     * may store TIMESTAMP(NANOS) (read as long under nanosAsLong) or a
-    * plain timestamp, depending on the generation round). */
-  /** Footer-schema memo: ~30 stream queries each open the same parquet
-    * footer to type their readStream; one listing per (session, dir,
-    * table) is enough (the Tables.t caching argument — sf dirs are
-    * immutable for the JVM's life). */
-  private val schemaCache = scala.collection.concurrent
-    .TrieMap[(SparkSession, String), org.apache.spark.sql.types.StructType]()
+    * plain timestamp, depending on the generation round. */
+  private def eventsStream(s: SparkSession, d: String): DataFrame =
+    Tables.normalize("events", fileStream(s, d, "events"))
 
-  private[graft] def footerSchema(s: SparkSession, path: String)
-      : org.apache.spark.sql.types.StructType =
-    schemaCache.getOrElseUpdate(
-      (s, path), {
-        // a stream query may be the first read of a foreign session
-        Tables.configure(s)
-        s.read.parquet(path).schema
-      })
-
-  private def eventsStream(s: SparkSession, d: String): DataFrame = {
-    val schema = footerSchema(s, s"$d/events.parquet")
-    // the streaming file source wants a directory: point it at the sf dir
-    // and glob-filter down to the events file (watchdog arrival pattern)
-    val raw = s.readStream.schema(schema).format("parquet")
-      .option("pathGlobFilter", "events.parquet")
+  /** A stream over one driver table's file of `d`, typed by the footer
+    * schema its `table:` entry listed once for (s, d). The streaming
+    * file source wants a directory: point it at the sf dir and
+    * glob-filter down to the table's file (watchdog arrival pattern). */
+  private def fileStream(s: SparkSession, d: String, name: String)
+      : DataFrame =
+    s.readStream.schema(Tables.rawSchema(s, d, name)).format("parquet")
+      .option("pathGlobFilter", s"$name.parquet")
       .load(d)
-    schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType => raw.withColumn("ts",
-        expr("CAST(timestamp_micros(ts div 1000) AS TIMESTAMP_NTZ)"))
-      case _ => raw.withColumn("ts", expr("CAST(ts AS TIMESTAMP_NTZ)"))
-    }
-  }
 
   /** Run `w` to completion (Trigger.AvailableNow) in the scope every
     * finite drain shares; the session confs it sets are restored once
@@ -790,12 +773,8 @@ object StreamOps {
 
   /** Streaming view of `documents` (same glob-filtered file-arrival
     * pattern as [[eventsStream]]). */
-  private def documentsStream(s: SparkSession, d: String): DataFrame = {
-    val schema = footerSchema(s, s"$d/documents.parquet")
-    s.readStream.schema(schema).format("parquet")
-      .option("pathGlobFilter", "documents.parquet")
-      .load(d)
-  }
+  private def documentsStream(s: SparkSession, d: String): DataFrame =
+    fileStream(s, d, "documents")
 
   /** Per-micro-batch decontamination probe shared by the registered
     * query, StreamSpec and PlanSpec. The corpus hash table is O(corpus)
@@ -819,12 +798,14 @@ object StreamOps {
     // its own temp-view catalog: every frame and view here must live in
     // that session, so rebuild the (re-planned-per-batch anyway) corpus
     // aggregate against batch.sparkSession rather than capturing one
-    // from the outer session
+    // from the outer session. The clone dies with the drain, so it
+    // reads through the unmemoized Tables.read and never enters the
+    // Fixpoints working sets (it would evict the caller's).
     val sess = batch.sparkSession
     val hashed = batch.withColumn("h",
       md5(lower(trim(col("text"))).cast("binary")))
     hashed.createOrReplaceTempView("decon_batch_v")
-    Tables.t(sess, d, "documents")
+    Tables.read(sess, d, "documents")
       .filter(col("doc_id") % 10 < 8)
       .withColumn("h", md5(lower(trim(col("text"))).cast("binary")))
       .groupBy(col("h"))
@@ -1295,10 +1276,7 @@ object StreamOps {
   val qStreamCentroid = Q(
     "q_stream_centroid",
     (s, d) => {
-      val schema = footerSchema(s, s"$d/embeddings.parquet")
-      val es = s.readStream.schema(schema).format("parquet")
-        .option("pathGlobFilter", "embeddings.parquet")
-        .load(d)
+      val es = fileStream(s, d, "embeddings")
       val agg = es
         .select(col("label"),
           posexplode(col("embedding")).as(Seq("pos", "x")))

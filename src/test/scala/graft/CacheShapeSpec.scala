@@ -13,10 +13,12 @@ package graft
   * back to nested persist() would pass every value check and silently
   * re-tax the whole cached tier — this spec fails instead. It also pins
   * the registry's lifecycle: a dir released, past the bound or on
-  * request, frees every entry's blocks at once and rebuilds the same
-  * rows when read again; and its one materialization rule: an entry
-  * holds its blocks when its build returns, so a warm list that only
-  * reads accessors runs no job the second time. */
+  * request, frees every entry at once (blocks, bucket tables, fixture
+  * dirs, table reads) and rebuilds the same rows when read again; a
+  * dir only read counts against the bound, and a drain's session clone
+  * never enters; and its one materialization rule: an entry holds its
+  * blocks when its build returns, so a warm list that only reads
+  * accessors runs no job the second time. */
 class CacheShapeSpec extends SparkSuite {
   import org.apache.spark.sql.DataFrame
   import org.apache.spark.sql.graftbridge.Bridge
@@ -133,24 +135,66 @@ class CacheShapeSpec extends SparkSuite {
   }
 
   test("after release(s, dir) a read rebuilds the same rows") {
+    // every entry kind of the dir's working set: tables, the bucketed
+    // layout, the format fixtures and materialized fixpoints
     val dir = copyOfSf0("fixpoints_release")
+    val warm = Fixpoints.warmAll(spark, dir)
+    assert(warm.forall(_._2.isRight), s"warm steps failed: $warm")
     def read() = Seq(
       ops.Insights.undirectedLinkEdges(spark, dir),
       ops.Dedup.simhashTable(spark, dir),
-      ops.Dedup.nearPairs(spark, dir))
+      ops.Dedup.nearPairs(spark, dir),
+      q("q_join_bucketed", dir),
+      q("q_scan_csv", dir))
     def rows(dfs: Seq[DataFrame]) =
       dfs.map(_.collect().map(_.toString).sorted.toSeq)
     val first = read()
     val want = rows(first)
     val ids = first.flatMap(pinnedIds).toSet
+    val orders = Tables.t(spark, dir, "orders")
+    val (bo, bli) = ops.Scale.bucketTables(spark, dir)
+    val fixtures = ops.Extras.fixtures(spark, dir)
+    assert(spark.catalog.tableExists(bo) && spark.catalog.tableExists(bli))
+    assert(fixtures.forall(f => new java.io.File(f).exists))
     Fixpoints.release(spark, dir)
     assert(ids.intersect(persistentIds).isEmpty,
       "release must free the dir's blocks")
+    assert(!spark.catalog.tableExists(bo) && !spark.catalog.tableExists(bli),
+      s"release must drop the bucket tables $bo, $bli")
+    val kept = fixtures.filter(f => new java.io.File(f).exists)
+    assert(kept.isEmpty, s"release must delete the fixture dirs: $kept")
+    assert(Tables.t(spark, dir, "orders") ne orders,
+      "a released table entry must be read again")
     val again = read()
     assert(again.flatMap(pinnedIds).toSet.intersect(ids).isEmpty,
       "a released entry must be rebuilt, not resurrected")
     assert(rows(again) === want)
     Fixpoints.release(spark, dir)
+  }
+
+  test("a dir whose tables are only read counts against the bound") {
+    val dir = copyOfSf0("fixpoints_read_bound")
+    val und = ops.Insights.undirectedLinkEdges(spark, dir)
+    val ids = pinnedIds(und)
+    assert(ids.nonEmpty && ids.subsetOf(persistentIds),
+      s"the entry should pin its blocks: $ids")
+    val readOnly = (1 to Fixpoints.MaxDirs)
+      .map(i => copyOfSf0(s"fixpoints_read_bound_$i"))
+    readOnly.foreach(Tables.t(spark, _, "region"))
+    val left = ids.intersect(persistentIds)
+    assert(left.isEmpty, s"evicted dir still pins rdds ${left.toSeq.sorted}")
+    readOnly.foreach(Fixpoints.release(spark, _))
+  }
+
+  test("a stream drain's session clone never enters the working sets") {
+    // each q_stream_decontaminate micro-batch runs in a clone of the
+    // caller's session; if the clone entered the registry, MaxDirs + 1
+    // drains would evict the caller's own dir
+    val und = ops.Insights.undirectedLinkEdges(spark, sf0)
+    (0 to Fixpoints.MaxDirs).foreach(_ =>
+      q("q_stream_decontaminate").collect())
+    val hot = ops.Insights.undirectedLinkEdges(spark, sf0)
+    assert(hot eq und, "sf0's entry was released by the drains")
   }
 
   test("a second warmAll on the same dir launches no Spark job") {

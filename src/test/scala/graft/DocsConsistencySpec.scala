@@ -16,6 +16,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *     measured 10× evidence, not an argument.
   *  3. Only `Tables.session` builds a SparkSession, so every
   *     program-owned session is configured before it can compile.
+  *  4. Only `Fixpoints` keeps state per session: no collection or
+  *     `var` in `src/main` is typed on SparkSession elsewhere, so a
+  *     new per-session memo fails here instead of starting a scope
+  *     that `Fixpoints.release` and its bound never free.
   *
   * Pure file/registry checks — no SparkSession, runs in milliseconds.
   */
@@ -85,27 +89,46 @@ class DocsConsistencySpec extends AnyFunSuite {
         "graft.ScaleSmoke) and record the 10x ratio in SCALE.md.")
   }
 
+  private def scalaFiles(root: String): List[String] = {
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+    try {
+      import scala.jdk.CollectionConverters._
+      walk.iterator().asScala.map(_.toString)
+        .filter(_.endsWith(".scala")).toList
+    } finally walk.close()
+  }
+
+  // code only: scaladoc and line comments may name what is banned
+  private def codeMatches(path: String, re: scala.util.matching.Regex)
+      : Boolean =
+    read(path).linesIterator.map(_.trim)
+      .filterNot(l => l.startsWith("*") || l.startsWith("/*") ||
+        l.startsWith("//"))
+      .exists(l => re.findFirstIn(l).isDefined)
+
   test("only Tables.session builds a SparkSession") {
     val builder = """SparkSession\s*\.\s*builder\s*\(""".r
-    val files = {
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src"))
-      try {
-        import scala.jdk.CollectionConverters._
-        walk.iterator().asScala.map(_.toString)
-          .filter(_.endsWith(".scala")).toList
-      } finally walk.close()
-    }
-    // code only: scaladoc and line comments may name the builder
-    def calls(path: String): Boolean =
-      read(path).linesIterator.map(_.trim)
-        .filterNot(l => l.startsWith("*") || l.startsWith("/*") ||
-          l.startsWith("//"))
-        .exists(l => builder.findFirstIn(l).isDefined)
+    val files = scalaFiles("src")
     val registry = "src/main/scala/graft/Registry.scala"
-    val builders = files.filter(calls).sorted
+    val builders = files.filter(codeMatches(_, builder)).sorted
     assert(files.contains(registry), s"no $registry")
     assert(builders == Seq(registry),
       "sessions built outside Tables.session: " +
         builders.filterNot(_ == registry).mkString(", "))
+  }
+
+  test("only Fixpoints keeps a collection or var typed on SparkSession") {
+    // `TrieMap[(SparkSession`, `Option[(SparkSession`, `Set[SparkSession`,
+    // `var x: Option[...SparkSession...]`: each is a per-session scope
+    val perSession =
+      """[A-Za-z]\[\(?SparkSession\b|\bvar\s+\w+\s*:[^=]*SparkSession""".r
+    val scope = "src/main/scala/graft/Fixpoints.scala"
+    val files = scalaFiles("src/main")
+    assert(files.contains(scope), s"no $scope")
+    val holders = files.filter(_ != scope)
+      .filter(codeMatches(_, perSession)).sorted
+    assert(holders.isEmpty,
+      "per-session state outside Fixpoints (make it an entry of the " +
+        "(session, dir) working set): " + holders.mkString(", "))
   }
 }

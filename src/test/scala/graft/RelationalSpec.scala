@@ -334,8 +334,9 @@ class RelationalSpec extends SparkSuite {
   }
 
   test("q_join_bucketed reads the dir it is asked for, dir after dir") {
-    // the bucketed tables have fixed names: a second dir must rebuild
-    // them, and coming back to the first must rebuild them again
+    // each dir's bucketed tables carry that dir in their names: a
+    // second dir builds its own, and coming back to the first reads
+    // the first dir's again
     val subset = fixtureDir("bucketed_subset")(
       "orders" -> Tables.t(spark, sf0, "orders")
         .filter(col("o_orderkey") % 3 === 0),
@@ -358,5 +359,23 @@ class RelationalSpec extends SparkSuite {
       assert(got.size === want.size, s"row count on $dir")
       assert(got === want, s"rows on $dir")
     }
+  }
+
+  test("q_join_bucketed leaves its caller's session confs as they were") {
+    // a fresh session, so no earlier query's setting can hide a change;
+    // a dir of its own, because bucket table names are per dir
+    val dir = fixtureDir("bucketed_confs")(
+      "orders" -> Tables.t(spark, sf0, "orders"),
+      "lineitem" -> Tables.t(spark, sf0, "lineitem"))
+    val s = spark.newSession()
+    Tables.configure(s)
+    val before = s.conf.getAll
+    try SparkEntry.queries("q_join_bucketed")(s, dir).collect()
+    finally Fixpoints.release(s, dir)
+    val after = s.conf.getAll
+    val moved = (before.keySet ++ after.keySet)
+      .filter(k => before.get(k) != after.get(k))
+    assert(moved.isEmpty, "confs changed: " + moved.toSeq.sorted
+      .map(k => s"$k ${before.get(k)} -> ${after.get(k)}").mkString(", "))
   }
 }
