@@ -261,8 +261,8 @@ object Fixpoints {
         Causal.logregWeights(s, d)
       },
       step("bigram models") { (s, d) =>
-        Corpus.bigramLqShared(s, d) // builds docBigrams and fullModel
-        Corpus.genScore(s, d)
+        Corpus.bigramLqShared(s, d) // builds the bigram counts
+        Corpus.genScore(s, d) // builds docBigrams and fullModel
         Corpus.dsirLrFull(s, d); Corpus.dsirLrTrain(s, d) // dsirDocBuckets
       },
       step("mixture models")(Doremi.ownScore), // builds sourceModel

@@ -274,13 +274,19 @@ survivors, examined and deliberately kept:
       "three hash equi-joins against dedup/DSIR stage tables, flags " +
       "scan-local, ONE source-keyed aggregate - no window, no " +
       "all-pairs anything"),
-    "q_text_perplexity" -> ("conditional-LM gate: model tables are " +
-      "vocab²-bounded and join WITHOUT broadcast hints (stats pick); " +
-      "tertile cuts from ONE percentile aggregate broadcast back — " +
-      "docs bucket scan-local, no Window operator anywhere"),
-    "q_quality_classify" -> ("distilled NB quality filter: 2-class " +
-      "model + likelihood table broadcast; scoring is one explode + " +
-      "one (doc, class) keyed aggregate — corpus-linear, no window"),
+    "q_text_perplexity" -> ("conditional-LM gate: the corpus bigram " +
+      "rows (zipped slices, no lambda) join the vocab²-bounded model " +
+      "WITHOUT broadcast hints (stats pick) and sum per doc in ONE " +
+      "aggregate, with no per-doc bigram multiset; the tertile cuts " +
+      "read that aggregate's exchange again (ReusedExchange) and " +
+      "broadcast back — docs bucket scan-local, no Window operator " +
+      "anywhere"),
+    "q_quality_classify" -> ("distilled NB quality filter, served " +
+      "from its fixpoint (the plan is that checkpoint's scan). The " +
+      "build reads the corpus twice: the train fold's per-term class " +
+      "count grid, then every doc's tokens in ONE left join to the " +
+      "signed per-term delta (a projection of the grid) and ONE " +
+      "per-doc aggregate — no class cross join, no window"),
     "q_mix_dsir_sample" -> ("Gumbel-top-k resampling: the 64-survivor " +
       "draw is TakeOrderedAndProject (map-side k, no global sort); " +
       "the integer rank is a broadcast predecessor count over 64 rows"),

@@ -15,6 +15,17 @@ object Corpus {
   private def docs(s: SparkSession, d: String) =
     Tables.t(s, d, "documents")
 
+  /** Adjacent-token pairs of the token array `ws`, as an array of
+    * (w1, w2) structs: the lists before and after one shift, zipped.
+    * Both slices and the zip are codegen'd, where the element-wise
+    * `transform(sequence(1, size(ws) - 1), i -> struct(..))` lambda
+    * runs interpreted per row; the pairs are the same. Fewer than two
+    * tokens give no pair, NULL gives NULL. */
+  private[graft] def bigramPairs(ws: Column): Column = {
+    val n = greatest(size(ws) - 1, lit(0))
+    arrays_zip(slice(ws, lit(1), n).as("w1"), slice(ws, lit(2), n).as("w2"))
+  }
+
   /** Per-domain document cap (q_domain_cap): keep at most k docs per
     * source — the anti-boilerplate step crawls apply so one mirror
     * farm can't dominate the mix. Expressed as a rank-filter so
@@ -58,7 +69,7 @@ object Corpus {
           size(col("ws")).as("n_words"),
           round(length(translate(col("text"), " ", "")) / size(col("ws")),
             6).as("mean_wlen"),
-          round(size(filter(col("ws"), w => w.rlike("^[a-z]+$"))) /
+          round(size(filter(col("ws"), w => w.rlike("^[a-z]+\\z"))) /
             size(col("ws")), 6).as("alpha_frac"),
           size(filter(col("ws"), w => w.isin("the", "a")))
             .as("n_stop"))
@@ -99,11 +110,7 @@ object Corpus {
       val cnt = docs(s, d)
         .select(split(col("text"), " ").as("ws"))
         .filter(size(col("ws")) >= 2)
-        .select(explode(expr(
-          """transform(sequence(1, size(ws) - 1),
-                       i -> struct(element_at(ws, i) AS w1,
-                                   element_at(ws, i + 1) AS w2))"""))
-          .as("b"))
+        .select(explode(bigramPairs(col("ws"))).as("b"))
         .select(col("b.w1").as("w1"), col("b.w2").as("w2"))
         .groupBy(col("w1"), col("w2"))
         .agg(count(lit(1)).as("n"))
@@ -540,24 +547,19 @@ object Corpus {
         split(col("text"), " ").as("ws"))
       .filter(size(col("ws")) >= 2)
       .select(col("doc_id"), col("source"),
-        explode(expr(
-          """transform(sequence(1, size(ws) - 1),
-                       i -> struct(element_at(ws, i) AS w1,
-                                   element_at(ws, i + 1) AS w2))"""))
-          .as("b"))
+        explode(bigramPairs(col("ws"))).as("b"))
       .select(col("doc_id"), col("source"),
         col("b.w1").as("w1"), col("b.w2").as("w2"))
 
   /** Full-corpus per-doc bigram multiset (doc_id, source, w1, w2, c) —
-    * the shared front of the whole bigram-model family: before round 12
-    * six batch consumers (q_text_perplexity, q_text_contrast,
+    * the shared front of the per-doc bigram consumers (q_text_contrast,
     * q_text_novelty, q_mix_curriculum, q_mix_doremi,
-    * q_mix_doremi_rounds) each re-ran the split + explode + group over
-    * the corpus. Persisted ONCE per (session, dir). Rows are unique on
-    * (doc_id, source, w1, w2), so `.select(...)` of the key columns IS
-    * the distinct bigram-per-doc list q_text_novelty needs. O(corpus
-    * tokens) rows — a distributed persist, never collected or
-    * broadcast. */
+    * q_mix_doremi_rounds), which each re-ran the split + explode +
+    * group over the corpus before it. Persisted ONCE per (session,
+    * dir). Rows are unique on (doc_id, source, w1, w2), so
+    * `.select(...)` of the key columns IS the distinct bigram-per-doc
+    * list q_text_novelty needs. O(corpus tokens) rows — a distributed
+    * persist, never collected or broadcast. */
   private[graft] def docBigrams(s: SparkSession, d: String): DataFrame =
     Fixpoints.cacheOnce(s, d, "docbigrams") {
       bigramRows(Tables.t(s, d, "documents"))
@@ -565,43 +567,54 @@ object Corpus {
         .agg(count(lit(1)).as("c"))
     }
 
+  /** Full-corpus bigram counts cnt(w1, w2, n), persisted once per
+    * (session, dir): one map-side-combined count of the corpus bigram
+    * rows, vocab²-bounded after the combine, so the model never builds
+    * the corpus-sized [[docBigrams]]. */
+  private def bigramCounts(s: SparkSession, d: String): DataFrame =
+    Fixpoints.cacheOnce(s, d, "cntg") {
+      bigramRows(docs(s, d)).groupBy(col("w1"), col("w2"))
+        .agg(count(lit(1)).as("n"))
+    }
+
+  /** Per-history totals tot(w1, t) of a bigram count table. */
+  private def historyTotals(cnt: DataFrame): DataFrame =
+    cnt.groupBy(col("w1")).agg(sum(col("n")).as("t"))
+
+  /** One-row vocabulary size voc(v) of the full-corpus count table:
+    * every token of a doc with at least 2 tokens sits in one of its
+    * bigrams, so the vocabulary is the distinct words of the count
+    * table, with no second split + explode of the corpus. */
+  private def countVocab(cnt: DataFrame): DataFrame =
+    cnt.select(col("w1").as("token"))
+      .union(cnt.select(col("w2").as("token")))
+      .agg(countDistinct(col("token")).as("v"))
+
   /** Full-corpus add-1 model tables, persisted once per (session, dir):
-    * bigram counts cnt(w1, w2, n) — derived from [[docBigrams]] by a
-    * vocab²-bounded rollup (Σ per-doc c == corpus count) — per-history
-    * totals tot(w1, t), and the one-row vocabulary size voc(v). Shared
-    * by q_mix_doremi, q_mix_doremi_rounds, q_text_contrast (general
-    * side) and [[bigramLqShared]]. */
+    * [[bigramCounts]], its per-history totals and its one-row
+    * vocabulary size. Shared by q_mix_doremi, q_mix_doremi_rounds and
+    * q_text_contrast (general side). */
   private[graft] def fullModel(
       s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) = {
-    val cnt = Fixpoints.cacheOnce(s, d, "cntg") {
-      docBigrams(s, d).groupBy(col("w1"), col("w2"))
-        .agg(sum(col("c")).as("n"))
-    }
-    val tot = Fixpoints.cacheOnce(s, d, "totg") {
-      cnt.groupBy(col("w1")).agg(sum(col("n")).as("t"))
-    }
-    // every token of a doc with at least 2 tokens sits in one of its
-    // bigrams, so the vocabulary is the distinct words of the count
-    // table: no second split + explode of the corpus
-    val voc = Fixpoints.cacheOnce(s, d, "vocg") {
-      cnt.select(col("w1").as("token"))
-        .union(cnt.select(col("w2").as("token")))
-        .agg(countDistinct(col("token")).as("v"))
-    }
-    (cnt, tot, voc)
+    val cnt = bigramCounts(s, d)
+    (cnt, Fixpoints.cacheOnce(s, d, "totg")(historyTotals(cnt)),
+      Fixpoints.cacheOnce(s, d, "vocg")(countVocab(cnt)))
   }
 
   /** Full-corpus add-1-smoothed conditional bigram model, quantized:
     * (w1, w2, lqi = floor(-log2 P(w2|w1) * 1e6 + 0.5)), derived from
-    * the shared [[fullModel]] and persisted once — q_text_perplexity
-    * and q_mix_curriculum join the identical table. Vocabulary²-bounded
+    * [[bigramCounts]] and persisted once — q_text_perplexity and
+    * q_mix_curriculum join the identical table. The totals and the
+    * vocabulary size are derived in the same plan, not read from
+    * [[fullModel]]'s stores: their count and checkpoint jobs would
+    * only add to these consumers' cold path. Vocabulary²-bounded
     * (Heaps-sublinear in the corpus), so consumers join it WITHOUT a
     * broadcast hint and let size statistics pick the strategy. */
   private[graft] def bigramLqShared(s: SparkSession, d: String): DataFrame =
     Fixpoints.cacheOnce(s, d, "bigramlq") {
-      val (cnt, tot, voc) = fullModel(s, d)
-      cnt.join(tot, Seq("w1"))
-        .crossJoin(broadcast(voc))
+      val cnt = bigramCounts(s, d)
+      cnt.join(historyTotals(cnt), Seq("w1"))
+        .crossJoin(broadcast(countVocab(cnt)))
         .select(col("w1"), col("w2"), floor(-log(
             (col("n") + 1).cast("double") / (col("t") + col("v")))
           / log(lit(2.0)) * 1000000 + 0.5).cast("long").as("lqi"))
@@ -632,14 +645,16 @@ object Corpus {
   val qTextPerplexity = Q(
     "q_text_perplexity",
     (s, d) => {
-      // shared persisted fixpoints: per-doc bigram multiset + the
-      // full-corpus quantized model (also joined by q_mix_curriculum)
-      val db = docBigrams(s, d)
-      val lq = bigramLqShared(s, d)
-      val m = db.join(lq, Seq("w1", "w2"))
+      // the corpus bigram rows against the shared full-corpus
+      // quantized model (also joined by q_mix_curriculum), summed per
+      // doc in one aggregate: no per-doc multiset is built for it.
+      // sum_i comes first, as in `mi`, so the cuts branch (which needs
+      // only mi) plans the same partial aggregate and reuses its
+      // exchange: the corpus is read once
+      val m = bigramRows(docs(s, d)).join(bigramLqShared(s, d),
+          Seq("w1", "w2"))
         .groupBy(col("doc_id"), col("source"))
-        .agg(sum(col("c")).as("nb"),
-          sum(col("c") * col("lqi")).as("sum_i"))
+        .agg(sum(col("lqi")).as("sum_i"), count(lit(1)).as("nb"))
         .withColumn("mi",
           floor(col("sum_i") / col("nb")).cast("long"))
       val cuts = m.agg(expr(
@@ -728,7 +743,7 @@ object Corpus {
           (size(col("ws")).between(50, 100000) &&
             round(length(translate(col("text"), " ", "")) /
               size(col("ws")), 6).between(3.0, 10.0) &&
-            round(size(filter(col("ws"), w => w.rlike("^[a-z]+$"))) /
+            round(size(filter(col("ws"), w => w.rlike("^[a-z]+\\z"))) /
               size(col("ws")), 6) >= 0.8 &&
             size(filter(col("ws"), w => w.isin("the", "a"))) >= 2)
             .cast("long").as("passes"))
@@ -875,7 +890,7 @@ object Corpus {
       : (DataFrame, DataFrame, DataFrame) = {
     val cnt = bigramRows(docsDf).groupBy(col("w1"), col("w2"))
       .agg(count(lit(1)).as("n"))
-    val tot = cnt.groupBy(col("w1")).agg(sum(col("n")).as("t"))
+    val tot = historyTotals(cnt)
     val voc = docsDf
       .select(split(col("text"), " ").as("ws"))
       .filter(size(col("ws")) >= 2)
@@ -1242,11 +1257,7 @@ object Corpus {
       val cnt = docs(s, d)
         .select(split(col("text"), " ").as("ws"))
         .filter(size(col("ws")) >= 2)
-        .select(explode(expr(
-          """transform(sequence(1, size(ws) - 1),
-                       i -> struct(element_at(ws, i) AS w1,
-                                   element_at(ws, i + 1) AS w2))"""))
-          .as("b"))
+        .select(explode(bigramPairs(col("ws"))).as("b"))
         .select(col("b.w1").as("w1"), col("b.w2").as("w2"))
         .groupBy(col("w1"), col("w2"))
         .agg(count(lit(1)).as("n"))

@@ -12,9 +12,13 @@ import org.apache.spark.sql.functions._
   * registry ids, and oracles are unchanged. */
 object GraphScores {
 
-  /** Endpoint-degree table of an edge list — one shuffle. */
+  /** Endpoint-degree table of an edge list — one read of the edges
+    * and one shuffle. Both endpoints come from the same row: a union
+    * of two projections made two tasks of one stage race for each
+    * block of a lazily checkpointed round (`Block rdd_N_0 already
+    * exists` from the peel rounds). */
   private def degrees(e: DataFrame): DataFrame =
-    e.select(col("a").as("v")).unionAll(e.select(col("b").as("v")))
+    e.select(explode(array(col("a"), col("b"))).as("v"))
       .groupBy(col("v")).agg(count(lit(1)).as("deg"))
 
   /** Four deg ≥ k peel rounds over the shared link graph, memoized per
@@ -656,9 +660,12 @@ object GraphScores {
       // frontier rounds probe this table every round, and the raw
       // checkpoint RDD reads faster in a loop than re-decoding the
       // columnar cache each round (1.5 s -> 2.3 s measured when the
-      // loop probed the InMemoryRelation directly).
+      // loop probed the InMemoryRelation directly). Eagerly, as each
+      // round below: a lazy block read by two branches of one stage
+      // (the union here, the union and the join of a round) had two
+      // tasks race to store it (`Block rdd_N_0 already exists`).
       val dir0 = graft.ops.Insights.directedDistinctEdges(s, d)
-        .localCheckpoint(false)
+        .localCheckpoint()
       // BOTH BFS directions walk in ONE loop over a direction-tagged
       // step relation (dir 0 = follow src→dst, dir 1 = reversed):
       // 6 checkpointed rounds instead of 12, same frontier semantics.
@@ -670,7 +677,7 @@ object GraphScores {
       val pivot = docs.agg(min(col("doc_id")).as("v"))
       var visited = pivot
         .select(explode(array(lit(0L), lit(1L))).as("dir"), col("v"))
-        .localCheckpoint(false)
+        .localCheckpoint()
       for (_ <- 1 to 6) {
         val next = steps
           .join(visited.withColumnRenamed("v", "sv")
@@ -678,7 +685,7 @@ object GraphScores {
             col("from") === col("sv") && col("dir") === col("sdir"))
           .select(col("dir"), col("to").as("v"))
         visited = visited.unionAll(next).distinct()
-          .localCheckpoint(false)
+          .localCheckpoint()
       }
       val fwd = visited.filter(col("dir") === 0L).select(col("v"))
       val bwd = visited.filter(col("dir") === 1L).select(col("v"))

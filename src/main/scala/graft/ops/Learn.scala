@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.{Fixpoints, Q, Tables}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Learned-model operators expressed as pure dataflow: a multinomial
@@ -272,12 +272,14 @@ object Learn {
     * (the decade length bucket `lb<floor(n_words/10)>`) — the standard
     * fastText-classifier trick that lets a bag-of-words model express
     * the length rule a multinomial NB is otherwise blind to. Scale
-    * shape: the per-class stats (2 rows) broadcast by hint; the token
-    * likelihood table (2×vocabulary rows, unbounded on raw web text)
-    * joins UN-hinted — tokens hash-partition to the model terms, AQE
-    * broadcasting only by measured size. Corpus-side work is one
-    * explode + hash aggregate shuffled on (doc, class) — corpus-linear,
-    * no windows. */
+    * shape: two corpus passes. The training fold explodes once into
+    * a per-term class-count grid; the per-class constants (one driver
+    * row) fold both classes into one signed per-term delta table
+    * (vocabulary rows, unbounded on raw web text), which the scoring
+    * pass joins UN-hinted — tokens hash-partition to the model
+    * terms, AQE broadcasting only by measured size. Scoring is one
+    * explode, one left join and one per-doc aggregate: no class cross
+    * join, no windows, corpus-linear. */
   val qQualityClassify = Q(
     "q_quality_classify",
     // Served from the shared verdict store: the memoized plan IS this
@@ -294,78 +296,90 @@ object Learn {
 
   private def qualityClassifyBuild(sp: SparkSession, dir: String)
       : org.apache.spark.sql.DataFrame = {
-    {
-      implicit val s: SparkSession = sp
-      implicit val d: String = dir
-      val base = t("documents")
-        .select(col("doc_id"), col("text"),
-          split(col("text"), " ").as("ws"))
-        .select(col("doc_id"), col("ws"),
-          (size(col("ws")).between(50, 100000) &&
-            round(length(translate(col("text"), " ", "")) /
-              size(col("ws")), 6).between(3.0, 10.0) &&
-            round(size(filter(col("ws"), w => w.rlike("^[a-z]+$"))) /
-              size(col("ws")), 6) >= 0.8 &&
-            size(filter(col("ws"), w => w.isin("the", "a"))) >= 2)
-            .cast("int").as("label"))
-        .select(col("doc_id"), col("label"),
-          concat(col("ws"), array(concat(lit("lb"),
+    implicit val s: SparkSession = sp
+    implicit val d: String = dir
+    // a NULL text carries one NULL token, as the oracle's
+    // list_append(NULL, NULL) does: the doc is scored on that one
+    // unseen token and emitted with a NULL label
+    val base = t("documents")
+      .select(col("doc_id"), col("text"),
+        split(col("text"), " ").as("ws"))
+      .select(col("doc_id"), col("ws"),
+        (size(col("ws")).between(50, 100000) &&
+          round(length(translate(col("text"), " ", "")) /
+            size(col("ws")), 6).between(3.0, 10.0) &&
+          round(size(filter(col("ws"), w => w.rlike("^[a-z]+\\z"))) /
+            size(col("ws")), 6) >= 0.8 &&
+          size(filter(col("ws"), w => w.isin("the", "a"))) >= 2)
+          .cast("int").as("label"))
+      .select(col("doc_id"), col("label"),
+        concat(coalesce(col("ws"), array().cast("array<string>")),
+          array(concat(lit("lb"),
             floor(size(col("ws")) / lit(10)).cast("long")
               .cast("string")))).as("ws"))
-      val train = base.filter(col("doc_id") % 5 =!= 0)
-      // ONE explode of the training fold: the (term, label) count grid
-      // is the sufficient statistic for the vocabulary size, the
-      // per-label token totals and the log-likelihoods, and the
-      // per-label doc counts give the prior and (summed) its
-      // denominator. Both grids are tiny; checkpointing them stops each
-      // consumer from re-deriving `base` (split, translate, the rlike
-      // filter lambda) and re-exploding it, as q_ml_naive_bayes does.
-      val counts = train
-        .select(col("label"), explode(col("ws")).as("term"))
-        .groupBy(col("term").as("mt"), col("label").as("ll"))
-        .agg(count(lit(1)).as("c"))
-        .localCheckpoint()
-      val vocab = counts.agg(countDistinct(col("mt")).as("v"))
-      val labelDocs = train.groupBy(col("label").as("dl"))
-        .agg(count(lit(1)).as("docs_l"))
-        .localCheckpoint()
-      val nDocs = labelDocs.agg(sum(col("docs_l")).as("n_docs"))
-      val cls = counts.groupBy(col("ll").as("ml"))
-        .agg(sum(col("c")).as("t_l"))
-        .join(labelDocs, col("ml") === col("dl"))
-        .crossJoin(broadcast(vocab))
-        .crossJoin(broadcast(nDocs))
-        .select(col("ml"), col("t_l"), col("v"),
-          floor(log(col("docs_l").cast("double") / col("n_docs")) *
-            1000000 + 0.5).cast("long").as("prior_i"),
-          floor(log(lit(1.0) / (col("t_l") + col("v"))) * 1000000 + 0.5)
-            .cast("long").as("unseen_i"))
-      val llh = counts
-        .join(broadcast(cls), col("ll") === col("ml"))
-        .select(col("mt"), col("ll"),
-          floor(log((col("c") + 1).cast("double") /
-            (col("t_l") + col("v"))) * 1000000 + 0.5)
-            .cast("long").as("llh_i"))
-      val scored = base
-        .select(col("doc_id"), col("label"), explode(col("ws")).as("term"))
-        .crossJoin(broadcast(cls.select(col("ml"), col("prior_i"),
-          col("unseen_i"))))
-        .join(llh,
-          col("term") === col("mt") && col("ml") === col("ll"), "left")
-        .select(col("doc_id"), col("label"), col("ml"), col("prior_i"),
-          coalesce(col("llh_i"), col("unseen_i")).as("si"))
-        .groupBy(col("doc_id"), col("label"), col("ml"), col("prior_i"))
-        .agg(sum(col("si")).as("ts"))
-        .select(col("doc_id"), col("label"),
-          when(col("ml") === 1, col("prior_i") + col("ts"))
-            .otherwise(-(col("prior_i") + col("ts"))).as("signed"))
-      scored
-        .groupBy(col("doc_id"), col("label"))
-        .agg(sum(col("signed")).as("lo_i"))
-        .select(col("doc_id"), col("label").as("gopher_pass"),
-          (col("lo_i") > 0).cast("int").as("nb_keep"),
-          round(col("lo_i") / lit(1e6), 6).as("log_odds"))
+    // Pass 1, the training fold: one row per term with its count in
+    // each class (label is 0, 1 or NULL). The length pseudo-token
+    // closes every bag, so the last-position counts per class are the
+    // class doc counts, and `d` counts every train doc (a NULL text's
+    // lone NULL token too, as the oracle's prior denominator does).
+    val last = col("pos") === col("n") - 1
+    // The per-class constants ride on the grid's own job as observed
+    // metrics: one driver row, no second job. Every quantized log is a
+    // Spark expression (StrictMath.log), as in the oracle replay.
+    def q6(x: Column): Column = floor(x * 1000000 + 0.5).cast("long")
+    val v = count(col("term"))
+    val constants = Seq(0, 1).flatMap { c =>
+      val (dc, tv) = (sum(col(s"d$c")), sum(col(s"c$c")) + v)
+      Seq(dc.as(s"d$c"), tv.as(s"tv$c"),
+        when(dc > 0, q6(log(dc.cast("double") / sum(col("d")))))
+          .as(s"prior$c"),
+        when(dc > 0, q6(log(lit(1.0) / tv))).as(s"unseen$c"))
     }
+    val observed = org.apache.spark.sql.Observation()
+    val grid = base.filter(col("doc_id") % 5 =!= 0)
+      .select(col("label"), size(col("ws")).as("n"),
+        posexplode(col("ws")).as(Seq("pos", "term")))
+      .groupBy(col("term"))
+      .agg(count(when(col("label") === 0, 1)).as("c0"),
+        count(when(col("label") === 1, 1)).as("c1"),
+        count(when(col("label") === 0 && last, 1)).as("d0"),
+        count(when(col("label") === 1 && last, 1)).as("d1"),
+        count(when(last, 1)).as("d"))
+      .observe(observed, constants.head, constants.tail: _*)
+      .localCheckpoint()
+    val metrics = observed.get
+    def metric(name: String): Option[Long] =
+      metrics.get(name).flatMap(Option(_)).map(_.asInstanceOf[Long])
+    // (class, sign, t_c + v, prior_c, unseen_c) of each class with a
+    // train doc; the pass class counts positive
+    val cls = Seq(1 -> 1L, 0 -> -1L).collect {
+      case (c, sign) if metric(s"d$c").exists(_ > 0) =>
+        (c, sign, metric(s"tv$c").get, metric(s"prior$c").get,
+          metric(s"unseen$c").get)
+    }
+    // lo = Σ_c sign_c·(prior_c + Σ_tok coalesce(llh_c, unseen_c)) folds
+    // into per-doc constants and one signed per-term delta
+    // e = Σ_c sign_c·(llh_c − unseen_c), a projection of the grid
+    val k0 = cls.map { case (_, sign, _, p, _) => sign * p }.sum
+    val k1 = cls.map { case (_, sign, _, _, u) => sign * u }.sum
+    val e = grid.filter(col("term").isNotNull)
+      .select(col("term").as("mt"), cls.map { case (c, sign, tv, _, u) =>
+        val cnt = col(s"c$c")
+        when(cnt > 0, lit(sign) *
+          (q6(log((cnt + 1).cast("double") / tv)) - u)).otherwise(0L)
+      }.reduceOption(_ + _).getOrElse(lit(0L)).as("e"))
+    // Pass 2, every doc: one join of its tokens to e and one per-doc
+    // aggregate. No class (an empty train fold) scores nothing, as
+    // the cross join with the empty class table does in the oracle.
+    base.filter(lit(cls.nonEmpty))
+      .select(col("doc_id"), col("label"), explode(col("ws")).as("term"))
+      .join(e, col("term") === col("mt"), "left")
+      .groupBy(col("doc_id"), col("label"))
+      .agg((lit(k0) + count(lit(1)) * k1 +
+        coalesce(sum(col("e")), lit(0L))).as("lo_i"))
+      .select(col("doc_id"), col("label").as("gopher_pass"),
+        (col("lo_i") > 0).cast("int").as("nb_keep"),
+        round(col("lo_i") / lit(1e6), 6).as("log_odds"))
   }
 
   private lazy val qualityClassifyOracle: Option[String] =

@@ -668,10 +668,12 @@ object Pipeline {
     (s, d) => {
       val docs = Tables.t(s, d, "documents")
       val n = docs.agg(count(lit(1)).as("n_nodes"))
-      // lazily checkpointed: the teleport join re-references nodes
-      // every iteration (2 documents scans per round un-cut)
+      // checkpointed: the teleport join re-references nodes every
+      // iteration (2 documents scans per round un-cut). Eagerly: the
+      // rounds' stages read it concurrently, and a lazy block had two
+      // tasks race to store it (`Block rdd_N_0 already exists`)
       val nodes = docs.select(col("doc_id")).crossJoin(broadcast(n))
-        .localCheckpoint(false)
+        .localCheckpoint()
       // ONE shared persisted generator (Insights) — an inline edge
       // build re-enters every iteration's lineage (20 logical copies
       // of the documents scan in the 3-round unroll)
@@ -860,9 +862,9 @@ object Pipeline {
     (s, d) => {
       val docs = Tables.t(s, d, "documents")
       val n = docs.agg(count(lit(1)).as("n_nodes"))
-      // lazily checkpointed — the q_graph_pagerank note
+      // eagerly checkpointed — the q_graph_pagerank note
       val nodes = docs.select(col("doc_id")).crossJoin(broadcast(n))
-        .localCheckpoint(false)
+        .localCheckpoint()
       // shared persisted generator — the q_graph_pagerank note
       val edgesN = graft.ops.Insights.directedEdgesOutdeg(s, d)
       val seed = when(col("doc_id") < 8L, lit(1.0) / 8).otherwise(0.0)

@@ -13,15 +13,19 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * equivalent); right-referencing conjuncts stay put (right columns are
   * null-extended, so pushing them would change which rows match). */
 object AsofJoinFilterPushdown extends Rule[LogicalPlan] with PredicateHelper {
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
-    case f @ Filter(cond, aj: AsofJoin) =>
-      val (leftOnly, rest) = splitConjunctivePredicates(cond)
-        .partition(p => p.deterministic &&
-          p.references.subsetOf(aj.left.outputSet))
-      if (leftOnly.isEmpty) f
-      else {
-        val pushed = aj.copy(left = Filter(leftOnly.reduce(And), aj.left))
-        rest.reduceOption(And).map(Filter(_, pushed)).getOrElse(pushed)
-      }
-  }
+  // Every session carries this rule, and almost no plan holds an
+  // AsofJoin: a read-only search skips the rewriting walk for those.
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    if (!plan.exists(_.isInstanceOf[AsofJoin])) plan
+    else plan.transform {
+      case f @ Filter(cond, aj: AsofJoin) =>
+        val (leftOnly, rest) = splitConjunctivePredicates(cond)
+          .partition(p => p.deterministic &&
+            p.references.subsetOf(aj.left.outputSet))
+        if (leftOnly.isEmpty) f
+        else {
+          val pushed = aj.copy(left = Filter(leftOnly.reduce(And), aj.left))
+          rest.reduceOption(And).map(Filter(_, pushed)).getOrElse(pushed)
+        }
+    }
 }

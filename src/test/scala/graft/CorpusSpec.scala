@@ -46,6 +46,54 @@ class CorpusSpec extends SparkSuite {
     assert(got === Map(0L -> 1, 1L -> 0, 2L -> 0, 3L -> 0), s"got $got")
   }
 
+  test("gopher rules: a word with a trailing newline is no lowercase " +
+    "word, as in a scalar replay") {
+    val texts = Seq(
+      // 58 of 60 words end in a newline: 2 of 60 are lowercase words
+      0L -> ("the a " + Seq.fill(58)("word\n").mkString(" ")),
+      // the same without the newlines passes every rule
+      1L -> ("the a " + Seq.fill(58)("word").mkString(" ")),
+      2L -> ("the a " + Seq.fill(58)("word\r").mkString(" ")))
+    val dir = fixtureDir("corpus_gopher_newline")("documents" ->
+      texts.map { case (id, t) => (id, t, "en", "s0") }
+        .toDF("doc_id", "text", "lang", "source")
+        .withColumn("n_chars", length(col("text")).cast("long")))
+    val got = q("q_text_gopher", dir).collect()
+      .map(r => r.getAs[Long]("doc_id") ->
+        (r.getAs[Double]("alpha_frac"), r.getAs[Int]("passes"))).toMap
+    val want = texts.map { case (id, t) =>
+      val ws = t.split(" ", -1)
+      val alpha = BigDecimal(ws.count(_.matches("[a-z]+")).toDouble /
+        ws.length).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+      id -> (alpha, if (alpha >= 0.8) 1 else 0)
+    }.toMap
+    assert(got === want)
+    assert(got(0L)._2 === 0 && got(1L)._2 === 1)
+  }
+
+  test("bigram pairs: zipped slices give the lambda form's rows") {
+    val texts = Seq(0L -> "", 1L -> "one", 2L -> "a  b", 3L -> "a b ",
+      4L -> "héllo wörld 日本 語 😀 x", 5L -> null,
+      6L -> "the cat sat on the mat")
+    val ws = texts.toDF("id", "text")
+      .select(col("id"), split(col("text"), " ").as("ws"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("id"), col("b.w1"), col("b.w2")).collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq
+        .sorted
+    val zipped = rows(ws.select(col("id"),
+      explode(graft.ops.Corpus.bigramPairs(col("ws"))).as("b")))
+    // the lambda form needs two tokens: element_at(ws, 0) throws
+    val lambda = rows(ws.filter(size(col("ws")) >= 2)
+      .select(col("id"), explode(expr(
+        """transform(sequence(1, size(ws) - 1),
+                     i -> struct(element_at(ws, i) AS w1,
+                                 element_at(ws, i + 1) AS w2))""")).as("b")))
+    assert(zipped === lambda)
+    assert(zipped.count(_._1 == 2L) === 2 && zipped.count(_._1 == 3L) === 2)
+    assert(zipped.count(_._1 == 4L) === 5)
+  }
+
   test("bigram LM: top continuation and probability match a scalar replay") {
     val rows = q("q_text_bigram_lm").collect()
     assert(rows.nonEmpty)
